@@ -2894,7 +2894,7 @@ def q_ann_recall(spark, sf_dir):
     path = _CACHE[_ck(spark, sf_dir, "ivf_disk:embeddings")]
     eng = SearchEngine(spark)
     eng.register(emb, TableSpec("emb_ann", ["vec_id"]))
-    eng.attach_ivf_index("emb_ann", "embedding", path)
+    eng.attach_index("emb_ann", "ivf", "embedding", path)
     parts = []
     for r in queries_df.select("vec_id", "embedding").collect():
         body = _json.dumps({"knn": {

@@ -153,9 +153,10 @@ class CassandraEsIndexEngine:
         """One maintenance pass: TTL sweep (60 s cadence in the reference),
         segment retention, purge of empty segments, optional compaction,
         and (with ``flush_postings_path``) a durable-index flush: every
-        postings index of the table checkpoints base+overlay to a new
-        bucketed on-disk generation (``SearchEngine.flush_postings``) —
-        ES's segment-flush analogue on the maintenance cadence.
+        index of the table checkpoints base+overlay to a new on-disk
+        generation under a committed manifest
+        (``SearchEngine.flush_indexes``) — ES's segment-flush analogue on
+        the maintenance cadence.
 
         The search view is refreshed afterwards — maintenance changes the
         store's content (TTL/retention) and its FILE SET (compaction

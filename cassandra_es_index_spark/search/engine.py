@@ -11,8 +11,10 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import re
 from dataclasses import dataclass
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,6 +24,9 @@ from pyspark.sql.window import Window
 from cassandra_es_index_spark.catalog import Catalog, TableSpec
 from cassandra_es_index_spark.docmodel import (
     DOC_ID, INDEXATION_FIELD, TTL_FIELD, build_documents,
+)
+from cassandra_es_index_spark.operators.similarity import (
+    _sq_dist, ivf_build, ivf_read, ivf_write,
 )
 from cassandra_es_index_spark.search import es_dsl, query_string
 from cassandra_es_index_spark.search.ast import (
@@ -36,6 +41,12 @@ from cassandra_es_index_spark.search.ast import (
 )
 from cassandra_es_index_spark.search.compile import CompileError, Compiler
 from cassandra_es_index_spark.search.options import QueryMetaData
+from cassandra_es_index_spark.search.positional import (
+    build_chunks, build_token_positions,
+)
+from cassandra_es_index_spark.search.postings import (
+    build_postings, read_postings, write_postings,
+)
 
 # Admin verbs dispatched before search (ref EsSecondaryIndex.java:101-103,
 # 441-472, 517-545).
@@ -163,6 +174,70 @@ def _geo_rows(docs: DataFrame, id_col: str, field: str,
                     lat.alias("lat"), lon.alias("lon")))
 
 
+def _ivf_rows(docs: DataFrame, id_col: str, field: str,
+              centroids: list) -> DataFrame:
+    """(corpus_id, cvec, cell) rows — each non-null vector assigned to
+    its nearest EXISTING centroid, the IVF insert path (argmin over
+    per-cell squared distances, pure Column expressions; no
+    re-clustering — ES HNSW inserts likewise graft into the built
+    graph)."""
+    vecs = (docs.select(F.col(id_col).alias("corpus_id"),
+                        F.col(field).cast("array<double>").alias("cvec"))
+                .where(F.col("cvec").isNotNull()))
+    dists = F.array(*[_sq_dist(F.col("cvec"), ct) for ct in centroids])
+    return vecs.withColumn(
+        "cell",
+        (F.array_position(dists, F.array_min(dists)) - 1).cast("int"))
+
+
+@dataclass(frozen=True)
+class IndexKind:
+    """One row of the index spec table. ``rows(docs, id_col, field,
+    params)`` builds the kind's rows (bulk build and mutation deltas
+    alike); ``key`` is the column a mutation batch retires rows on;
+    ``layout`` is the flush layout — ``"bucketed"`` by token (a catalog
+    table, bucket-pruned lookups), ``"partitioned"`` by IVF cell (probes
+    prune to their cells), else the column each generation is sorted on
+    within partitions (row-group min/max skipping); ``params`` names the
+    build parameters an entry must carry."""
+    rows: Callable[[DataFrame, str, str, dict], DataFrame]
+    key: str = "doc"
+    layout: str | None = None
+    params: tuple[str, ...] = ()
+
+
+# every index kind the registry serves, keyed by the registry's `kind`
+INDEX_KINDS: dict[str, IndexKind] = {
+    "postings": IndexKind(lambda d, i, f, p: build_postings(d, i, f),
+                          layout="bucketed"),
+    # positional: sorted on `tail`, the first-phrase-word filter's column
+    "positional": IndexKind(lambda d, i, f, p: build_chunks(d, i, f),
+                            layout="tail"),
+    "presence": IndexKind(lambda d, i, f, p: _presence_rows(d, i, f)),
+    "range": IndexKind(lambda d, i, f, p: _range_rows(d, i, f),
+                       layout="val"),
+    "span": IndexKind(lambda d, i, f, p: build_token_positions(d, i, f),
+                      layout="token"),
+    "geo": IndexKind(lambda d, i, f, p: _geo_rows(d, i, f, p["precision"]),
+                     layout="cell", params=("precision",)),
+    "ivf": IndexKind(lambda d, i, f, p: _ivf_rows(d, i, f, p["centroids"]),
+                     key="corpus_id", layout="partitioned",
+                     params=("centroids",)),
+}
+_FLUSH_BUCKETS = 64
+_MANIFEST = "_manifest.json"
+
+
+def _read_manifest(root: str) -> dict | None:
+    """The last committed flush of an index root, or None before the
+    first commit."""
+    try:
+        with open(os.path.join(root, _MANIFEST)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
 @dataclass(frozen=True)
 class PrefixAnchor:
     """A ``search_after`` anchor that compares only a PREFIX of the
@@ -174,6 +249,13 @@ class PrefixAnchor:
     ordering to match)."""
     values: tuple
     inclusive: bool = False
+
+
+class _IndexEntry(NamedTuple):
+    """One registry entry: the index's (live or PIT-pinned) state plus
+    its build parameters (geo ``precision``, IVF ``centroids``)."""
+    state: "PostingsState | _PinnedState"
+    params: dict
 
 
 class _PinnedState:
@@ -205,17 +287,20 @@ class PostingsState:
 
     ``view()`` resolves the three. After ``fold_every`` batches the
     overlay folds into a new cached base (the compaction analogue), which
-    bounds lookup-time overlay cost under a steady mutation stream."""
+    bounds lookup-time overlay cost under a steady mutation stream.
+    ``key`` is the id column rows are retired on (``doc``; IVF rows
+    carry ``corpus_id``)."""
 
     def __init__(self, base: DataFrame, fold_every: int = 16,
-                 cache_base: bool = True):
+                 cache_base: bool = True, key: str = "doc"):
         # disk-backed bases (attach/flush) stay UNcached so lookups keep
         # the bucketed table's bucket-pruned scan. They also never
         # AUTO-fold: folding materializes overlay+base into executor
         # cache, which for a durable index of arbitrary size is exactly
         # what the disk path avoids — their compaction is the next
-        # flush_postings/flush_indexes generation instead.
+        # flush_indexes generation instead.
         self.cache_base = cache_base
+        self.key = key
         self.base = base.cache() if cache_base else base
         self.delta: DataFrame | None = None
         self.dead: DataFrame | None = None
@@ -225,7 +310,7 @@ class PostingsState:
     def view(self) -> DataFrame:
         v = self.base
         if self.dead is not None:
-            v = v.join(F.broadcast(self.dead), on="doc", how="left_anti")
+            v = v.join(F.broadcast(self.dead), on=self.key, how="left_anti")
         if self.delta is not None:
             v = v.unionByName(self.delta)
         return v
@@ -237,14 +322,14 @@ class PostingsState:
         overlay) — the base is never read or written."""
         if touched_ids is None:
             return
-        touched = touched_ids.select("doc").distinct().cache()
+        touched = touched_ids.select(self.key).distinct().cache()
         touched.count()
         old_delta, old_dead = self.delta, self.dead
         dead = touched if old_dead is None else (
             old_dead.unionByName(touched).distinct())
         delta = None
         if old_delta is not None:
-            delta = old_delta.join(F.broadcast(touched), on="doc",
+            delta = old_delta.join(F.broadcast(touched), on=self.key,
                                    how="left_anti")
         if new_postings is not None:
             delta = new_postings if delta is None else \
@@ -291,26 +376,9 @@ class SearchEngine:
         self.spark = spark
         self.catalog = Catalog(spark)
         self._docs: dict[str, DataFrame] = {}
-        self._postings: dict[tuple[str, str], PostingsState] = {}
-        # positional (phrase) indexes — chunk postings per (table, field),
-        # maintained incrementally by the same PostingsState mechanism
-        self._positional: dict[tuple[str, str], PostingsState] = {}
-        # field-presence indexes — the doc-id set where a field is
-        # non-null; serves `_exists_` leaves without a corpus scan
-        self._presence: dict[tuple[str, str], PostingsState] = {}
-        # range indexes — (doc, val) per field; serves Range leaves
-        # without a corpus scan (ES's BKD-points analogue)
-        self._range: dict[tuple[str, str], PostingsState] = {}
-        # token-position (span) indexes — (doc, token, pos) per field,
-        # the scan path's position arrays materialized; serves SpanNear
-        # leaves without re-tokenizing the corpus
-        self._span: dict[tuple[str, str], PostingsState] = {}
-        # geo cell indexes — (doc, geohash cell) per geo_point field;
-        # serves geo_distance/geo_bounding_box as covering-cell
-        # equi-join + exact verify instead of a corpus scan
-        self._geo: dict[tuple[str, str], PostingsState] = {}
-        self._geo_prec: dict[tuple[str, str], int] = {}
-        self._flush_gen: dict[tuple[str, str], int] = {}
+        # the index registry: one entry per (kind, table, field), where
+        # `kind` names its row in INDEX_KINDS (build/retire/flush rules)
+        self._indexes: dict[tuple[str, str, str], _IndexEntry] = {}
         # J1 row-loading side per table: defaults to the registered base
         # DataFrame (the reference loads rows from Cassandra); the facade
         # overrides it after mutations so inserted documents — present in
@@ -336,11 +404,6 @@ class SearchEngine:
         self._pits: dict[str, dict] = {}
         self._scrolls: dict[str, dict] = {}
         self._pit_seq = 0
-        # IVF vector indexes — (cell-assigned corpus, centroids) per
-        # (table, field); routes the DSL `knn` clause's approximate tier
-        # (ES's HNSW analogue). A disk-backed index is parquet
-        # PARTITIONED BY cell, so probes prune to nprobe/n_cells of it.
-        self._ivf: dict[tuple[str, str], tuple[DataFrame, list]] = {}
         # parent/child relations (register_relation) — the engine's
         # analogue of the ES join-field mapping; serves the
         # has_child/has_parent/parent_id query kinds. Keyed three ways:
@@ -407,26 +470,9 @@ class SearchEngine:
         inverted index must never serve the plan rewrite. Mutation batches
         do NOT come through here: they ride ``apply_delta``, which updates
         the postings incrementally instead of discarding them."""
-        for key in [k for k in self._postings if k[0] == table]:
-            self._postings.pop(key).unpersist()
-        for key in [k for k in self._positional if k[0] == table]:
-            self._positional.pop(key).unpersist()
-        for key in [k for k in self._presence if k[0] == table]:
-            self._presence.pop(key).unpersist()
-        for key in [k for k in self._range if k[0] == table]:
-            self._range.pop(key).unpersist()
-        for key in [k for k in self._span if k[0] == table]:
-            self._span.pop(key).unpersist()
-        for key in [k for k in self._geo if k[0] == table]:
-            self._geo.pop(key).unpersist()
-            self._geo_prec.pop(key, None)
+        for key in [k for k in self._indexes if k[1] == table]:
+            self._indexes.pop(key).state.unpersist()
         self._drop_term_dict(table)
-        for key in [k for k in self._ivf if k[0] == table]:
-            indexed, _ = self._ivf.pop(key)
-            try:
-                indexed.unpersist()
-            except Exception:
-                pass
 
     def _drop_term_dict(self, table: str) -> None:
         for key in [k for k in self._term_dict if k[0] == table]:
@@ -442,7 +488,7 @@ class SearchEngine:
         cached dictionary instead of re-aggregating the postings;
         dropped on any postings change (full or incremental)."""
         if (table, fld) not in self._term_dict:
-            view = self._postings[(table, fld)].view()
+            view = self._state("postings", table, fld).view()
             d = (view.groupBy("token")
                      .agg(F.sum("tf").cast("long").alias("freq"))
                      .cache())
@@ -450,124 +496,58 @@ class SearchEngine:
         return self._term_dict[(table, fld)]
 
     def has_postings(self, table: str) -> bool:
-        return any(k[0] == table
-                   for registry in (self._postings, self._positional,
-                                    self._presence, self._range,
-                                    self._span, self._geo)
-                   for k in registry)
+        """True when any registry index (every kind, IVF included) is
+        built or attached for ``table``."""
+        return any(k[1] == table for k in self._indexes)
+
+    def index_entry(self, kind: str, table: str,
+                    field: str) -> _IndexEntry | None:
+        """The registry entry (state, params) of one index, or None."""
+        return self._indexes.get((kind, table, field))
+
+    def _state(self, kind: str, table: str, field: str):
+        entry = self._indexes.get((kind, table, field))
+        return None if entry is None else entry.state
 
     def apply_delta(self, table: str, resolved_docs: DataFrame,
                     new_docs: DataFrame | None,
                     removed_ids: DataFrame | None) -> None:
         """Point search at the post-mutation document state AND update
-        every postings index of the table incrementally: only the batch's
-        documents are tokenized, and only their postings rows are retired/
-        appended — the inverted index stays warm under a steady mutation
-        stream (the reference's ES does exactly this per-doc upsert,
-        ref ElasticIndex.java:603-614). ``new_docs`` are the upserted
-        documents (built form), ``removed_ids`` a DataFrame with the
-        ``_id`` column of deleted docs."""
-        from cassandra_es_index_spark.search.positional import (
-            build_chunks, build_token_positions,
-        )
-        from cassandra_es_index_spark.search.postings import build_postings
-
+        every index of the table incrementally: only the batch's
+        documents are indexed, and only their rows are retired/appended
+        (on the kind's key column) — the indexes stay warm under a steady
+        mutation stream (the reference's ES does exactly this per-doc
+        upsert, ref ElasticIndex.java:603-614). ``new_docs`` are the
+        upserted documents (built form), ``removed_ids`` a DataFrame with
+        the ``_id`` column of deleted docs. IVF upserts assign to the
+        nearest existing centroid (rebuild to re-center drifted cells)."""
         self._docs[table] = resolved_docs
         self._n_docs.pop(table, None)
         self._drop_term_dict(table)   # vocabulary changed incrementally
-        if not self.has_postings(table) \
-                and not any(k[0] == table for k in self._ivf):
+        if not self.has_postings(table):
             return
         _, spec = self.catalog.get(table)
         id_col = self._postings_id_col(spec)
-        for registry, builder in ((self._postings, build_postings),
-                                  (self._positional, build_chunks),
-                                  (self._presence, _presence_rows),
-                                  (self._range, _range_rows),
-                                  (self._span, build_token_positions)):
-            for (t, fld), state in list(registry.items()):
-                if t != table:
-                    continue
-                doc_type = state.base.schema["doc"].dataType
-                parts = []
-                if new_docs is not None:
-                    parts.append(new_docs.select(
-                        F.col(id_col).cast(doc_type).alias("doc")))
-                if removed_ids is not None:
-                    parts.append(removed_ids.select(
-                        F.col(DOC_ID).cast(doc_type).alias("doc")))
-                if not parts:
-                    continue
-                touched = parts[0] if len(parts) == 1 else \
-                    parts[0].unionByName(parts[1])
-                fresh = (builder(new_docs, id_col, fld)
-                         if new_docs is not None else None)
-                state.apply(fresh, touched)
-        for (t, fld), state in list(self._geo.items()):
-            # geo index: same retire-and-append shape, but the builder
-            # carries the per-entry cell precision
+        for (kind, t, fld), entry in list(self._indexes.items()):
             if t != table:
                 continue
-            doc_type = state.base.schema["doc"].dataType
+            key = INDEX_KINDS[kind].key
+            key_type = entry.state.base.schema[key].dataType
             parts = []
             if new_docs is not None:
                 parts.append(new_docs.select(
-                    F.col(id_col).cast(doc_type).alias("doc")))
+                    F.col(id_col).cast(key_type).alias(key)))
             if removed_ids is not None:
                 parts.append(removed_ids.select(
-                    F.col(DOC_ID).cast(doc_type).alias("doc")))
+                    F.col(DOC_ID).cast(key_type).alias(key)))
             if not parts:
                 continue
             touched = parts[0] if len(parts) == 1 else \
                 parts[0].unionByName(parts[1])
-            fresh = (_geo_rows(new_docs, id_col, fld,
-                               self._geo_prec[(t, fld)])
+            fresh = (INDEX_KINDS[kind].rows(new_docs, id_col, fld,
+                                            entry.params)
                      if new_docs is not None else None)
-            state.apply(fresh, touched)
-        for (t, fld), (indexed, centroids) in list(self._ivf.items()):
-            if t != table:
-                continue
-            # incremental IVF maintenance: retire the batch's rows, then
-            # assign upserted vectors to their nearest EXISTING centroid
-            # (no re-clustering — ES HNSW inserts likewise graft into the
-            # built graph). The delta unions onto the (possibly
-            # partition-pruned) base; probes stay cell-bounded.
-            updated = indexed
-            cid_type = indexed.schema["corpus_id"].dataType
-            parts = []
-            if new_docs is not None:
-                parts.append(new_docs.select(
-                    F.col(id_col).cast(cid_type).alias("corpus_id")))
-            if removed_ids is not None:
-                parts.append(removed_ids.select(
-                    F.col(DOC_ID).cast(cid_type).alias("corpus_id")))
-            if not parts:
-                continue
-            touched = parts[0] if len(parts) == 1 else \
-                parts[0].unionByName(parts[1])
-            updated = updated.join(F.broadcast(touched), "corpus_id",
-                                   "left_anti")
-            if new_docs is not None and fld in new_docs.columns:
-                fresh = self._ivf_assign(
-                    new_docs.select(
-                        F.col(id_col).alias("corpus_id"),
-                        F.col(fld).cast("array<double>").alias("cvec"))
-                    .where(F.col("cvec").isNotNull()),
-                    centroids)
-                updated = updated.unionByName(fresh)
-            self._ivf[(t, fld)] = (updated, centroids)
-
-    @staticmethod
-    def _ivf_assign(vecs: DataFrame, centroids: list) -> DataFrame:
-        """Assign (corpus_id, cvec) rows to their nearest centroid —
-        the IVF insert path (argmin over per-cell squared distances,
-        pure Column expressions)."""
-        from cassandra_es_index_spark.operators.similarity import _sq_dist
-
-        dists = F.array(*[_sq_dist(F.col("cvec"), ct) for ct in centroids])
-        return vecs.withColumn(
-            "cell",
-            (F.array_position(dists, F.array_min(dists)) - 1).cast("int"))
+            entry.state.apply(fresh, touched)
 
     def documents(self, table: str) -> DataFrame:
         return self._docs[table]
@@ -922,7 +902,7 @@ class SearchEngine:
             if key not in cache:
                 fld = fld_raw if fld_raw is not None \
                     else comp().default_field
-                state = self._postings.get((table, fld))
+                state = self._state("postings", table, fld)
                 if state is not None:
                     toks = state.view().select("token")
                 else:
@@ -1242,10 +1222,12 @@ class SearchEngine:
                 raise es_dsl.DslError(
                     f"knn query field {n.field!r} must be an array "
                     "vector column")
-            if (table, n.field) in self._ivf:
+            ivf = self._indexes.get(("ivf", table, n.field))
+            if ivf is not None:
                 _, spec = self.catalog.get(table)
                 id_col = self._postings_id_col(spec)
-                indexed, centroids = self._ivf[(table, n.field)]
+                indexed = ivf.state.view()
+                centroids = ivf.params["centroids"]
                 n_cells = len(centroids)
                 avg_cell = max(1, self._corpus_size(table)
                                // max(1, n_cells))
@@ -1378,9 +1360,9 @@ class SearchEngine:
                      if c >= n.min_term_freq and t not in stop]
             if not cands:
                 return MatchNone()
-            if (table, fld) not in self._postings:
+            if self._state("postings", table, fld) is None:
                 self.build_postings_index(table, fld)
-            view = self._postings[(table, fld)].view()
+            view = self._state("postings", table, fld).view()
             df_map = {r["token"]: r["df"]
                       for r in self._mlt_dfreq(view, cands).collect()}
             n_docs = self._corpus_size(table)
@@ -2009,9 +1991,9 @@ class SearchEngine:
         )
 
         fld = fld_raw if fld_raw is not None else comp.default_field
-        state = self._postings.get((table, fld))
+        state = self._state("postings", table, fld)
         if state is not None:
-            toks = self._postings[(table, fld)].view().select("token")
+            toks = self._state("postings", table, fld).view().select("token")
         else:
             from cassandra_es_index_spark.functions.analyzers import (
                 standard,
@@ -2628,14 +2610,14 @@ class SearchEngine:
         # ordering values, and the corpus is never text-scanned. Sort
         # fields without a range index fall back to the scan plan.
         sort_servable = all(f == "_score" or f in keys
-                            or (table, f) in self._range
+                            or self._state("range", table, f) is not None
                             for f, *_ in (req.sort or []))
         # collapse needs the field's values too — served from the same
         # range index (doc-values analogue) or a key column
         if req.collapse is not None:
             sort_servable = sort_servable and (
                 req.collapse in keys
-                or (table, req.collapse) in self._range)
+                or self._state("range", table, req.collapse) is not None)
         ph = self._postings_hits(table, node, default_field) \
             if sort_servable else None
         if ph is not None and req.min_score is not None:
@@ -2658,7 +2640,7 @@ class SearchEngine:
                     order_types.append(docs.schema[f].dataType)
                     continue
                 helper = f"_sort{i}"
-                vals = (self._range[(table, f)].view()
+                vals = (self._state("range", table, f).view()
                         .select("doc", F.col("val").alias(helper)))
                 # left join: docs matching the query with a null sort
                 # field place per the threaded nulls_first flag (ES
@@ -2671,7 +2653,7 @@ class SearchEngine:
             if req.collapse is not None and req.collapse not in keys:
                 # collapse values ride the hits the same way sort values
                 # do: a left join against the (doc, val) range projection
-                cvals = (self._range[(table, req.collapse)].view()
+                cvals = (self._state("range", table, req.collapse).view()
                          .select("doc", F.col("val").alias("_collapse")))
                 ph = ph.join(cvals, on="doc", how="left")
                 sort_helpers.append("_collapse")
@@ -2926,9 +2908,7 @@ class SearchEngine:
         postings instead of scanning the corpus. On a cluster the same
         DataFrame would be persisted bucketed by token
         (``postings.write_postings``) so lookups are shuffle-free."""
-        from cassandra_es_index_spark.search.postings import build_postings
-
-        _, spec = self.catalog.get(table)
+        self.catalog.get(table)   # typed error on unknown table
         docs = self._docs[table]
         fld = field or Compiler(docs).default_field
         # API-fuzz catch (r14.75): an unknown field crashed the build
@@ -2940,13 +2920,35 @@ class SearchEngine:
             Compiler(docs).resolve(fld)
         except CompileError as e:
             raise es_dsl.DslError(str(e)) from e
-        if (table, fld) not in self._postings:
-            self._postings[(table, fld)] = PostingsState(build_postings(
-                docs, self._postings_id_col(spec), fld))
-        p = self._postings[(table, fld)].view()
+        return self._build_index("postings", table, fld, {}, materialize)
+
+    def _build_index(self, kind: str, table: str, field: str, params: dict,
+                     materialize: bool) -> DataFrame:
+        """The one build path behind every ``build_*_index``: register a
+        PostingsState over the kind's rows (kept when already built with
+        the same params; one parameter set per field, so new params
+        replace the index) and return its view."""
+        entry = self._indexes.get((kind, table, field))
+        if entry is None or entry.params != params:
+            _, spec = self.catalog.get(table)
+            rows = INDEX_KINDS[kind].rows(
+                self._docs[table], self._postings_id_col(spec), field,
+                params)
+            entry = self._set_index(kind, table, field, PostingsState(
+                rows, key=INDEX_KINDS[kind].key), params)
+        p = entry.state.view()
         if materialize:
             p.count()
         return p
+
+    def _set_index(self, kind: str, table: str, field: str, state,
+                   params: dict) -> _IndexEntry:
+        old = self._indexes.pop((kind, table, field), None)
+        if old is not None:
+            old.state.unpersist()
+        entry = self._indexes[(kind, table, field)] = _IndexEntry(state,
+                                                                  params)
+        return entry
 
     def build_phrase_index(self, table: str, field: str | None = None,
                            materialize: bool = False) -> DataFrame:
@@ -2958,9 +2960,7 @@ class SearchEngine:
         phrase queries against its prebuilt index."""
         from pyspark.sql import types as T
 
-        from cassandra_es_index_spark.search.positional import build_chunks
-
-        _, spec = self.catalog.get(table)
+        self.catalog.get(table)   # typed error on unknown table
         docs = self._docs[table]
         fld = field or Compiler(docs).default_field
         dtype = docs.schema[fld].dataType
@@ -2976,13 +2976,7 @@ class SearchEngine:
             raise ValueError(
                 f"phrase index needs a string, array<string>, or "
                 f"map-of-string(-array) field, got {dtype} for {fld!r}")
-        if (table, fld) not in self._positional:
-            self._positional[(table, fld)] = PostingsState(build_chunks(
-                docs, self._postings_id_col(spec), fld))
-        p = self._positional[(table, fld)].view()
-        if materialize:
-            p.count()
-        return p
+        return self._build_index("positional", table, fld, {}, materialize)
 
     def build_range_index(self, table: str, field: str,
                           materialize: bool = False) -> DataFrame:
@@ -2993,15 +2987,7 @@ class SearchEngine:
         filter; a flushed copy is sorted by ``val`` so bound filters skip
         row groups via parquet min/max stats. Incrementally maintained
         under mutations like the other index kinds."""
-        _, spec = self.catalog.get(table)
-        docs = self._docs[table]
-        if (table, field) not in self._range:
-            self._range[(table, field)] = PostingsState(_range_rows(
-                docs, self._postings_id_col(spec), field))
-        p = self._range[(table, field)].view()
-        if materialize:
-            p.count()
-        return p
+        return self._build_index("range", table, field, {}, materialize)
 
     def build_span_index(self, table: str, field: str,
                          materialize: bool = False) -> DataFrame:
@@ -3016,25 +3002,14 @@ class SearchEngine:
         kinds."""
         from pyspark.sql import types as T
 
-        from cassandra_es_index_spark.search.positional import (
-            build_token_positions,
-        )
-
-        _, spec = self.catalog.get(table)
+        self.catalog.get(table)   # typed error on unknown table
         docs = self._docs[table]
         if not isinstance(docs.schema[field].dataType, T.StringType):
             raise ValueError(
                 f"span index supports plain string fields, got "
                 f"{docs.schema[field].dataType.simpleString()} "
                 f"for {field!r}")
-        if (table, field) not in self._span:
-            self._span[(table, field)] = PostingsState(
-                build_token_positions(
-                    docs, self._postings_id_col(spec), field))
-        p = self._span[(table, field)].view()
-        if materialize:
-            p.count()
-        return p
+        return self._build_index("span", table, field, {}, materialize)
 
     def build_geo_index(self, table: str, field: str,
                         precision: int = 5,
@@ -3055,33 +3030,8 @@ class SearchEngine:
         if not 1 <= int(precision) <= 12:
             raise ValueError(f"geo index precision must be in [1, 12], "
                              f"got {precision}")
-        _, spec = self.catalog.get(table)
-        docs = self._docs[table]
-        existing = self._geo_prec.get((table, field))
-        if existing is not None and existing != int(precision):
-            # one precision per field: re-building at a new precision
-            # replaces the index
-            self._geo.pop((table, field)).unpersist()
-            self._geo_prec.pop((table, field))
-        if (table, field) not in self._geo:
-            self._geo[(table, field)] = PostingsState(_geo_rows(
-                docs, self._postings_id_col(spec), field,
-                int(precision)))
-            self._geo_prec[(table, field)] = int(precision)
-        p = self._geo[(table, field)].view()
-        if materialize:
-            p.count()
-        return p
-
-    def attach_range_index(self, table: str, field: str,
-                           path: str) -> None:
-        """Restart path for the range index: serve Range leaves from a
-        flushed (doc, val) directory (sorted by val → row-group
-        skipping)."""
-        if (table, field) in self._range:
-            self._range.pop((table, field)).unpersist()
-        self._range[(table, field)] = PostingsState(
-            self.spark.read.parquet(path), cache_base=False)
+        return self._build_index("geo", table, field,
+                                 {"precision": int(precision)}, materialize)
 
     def _knn_search(self, table: str, docs: DataFrame, qmd, req, after,
                     keys: list[str], default_field: str | None
@@ -3140,7 +3090,8 @@ class SearchEngine:
             # re-rank).
             method = "exact"
         if method is None:
-            method = "ivf" if (table, fld) in self._ivf else "exact"
+            method = "ivf" if self._state("ivf", table, fld) is not None \
+                else "exact"
 
         if method == "exact":
             frame = docs
@@ -3203,12 +3154,14 @@ class SearchEngine:
                 [(0, [float(v) for v in vec])],
                 "query_id int, qvec array<double>")
             if method == "ivf":
-                if (table, fld) not in self._ivf:
+                ivf = self._indexes.get(("ivf", table, fld))
+                if ivf is None:
                     raise es_dsl.DslError(
                         f"knn method 'ivf' needs a built or attached IVF "
                         f"index for field {fld!r} "
                         "(SearchEngine.build_ivf_index)")
-                indexed, centroids = self._ivf[(table, fld)]
+                indexed = ivf.state.view()
+                centroids = ivf.params["centroids"]
                 n_cells = len(centroids)
                 if nprobe is None:
                     if ncand is not None:
@@ -3398,173 +3351,123 @@ class SearchEngine:
         Maintained incrementally under mutations: upserts assign to the
         nearest existing centroid, deletes retire rows (no
         re-clustering; rebuild to re-center drifted cells)."""
-        from cassandra_es_index_spark.operators.similarity import (
-            ivf_build, ivf_read, ivf_write,
-        )
-
         _, spec = self.catalog.get(table)
-        docs = self._docs[table]
-        id_col = self._postings_id_col(spec)
-        indexed, centroids = ivf_build(docs, id_col, field,
+        indexed, centroids = ivf_build(self._docs[table],
+                                       self._postings_id_col(spec), field,
                                        n_cells=n_cells, n_iters=n_iters)
         if path is not None:
             ivf_write(indexed, centroids, path)
             indexed, centroids = ivf_read(self.spark, path)
-        else:
-            indexed = indexed.persist()
-        old = self._ivf.pop((table, field), None)
-        if old is not None:
-            try:
-                old[0].unpersist()
-            except Exception:
-                pass
-        self._ivf[(table, field)] = (indexed, centroids)
+        self._set_index("ivf", table, field, PostingsState(
+            indexed, cache_base=path is None, key="corpus_id"),
+            {"centroids": centroids})
         return indexed
 
-    def attach_ivf_index(self, table: str, field: str, path: str) -> None:
-        """Restart path for the IVF vector index: serve DSL ``knn``
-        probes from a persisted cell-partitioned index directory
-        (written by ``build_ivf_index(path=...)`` / ``ivf_write``)
-        without re-clustering."""
-        from cassandra_es_index_spark.operators.similarity import ivf_read
-
-        old = self._ivf.pop((table, field), None)
-        if old is not None:
-            try:
-                old[0].unpersist()
-            except Exception:
-                pass
-        self._ivf[(table, field)] = ivf_read(self.spark, path)
-
-    def flush_postings(self, table: str, field: str, path: str,
-                       table_name: str | None = None,
-                       buckets: int = 64) -> str:
-        """Checkpoint the postings index — base plus the mutation overlay —
-        to a bucketed on-disk table (``postings.write_postings``), then
-        re-point the in-memory state at the persisted table with an empty
-        overlay. The cluster-deployment shape: executor caches don't
-        survive restarts, so the durable index is the bucketed table and
-        the overlay holds only mutations since the last flush (ES's
-        segment-flush analogue). Returns the table name for
-        ``attach_postings``."""
-        from cassandra_es_index_spark.search.postings import (
-            read_postings, write_postings,
-        )
-
-        state = self._postings[(table, field)]
-        # generational layout: each flush writes a NEW directory/table (a
-        # flush may read the previous generation through its base — Spark
-        # cannot overwrite a path it is reading from). Old generations are
-        # dropped from the catalog; file retention is the caller's sweep.
-        gen = self._flush_gen.get((table, field), 0)
-        base_name = table_name or f"postings_{table}_{field}"
-        name = f"{base_name}_g{gen}"
-        write_postings(state.view(), f"{path}/g{gen}", buckets=buckets,
-                       table_name=name)
-        self._flush_gen[(table, field)] = gen + 1
-        if gen > 0:
-            self.spark.sql(f"DROP TABLE IF EXISTS {base_name}_g{gen - 1}")
-        state.unpersist()
-        self._postings[(table, field)] = PostingsState(
-            read_postings(self.spark, name), cache_base=False)
-        return name
-
-    def attach_postings(self, table: str, field: str,
-                        table_name: str) -> None:
-        """Serve term queries from an existing bucketed on-disk postings
-        table (written by ``flush_postings``/``write_postings``) without
-        rebuilding from the corpus — the restart path: a new session
-        attaches the durable index and mutations accumulate in a fresh
-        overlay on top of it."""
-        from cassandra_es_index_spark.search.postings import read_postings
-
-        if (table, field) in self._postings:
-            self._postings.pop((table, field)).unpersist()
-        self._postings[(table, field)] = PostingsState(
-            read_postings(self.spark, table_name), cache_base=False)
-
-    def _flush_parquet(self, registry: dict, kind: str, table: str,
-                       field: str, path: str, sort_col: str | None) -> str:
-        """Generational parquet flush for the positional/presence
-        registries (no token bucketing applies — the positional index is
-        filtered on three different token columns, so it is sorted within
-        partitions on the most selective one for row-group min/max
-        skipping instead)."""
-        state = registry[(table, field)]
-        gen = self._flush_gen.get((kind, table, field), 0)
-        out = f"{path}/g{gen}"
-        view = state.view()
-        if sort_col is not None:
-            view = view.sortWithinPartitions(sort_col)
-        view.write.mode("overwrite").parquet(out)
-        self._flush_gen[(kind, table, field)] = gen + 1
-        state.unpersist()
-        registry[(table, field)] = PostingsState(
-            self.spark.read.parquet(out), cache_base=False)
-        return out
-
     def flush_indexes(self, table: str, path: str) -> dict[str, list[str]]:
-        """Checkpoint EVERY index of a table — term postings, positional
-        (phrase), and field-presence — to its next on-disk generation and
-        re-point serving at the durable copies with empty overlays. Term
-        postings flush bucketed (``flush_postings``); positional flushes
-        sorted by ``tail`` (the first-phrase-word filter's entry column);
-        presence flushes plain (doc). Returns {kind: [locations]}."""
-        report: dict[str, list[str]] = {
-            "postings": [], "positional": [], "presence": [], "range": [],
-            "span": []}
-        for (t, fld) in list(self._postings):
-            if t == table:
-                report["postings"].append(self.flush_postings(
-                    t, fld, f"{path}/postings/{fld}"))
-        for (t, fld) in list(self._positional):
-            if t == table:
-                report["positional"].append(self._flush_parquet(
-                    self._positional, "positional", t, fld,
-                    f"{path}/positional/{fld}", "tail"))
-        for (t, fld) in list(self._presence):
-            if t == table:
-                report["presence"].append(self._flush_parquet(
-                    self._presence, "presence", t, fld,
-                    f"{path}/presence/{fld}", None))
-        for (t, fld) in list(self._range):
-            if t == table:
-                report["range"].append(self._flush_parquet(
-                    self._range, "range", t, fld,
-                    f"{path}/range/{fld}", "val"))
-        for (t, fld) in list(self._span):
-            if t == table:
-                report["span"].append(self._flush_parquet(
-                    self._span, "span", t, fld,
-                    f"{path}/span/{fld}", "token"))
+        """Checkpoint EVERY index of a table (each kind in
+        ``INDEX_KINDS``) — base plus mutation overlay — to the root's
+        next generation, ``{path}/{kind}/{field}/g{N}``, in the kind's
+        flush layout: term postings bucketed by token (the catalog table
+        ``postings_<table>_<field>_g<N>``, bucket-pruned lookups), IVF
+        partitioned by cell, the rest sorted for row-group skipping.
+
+        The generations become durable together when ``{path}/
+        _manifest.json`` is committed (written to a temp file, then
+        ``os.replace``d — Lucene's ``segments_N`` commit point); N is
+        derived from the committed manifest, so a flush never rewrites a
+        generation an engine may be reading from, and a crash before the
+        commit leaves the previous commit attachable. Serving then
+        re-points at the durable copies with empty overlays (ES's
+        segment-flush analogue). Returns {kind: [locations]}, a postings
+        location being its catalog table name."""
+        prev = _read_manifest(path)
+        gen = 0 if prev is None else prev["generation"] + 1
+        entries = []
+        for (kind, t, fld), entry in list(self._indexes.items()):
+            if t != table:
+                continue
+            out = f"{path}/{kind}/{fld}/g{gen}"
+            view = entry.state.view()
+            layout = INDEX_KINDS[kind].layout
+            if layout == "bucketed":
+                write_postings(view, out, buckets=_FLUSH_BUCKETS,
+                               table_name=self._table_name(kind, t, fld,
+                                                           out))
+            elif layout == "partitioned":
+                ivf_write(view, entry.params["centroids"], out)
+            else:
+                if layout is not None:
+                    view = view.sortWithinPartitions(layout)
+                view.write.mode("overwrite").parquet(out)
+            entries.append({"kind": kind, "field": fld, "generation": gen,
+                            "location": out, "params": entry.params})
+        if not entries:
+            return {kind: [] for kind in INDEX_KINDS}
+        tmp = os.path.join(path, _MANIFEST + ".tmp")
+        with open(tmp, "w") as f:
+            json.dump({"generation": gen, "indexes": entries}, f)
+        os.replace(tmp, os.path.join(path, _MANIFEST))
+        for e in (prev or {}).get("indexes", []):
+            if INDEX_KINDS[e["kind"]].layout == "bucketed":
+                self.spark.sql("DROP TABLE IF EXISTS " + self._table_name(
+                    e["kind"], table, e["field"], e["location"]))
+        return self.attach_indexes(table, path)
+
+    @staticmethod
+    def _table_name(kind: str, table: str, field: str, location: str) -> str:
+        return f"{kind}_{table}_{field}_{os.path.basename(location)}"
+
+    def attach_index(self, table: str, kind: str, field: str, location: str,
+                     params: dict | None = None) -> str:
+        """Serve one index of ``table`` from a flushed generation
+        directory (``flush_indexes``; for IVF also ``build_ivf_index(
+        path=...)``/``ivf_write``) without rebuilding from the corpus —
+        the restart path. Mutations then accumulate in a fresh overlay on
+        top of the disk base. ``params`` are the kind's build parameters
+        as the manifest records them (geo ``precision``; IVF centroids
+        are read from the directory). Returns the served location: a
+        postings directory is registered as the bucketed catalog table
+        ``postings_<table>_<field>_g<N>``, whose name is returned."""
+        if kind not in INDEX_KINDS:
+            raise ValueError(f"unknown index kind {kind!r}; expected one "
+                             f"of {sorted(INDEX_KINDS)}")
+        spec = INDEX_KINDS[kind]
+        params = dict(params or {})
+        served = location
+        if spec.layout == "bucketed":
+            served = self._table_name(kind, table, field, location)
+            cols = ", ".join(
+                f"`{f.name}` {f.dataType.simpleString()}"
+                for f in self.spark.read.parquet(location).schema)
+            self.spark.sql(f"DROP TABLE IF EXISTS {served}")
+            self.spark.sql(
+                f"CREATE TABLE {served} ({cols}) USING parquet "
+                f"CLUSTERED BY (token) SORTED BY (token) INTO "
+                f"{_FLUSH_BUCKETS} BUCKETS LOCATION '{location}'")
+            base = read_postings(self.spark, served)
+        elif spec.layout == "partitioned":
+            base, params["centroids"] = ivf_read(self.spark, location)
+        else:
+            base = self.spark.read.parquet(location)
+        missing = [p for p in spec.params if p not in params]
+        if missing:
+            raise ValueError(f"attach_index({kind!r}) needs params "
+                             f"{missing}")
+        self._set_index(kind, table, field, PostingsState(
+            base, cache_base=False, key=spec.key), params)
+        self._drop_term_dict(table)
+        return served
+
+    def attach_indexes(self, table: str, path: str) -> dict[str, list[str]]:
+        """Attach every index of the last committed flush of ``path``
+        (its ``_manifest.json``) to ``table``. Returns {kind: [served
+        locations]} like ``flush_indexes``; nothing is attached before
+        the first commit."""
+        report: dict[str, list[str]] = {kind: [] for kind in INDEX_KINDS}
+        for e in (_read_manifest(path) or {}).get("indexes", []):
+            report[e["kind"]].append(self.attach_index(
+                table, e["kind"], e["field"], e["location"], e["params"]))
         return report
-
-    def attach_phrase_index(self, table: str, field: str,
-                            path: str) -> None:
-        """Restart path for the positional index: serve phrases from a
-        flushed chunk-index directory without re-tokenizing the corpus."""
-        if (table, field) in self._positional:
-            self._positional.pop((table, field)).unpersist()
-        self._positional[(table, field)] = PostingsState(
-            self.spark.read.parquet(path), cache_base=False)
-
-    def attach_span_index(self, table: str, field: str,
-                          path: str) -> None:
-        """Restart path for the token-position (span) index: serve
-        ``span_near`` from a flushed (doc, token, pos) directory without
-        re-tokenizing the corpus."""
-        if (table, field) in self._span:
-            self._span.pop((table, field)).unpersist()
-        self._span[(table, field)] = PostingsState(
-            self.spark.read.parquet(path), cache_base=False)
-
-    def attach_presence_index(self, table: str, field: str,
-                              path: str) -> None:
-        """Restart path for the field-presence index."""
-        if (table, field) in self._presence:
-            self._presence.pop((table, field)).unpersist()
-        self._presence[(table, field)] = PostingsState(
-            self.spark.read.parquet(path), cache_base=False)
 
     def build_presence_index(self, table: str, field: str,
                              materialize: bool = False) -> DataFrame:
@@ -3573,15 +3476,7 @@ class SearchEngine:
         are served from it (score 1 per doc, the scan path's semantics)
         instead of scanning the corpus; maintained incrementally under
         mutations like the other index kinds."""
-        _, spec = self.catalog.get(table)
-        docs = self._docs[table]
-        if (table, field) not in self._presence:
-            self._presence[(table, field)] = PostingsState(_presence_rows(
-                docs, self._postings_id_col(spec), field))
-        p = self._presence[(table, field)].view()
-        if materialize:
-            p.count()
-        return p
+        return self._build_index("presence", table, field, {}, materialize)
 
     def _postings_hits(self, table: str, node: Node,
                        default_field: str | None) -> DataFrame | None:
@@ -3599,8 +3494,7 @@ class SearchEngine:
         back to the scan plan. Anything else (non-prefix wildcards, NOT,
         should-boosts) keeps the scan path.
         """
-        if not (self._postings or self._positional or self._span
-                or self._presence or self._range or self._geo):
+        if not self._indexes:
             return None
         docs = self._docs[table]
         default = default_field or Compiler(docs).default_field
@@ -3608,7 +3502,7 @@ class SearchEngine:
         def serve(n: Node) -> DataFrame | None:
             if isinstance(n, Term):
                 fld = n.field if n.field is not None else default
-                state = self._postings.get((table, fld))
+                state = self._state("postings", table, fld)
                 if state is not None and self._PLAIN_TOKEN.fullmatch(n.value):
                     return (state.view()
                              .where(F.col("token") == n.value.lower())
@@ -3617,7 +3511,7 @@ class SearchEngine:
                 # col == literal, which the (doc, val) range index answers;
                 # never applied to text-ish fields, where Term means token
                 # match, not equality
-                rstate = self._range.get((table, fld))
+                rstate = self._state("range", table, fld)
                 if rstate is not None:
                     from pyspark.sql import types as T
                     comp = Compiler(docs, default)
@@ -3635,7 +3529,7 @@ class SearchEngine:
                 return None
             if isinstance(n, Wildcard):
                 fld = n.field if n.field is not None else default
-                state = self._postings.get((table, fld))
+                state = self._state("postings", table, fld)
                 if state is None:
                     return None
                 m = self._PREFIX_WILDCARD.fullmatch(n.pattern)
@@ -3672,14 +3566,14 @@ class SearchEngine:
                          .groupBy("doc")
                          .agg(F.sum("tf").cast("long").alias(SCORE)))
             if isinstance(n, Exists):
-                state = self._presence.get((table, n.field))
+                state = self._state("presence", table, n.field)
                 if state is None:
                     return None
                 return state.view().select(
                     "doc", F.lit(1).cast("long").alias(SCORE))
             if isinstance(n, Range):
                 fld = n.field if n.field is not None else default
-                state = self._range.get((table, fld))
+                state = self._state("range", table, fld)
                 if state is None or (n.lo is None and n.hi is None):
                     return None  # unbounded range matches null-field docs
                                  # too — only the scan has those rows
@@ -3727,7 +3621,7 @@ class SearchEngine:
                 )
                 validate_java_regex(n.pattern, self.spark)
                 fld = n.field if n.field is not None else default
-                state = self._postings.get((table, fld))
+                state = self._state("postings", table, fld)
                 if state is None:
                     return None
                 anchored = f"^(?:{n.pattern})$"
@@ -3753,7 +3647,7 @@ class SearchEngine:
                 )
 
                 fld = n.field if n.field is not None else default
-                state = self._postings.get((table, fld))
+                state = self._state("postings", table, fld)
                 if state is None:
                     return None
                 dictionary = (
@@ -3779,7 +3673,7 @@ class SearchEngine:
                         self._PLAIN_TOKEN.fullmatch(w) for w in words):
                     return None
                 if len(words) == 1:
-                    state = self._postings.get((table, fld))
+                    state = self._state("postings", table, fld)
                     if state is None:
                         return None
                     if n.last_prefix:
@@ -3794,7 +3688,7 @@ class SearchEngine:
                     return (state.view()
                              .where(F.col("token") == words[0])
                              .select("doc", F.col("tf").alias(SCORE)))
-                state = self._positional.get((table, fld))
+                state = self._state("positional", table, fld)
                 if state is None:
                     return None
                 if n.last_alternatives == ():
@@ -3813,13 +3707,13 @@ class SearchEngine:
                 if n.msm_field is None:
                     return None
                 fld = n.field if n.field is not None else default
-                state = self._postings.get((table, fld))
+                state = self._state("postings", table, fld)
                 if state is None:
                     return None
                 if not all(self._PLAIN_TOKEN.fullmatch(t)
                            for t in n.terms):
                     return None
-                rstate = self._range.get((table, n.msm_field))
+                rstate = self._state("range", table, n.msm_field)
                 if rstate is None:
                     return None
                 lows = [t.lower() for t in n.terms]
@@ -3854,7 +3748,7 @@ class SearchEngine:
                 )
 
                 fld = n.field if n.field is not None else default
-                state = self._span.get((table, fld))
+                state = self._state("span", table, fld)
                 if state is None:
                     return None
                 return interval_hits(state.view(), n.terms, n.ordered,
@@ -3878,7 +3772,7 @@ class SearchEngine:
                     # mixed-field tuple count; scan plan (documented)
                     return None
                 fld = n.field if n.field is not None else default
-                state = self._span.get((table, fld))
+                state = self._state("span", table, fld)
                 if state is None:
                     return None
                 if n.first:          # legacy 2×single-term fast join
@@ -3900,7 +3794,7 @@ class SearchEngine:
                 )
 
                 fld = n.field if n.field is not None else default
-                state = self._span.get((table, fld))
+                state = self._state("span", table, fld)
                 if state is None:
                     return None
                 if isinstance(n, SpanOr):
@@ -3923,7 +3817,7 @@ class SearchEngine:
                 )
 
                 fld = n.field if n.field is not None else default
-                state = self._span.get((table, fld))
+                state = self._state("span", table, fld)
                 if state is None:
                     return None
                 return span_containing_hits(
@@ -3945,10 +3839,10 @@ class SearchEngine:
                     bbox_covering_cells, geohash_col, geotile_key,
                 )
 
-                entry = self._geo.get((table, n.field))
+                entry = self._indexes.get(("geo", table, n.field))
                 if entry is None:
                     return None
-                prec = self._geo_prec[(table, n.field)]
+                prec = entry.params["precision"]
                 lat, lon = F.col("lat"), F.col("lon")
                 if n.kind == "geohash":
                     kl = len(n.key)
@@ -3976,7 +3870,7 @@ class SearchEngine:
                         return None
                     cand = F.col("cell").isin(cells)
                     pred = geotile_key(lat, lon, z) == F.lit(n.key)
-                return (entry.view()
+                return (entry.state.view()
                         .where(cand)
                         .where(F.coalesce(pred, F.lit(False)))
                         .select("doc",
@@ -3996,10 +3890,10 @@ class SearchEngine:
                     haversine_meters, polygon_contains,
                 )
 
-                entry = self._geo.get((table, n.field))
+                entry = self._indexes.get(("geo", table, n.field))
                 if entry is None:
                     return None
-                prec = self._geo_prec[(table, n.field)]
+                prec = entry.params["precision"]
                 if isinstance(n, GeoDistance):
                     cells = covering_cells(n.lat, n.lon, n.meters, prec)
                 elif isinstance(n, GeoBoundingBox):
@@ -4040,7 +3934,7 @@ class SearchEngine:
                 # cell filter prunes to candidates, the exact predicate
                 # verifies lat/lon carried IN the index rows — the
                 # corpus is never read on this plan
-                return (entry.view()
+                return (entry.state.view()
                         .where(F.col("cell").isin(cells))
                         .where(pred)
                         .select("doc",
@@ -4056,7 +3950,8 @@ class SearchEngine:
                         for c in n.children}
                 vals = [c.value.lower() for c in n.children]
                 if len(flds) == 1 and len(set(vals)) == len(vals):
-                    state = self._postings.get((table, next(iter(flds))))
+                    state = self._state("postings", table,
+                                        next(iter(flds)))
                     if state is not None and all(
                             self._PLAIN_TOKEN.fullmatch(c.value)
                             for c in n.children):
@@ -4127,7 +4022,7 @@ class SearchEngine:
                 inner = serve(n.child)
                 if inner is None:
                     return None
-                rstate = self._range.get((table, n.field_name))
+                rstate = self._state("range", table, n.field_name)
                 if rstate is None:
                     return None
                 vals = rstate.view().select(
@@ -4161,7 +4056,7 @@ class SearchEngine:
                 inner = serve(n.child)
                 if inner is None:
                     return None
-                rstate = self._range.get((table, n.field_name))
+                rstate = self._state("range", table, n.field_name)
                 if rstate is None:
                     return None
                 vals = rstate.view().select(
@@ -4183,7 +4078,7 @@ class SearchEngine:
 
                 for fld in n.fields:
                     Compiler(docs, default).resolve(fld)
-                states = [self._range.get((table, f)) for f in n.fields]
+                states = [self._state("range", table, f) for f in n.fields]
                 if any(s is None for s in states):
                     return None
                 inner = serve(n.child)
@@ -4244,7 +4139,7 @@ class SearchEngine:
                     if sc is None:
                         fv: Column = F.lit(1.0)
                     elif isinstance(sc, (FunctionScore, DecayScore)):
-                        rstate = self._range.get((table, sc.field_name))
+                        rstate = self._state("range", table, sc.field_name)
                         if rstate is None:
                             return None
                         out = out.join(
@@ -4266,7 +4161,7 @@ class SearchEngine:
                                             ref.dtype, sc),
                                 sc, origin, scale, offset)
                     else:  # ScriptScore
-                        states = [self._range.get((table, fld))
+                        states = [self._state("range", table, fld)
                                   for fld in sc.fields]
                         if any(s is None for s in states):
                             return None
@@ -4392,9 +4287,9 @@ class SearchEngine:
 
         docs = self._docs[table]
         fld = field or Compiler(docs).default_field
-        if (table, fld) not in self._postings:
+        if self._state("postings", table, fld) is None:
             self.build_postings_index(table, fld)
-        return lookup_terms(self._postings[(table, fld)].view(),
+        return lookup_terms(self._state("postings", table, fld).view(),
                             [t.lower() for t in terms], mode)
 
     def suggest(self, table: str, prefix: str, field: str | None = None,
@@ -4407,9 +4302,9 @@ class SearchEngine:
         Returns (token, freq)."""
         docs = self._docs[table]
         fld = field or Compiler(docs).default_field
-        if (table, fld) not in self._postings:
+        if self._state("postings", table, fld) is None:
             self.build_postings_index(table, fld)
-        view = self._postings[(table, fld)].view()
+        view = self._state("postings", table, fld).view()
         return (view.where(F.col("token").startswith(prefix.lower()))
                     .groupBy("token")
                     .agg(F.sum("tf").cast("long").alias("freq"))
@@ -4426,7 +4321,7 @@ class SearchEngine:
         never the corpus. Returns (token, distance, freq)."""
         docs = self._docs[table]
         fld = field or Compiler(docs).default_field
-        if (table, fld) not in self._postings:
+        if self._state("postings", table, fld) is None:
             self.build_postings_index(table, fld)
         t = term.lower()
         # cached per (table, field) — repeated suggesters rank against
@@ -4594,7 +4489,7 @@ class SearchEngine:
         Cost scales with vocabulary, never the corpus."""
         docs = self._docs[table]
         f2 = fld or Compiler(docs).default_field
-        if (table, f2) not in self._postings:
+        if self._state("postings", table, f2) is None:
             self.build_postings_index(table, f2)
         vocab = self._term_dictionary(table, f2)
         tokens = [t for t in re.split(r"\W+", text.lower()) if t]
@@ -4700,23 +4595,16 @@ class SearchEngine:
         self.catalog.get(table)   # typed error on unknown table
         self._pit_seq += 1
         pid = f"pit_{self._pit_seq}"
-        registries = (self._postings, self._positional, self._presence,
-                      self._range, self._span, self._geo)
         self._pits[pid] = {
             "table": table,
             "docs": self._docs[table],
             "row_source": self._row_source.get(table),
             "n_docs": self._n_docs.get(table),
-            "indexes": [(reg, key, _PinnedState(state.view()))
-                        for reg in registries
-                        for key, state in list(reg.items())
-                        if key[0] == table],
-            # IVF entries are (DataFrame, centroids) tuples REPLACED
-            # (never mutated) by build/attach/maintain — holding the
-            # tuple pins the ANN view too, so a knn query through the
-            # handle cannot see post-open vectors (ADVICE r7)
-            "ivf": {k: v for k, v in self._ivf.items()
-                    if k[0] == table},
+            # every kind pins its view — IVF too, so a knn query through
+            # the handle cannot see post-open vectors (ADVICE r7)
+            "indexes": {k: _IndexEntry(_PinnedState(e.state.view()),
+                                       e.params)
+                        for k, e in self._indexes.items() if k[1] == table},
         }
         return pid
 
@@ -4753,13 +4641,8 @@ class SearchEngine:
         saved_docs = self._docs[table]
         saved_rs = self._row_source.get(table)
         saved_nd = self._n_docs.get(table)
-        registries = (self._postings, self._positional, self._presence,
-                      self._range, self._span, self._geo)
-        saved_entries = {id(reg): {k: v for k, v in reg.items()
-                                   if k[0] == table}
-                         for reg in registries}
-        saved_ivf = {k: v for k, v in self._ivf.items()
-                     if k[0] == table}
+        saved_indexes = {k: e for k, e in self._indexes.items()
+                         if k[1] == table}
         try:
             self._docs[table] = snap["docs"]
             if snap["row_source"] is not None:
@@ -4770,14 +4653,7 @@ class SearchEngine:
                 self._n_docs[table] = snap["n_docs"]
             else:
                 self._n_docs.pop(table, None)
-            for reg in registries:
-                for k in [k for k in reg if k[0] == table]:
-                    del reg[k]
-            for reg, key, pinned in snap["indexes"]:
-                reg[key] = pinned
-            for k in [k for k in self._ivf if k[0] == table]:
-                del self._ivf[k]
-            self._ivf.update(snap.get("ivf", {}))
+            self._swap_indexes(table, snap["indexes"])
             return self.search(table, query, default_field=default_field,
                                limit=limit, search_after=search_after,
                                _cursor=_cursor)
@@ -4791,13 +4667,13 @@ class SearchEngine:
                 self._n_docs[table] = saved_nd
             else:
                 self._n_docs.pop(table, None)
-            for reg in registries:
-                for k in [k for k in reg if k[0] == table]:
-                    del reg[k]
-                reg.update(saved_entries[id(reg)])
-            for k in [k for k in self._ivf if k[0] == table]:
-                del self._ivf[k]
-            self._ivf.update(saved_ivf)
+            self._swap_indexes(table, saved_indexes)
+
+    def _swap_indexes(self, table: str, entries: dict) -> None:
+        """Replace the registry entries of ``table`` (PIT pin/restore)."""
+        for k in [k for k in self._indexes if k[1] == table]:
+            del self._indexes[k]
+        self._indexes.update(entries)
 
     def open_scroll(self, table: str, query: str, size: int = 100,
                     default_field: str | None = None,
@@ -5255,9 +5131,9 @@ class SearchEngine:
                   .agg(F.count("*").cast("long").alias("term_freq")))
         if not term_statistics:
             return tv.orderBy(F.asc("token"))
-        if (table, fld) not in self._postings:
+        if self._state("postings", table, fld) is None:
             self.build_postings_index(table, fld)
-        view = self._postings[(table, fld)].view()
+        view = self._state("postings", table, fld).view()
         tokens = [r["token"] for r in tv.select("token").collect()]
         if not tokens:
             return tv.select(
@@ -5302,9 +5178,9 @@ class SearchEngine:
                   .agg(F.count("*").cast("long").alias("term_freq")))
         if not term_statistics:
             return tv.orderBy(F.asc("doc"), F.asc("token"))
-        if (table, fld) not in self._postings:
+        if self._state("postings", table, fld) is None:
             self.build_postings_index(table, fld)
-        view = self._postings[(table, fld)].view()
+        view = self._state("postings", table, fld).view()
         tokens = [r["token"]
                   for r in tv.select("token").distinct().collect()]
         if not tokens:
@@ -5452,7 +5328,7 @@ class SearchEngine:
                 "terms_enum size must be an integer in [1, 10000]")
         docs = self._docs[table]
         fld = field or Compiler(docs).default_field
-        if (table, fld) not in self._postings:
+        if self._state("postings", table, fld) is None:
             self.build_postings_index(table, fld)
         d = self._term_dictionary(table, fld)
         pref = string.lower()
@@ -5615,9 +5491,9 @@ class SearchEngine:
         by the phrase's token count."""
         docs = self._docs[table]
         fld = field or Compiler(docs).default_field
-        if (table, fld) not in self._postings:
+        if self._state("postings", table, fld) is None:
             self.build_postings_index(table, fld)
-        view = self._postings[(table, fld)].view()
+        view = self._state("postings", table, fld).view()
         tokens = [t for t in re.split(r"\W+", text.lower()) if t]
         known = {r["token"] for r in
                  (view.where(F.col("token").isin(*tokens))
@@ -5704,9 +5580,9 @@ class SearchEngine:
         docs = self._docs[table]
         _, spec = self.catalog.get(table)
         fld = field or Compiler(docs).default_field
-        if (table, fld) not in self._postings:
+        if self._state("postings", table, fld) is None:
             self.build_postings_index(table, fld)
-        view = self._postings[(table, fld)].view()
+        view = self._state("postings", table, fld).view()
         # phase 1 — the source doc's term vector: tokenize the ONE source
         # document (key-filtered scan — the predicate pushes into the
         # parquet/cached documents scan) with the postings analyzer, so
@@ -6341,7 +6217,16 @@ class SearchEngine:
                         F.min(glon).alias(f"{m.name}_left"),
                         F.min(glat).alias(f"{m.name}_bottom"),
                         F.max(glon).alias(f"{m.name}_right")]
-            c = comp.resolve(m.field).col
+            from pyspark.sql import types as T
+
+            ref = comp.resolve(m.field)
+            c = ref.col
+            if m.kind in ("avg", "sum", "stats", "extended_stats") \
+                    and isinstance(ref.dtype, (T.ArrayType, T.MapType,
+                                               T.StructType)):
+                raise es_dsl.DslError(
+                    f"{m.kind} aggregation needs a numeric field, got "
+                    f"{ref.dtype.simpleString()} for {m.field!r}")
             if m.missing is not None:
                 # ES metric `missing` (r12): nulls substitute instead
                 # of dropping — one coalesce ahead of the aggregate

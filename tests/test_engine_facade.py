@@ -117,7 +117,7 @@ def test_postings_maintained_incrementally_under_mutations(engine, spark):
     engine.register(emails, TableSpec("em_inc", ["id"]), build=True)
     se = engine.search_engine
     se.build_postings_index("em_inc", "body", materialize=True)
-    state = se._postings[("em_inc", "body")]
+    state = se.index_entry("postings", "em_inc", "body").state
     base_before = state.base
 
     # served from postings before the mutation
@@ -164,7 +164,7 @@ def test_postings_overlay_folds_after_cadence(engine, spark):
     engine.register(emails, TableSpec("em_fold", ["id"]), build=True)
     se = engine.search_engine
     se.build_postings_index("em_fold", "body", materialize=True)
-    state = se._postings[("em_fold", "body")]
+    state = se.index_entry("postings", "em_fold", "body").state
     state.fold_every = 2
     base_before = state.base
     for i in range(2):
@@ -210,7 +210,7 @@ def test_stream_mutations_keep_postings_served(engine, spark, tmp_path):
     engine.register(emails, TableSpec("em_stream", ["id"]), build=True)
     se = engine.search_engine
     se.build_postings_index("em_stream", "body", materialize=True)
-    state = se._postings[("em_stream", "body")]
+    state = se.index_entry("postings", "em_stream", "body").state
     base_before = state.base
 
     src_dir = str(tmp_path / "mut_src")
@@ -245,7 +245,7 @@ def test_postings_delta_composite_key(engine, spark):
     engine.register(df, TableSpec("comp_mut", ["pk"], ["ck"]), build=True)
     se = engine.search_engine
     se.build_postings_index("comp_mut", "body", materialize=True)
-    state = se._postings[("comp_mut", "body")]
+    state = se.index_entry("postings", "comp_mut", "body").state
     base_before = state.base
     engine.apply_mutations("comp_mut", spark.createDataFrame(
         [(_ts(1), "update", 1, 1, "delta beta beta"),
@@ -272,7 +272,7 @@ def test_maintain_refreshes_search_view(engine, spark):
     engine.register(emails, spec, build=True)
     se = engine.search_engine
     se.build_postings_index("em_maint", "body", materialize=True)
-    state = se._postings[("em_maint", "body")]
+    state = se.index_entry("postings", "em_maint", "body").state
     base_before = state.base
     assert engine.search(
         "em_maint", "#options:load-rows=false#body:cassandra").count() == 1
@@ -306,7 +306,7 @@ def test_phrase_index_maintained_incrementally_under_mutations(engine, spark):
     engine.register(emails, TableSpec("em_ph", ["id"]), build=True)
     se = engine.search_engine
     se.build_phrase_index("em_ph", "body", materialize=True)
-    state = se._positional[("em_ph", "body")]
+    state = se.index_entry("positional", "em_ph", "body").state
     base_before = state.base
 
     q = '#options:load-rows=false#body:"cassandra world"'
@@ -354,8 +354,8 @@ def test_flush_and_attach_postings_disk_lifecycle(engine, spark, tmp_path):
     want_pre = sorted((r["id"], r["_score"])
                       for r in engine.search("em_fl", q).collect())
     try:
-        name1 = se.flush_postings("em_fl", "body", str(tmp_path / "pf"))
-        st = se._postings[("em_fl", "body")]
+        name1, = se.flush_indexes("em_fl", str(tmp_path / "pf"))["postings"]
+        st = se.index_entry("postings", "em_fl", "body").state
         assert st.delta is None and st.dead is None   # overlay empty
         out = engine.search("em_fl", q)
         assert "regexp_extract_all" not in _plan(out)
@@ -375,9 +375,9 @@ def test_flush_and_attach_postings_disk_lifecycle(engine, spark, tmp_path):
         assert got == {"a", "d"}
 
         # second flush: new generation, overlay folded to disk
-        name2 = se.flush_postings("em_fl", "body", str(tmp_path / "pf"))
+        name2, = se.flush_indexes("em_fl", str(tmp_path / "pf"))["postings"]
         assert name2 != name1
-        st2 = se._postings[("em_fl", "body")]
+        st2 = se.index_entry("postings", "em_fl", "body").state
         assert st2.delta is None
         assert {r["id"] for r in engine.search("em_fl", q).collect()} == \
             {"a", "d"}
@@ -385,15 +385,16 @@ def test_flush_and_attach_postings_disk_lifecycle(engine, spark, tmp_path):
         # restart path: a fresh engine attaches the durable table
         se2 = SearchEngine(spark)
         se2.register(emails, TableSpec("em_fl2", ["id"]))
-        se2.attach_postings("em_fl2", "body", name2)
+        se2.attach_indexes("em_fl2", str(tmp_path / "pf"))
         out2 = se2.search("em_fl2", q, default_field="body")
         assert "regexp_extract_all" not in _plan(out2)
         # doc 'd' has no base row in the fresh snapshot, but fake-row mode
         # returns index hits directly — both index docs surface
         assert {r["id"] for r in out2.collect()} == {"a", "d"}
     finally:
-        for g in range(3):
-            spark.sql(f"DROP TABLE IF EXISTS postings_em_fl_body_g{g}")
+        for t in ("em_fl", "em_fl2"):
+            for g in range(3):
+                spark.sql(f"DROP TABLE IF EXISTS postings_{t}_body_g{g}")
 
 
 def test_maintain_flushes_postings(engine, spark, tmp_path):
@@ -410,7 +411,7 @@ def test_maintain_flushes_postings(engine, spark, tmp_path):
         report = engine.maintain(
             "em_mf", flush_postings_path=str(tmp_path / "flush"))
         assert report["postings_flushed"] == ["postings_em_mf_body_g0"]
-        st = se._postings[("em_mf", "body")]
+        st = se.index_entry("postings", "em_mf", "body").state
         assert st.delta is None and st.dead is None
         out = engine.search("em_mf", "#options:load-rows=false#body:cassandra")
         assert {r["id"] for r in out.collect()} == {"a"}
@@ -443,8 +444,9 @@ def test_flush_indexes_covers_all_kinds_and_reattaches(engine, spark, tmp_path):
         report = se.flush_indexes("em_fi", str(tmp_path / "fi"))
         assert report["postings"] and report["positional"] and \
             report["presence"]
-        for reg in (se._postings, se._positional, se._presence):
-            st = reg[("em_fi", "body" if reg is not se._presence else "src")]
+        for kind, f in (("postings", "body"), ("positional", "body"),
+                        ("presence", "src")):
+            st = se.index_entry(kind, "em_fi", f).state
             assert st.delta is None and st.dead is None
         out_p = engine.search("em_fi", qp)
         assert "regexp_extract_all" not in _plan(out_p)
@@ -456,8 +458,7 @@ def test_flush_indexes_covers_all_kinds_and_reattaches(engine, spark, tmp_path):
         # restart: fresh engine attaches the flushed directories
         se2 = SearchEngine(spark)
         se2.register(emails, TableSpec("em_fi2", ["id"]))
-        se2.attach_phrase_index("em_fi2", "body", report["positional"][0])
-        se2.attach_presence_index("em_fi2", "src", report["presence"][0])
+        se2.attach_indexes("em_fi2", str(tmp_path / "fi"))
         out2 = se2.search("em_fi2", qp, default_field="body")
         assert "regexp_extract_all" not in _plan(out2)
         assert sorted((r["id"], r["_score"])
@@ -466,8 +467,8 @@ def test_flush_indexes_covers_all_kinds_and_reattaches(engine, spark, tmp_path):
                       se2.search("em_fi2", qe, default_field="body")
                       .collect()) == want_e
     finally:
-        for g in range(2):
-            spark.sql(f"DROP TABLE IF EXISTS postings_em_fi_body_g{g}")
+        for t in ("em_fi", "em_fi2"):
+            spark.sql(f"DROP TABLE IF EXISTS postings_{t}_body_g0")
 
 
 def test_all_index_kinds_follow_streaming_mutations(engine, spark, tmp_path):
@@ -484,12 +485,10 @@ def test_all_index_kinds_follow_streaming_mutations(engine, spark, tmp_path):
     se.build_phrase_index("em_stream", "body", materialize=True)
     se.build_presence_index("em_stream", "src", materialize=True)
     se.build_range_index("em_stream", "n", materialize=True)
-    bases = {k: reg[("em_stream", f)].base
-             for k, (reg, f) in {
-                 "post": (se._postings, "body"),
-                 "pos": (se._positional, "body"),
-                 "pres": (se._presence, "src"),
-                 "rng": (se._range, "n")}.items()}
+    kinds = {"post": ("postings", "body"), "pos": ("positional", "body"),
+             "pres": ("presence", "src"), "rng": ("range", "n")}
+    bases = {k: se.index_entry(kind, "em_stream", f).state.base
+             for k, (kind, f) in kinds.items()}
 
     src_dir = str(tmp_path / "mut")
     spark.createDataFrame(
@@ -515,7 +514,5 @@ def test_all_index_kinds_follow_streaming_mutations(engine, spark, tmp_path):
         assert "regexp_extract_all" not in _plan(out), query
         assert {r["id"] for r in out.collect()} == want, query
     # incremental: every base survived the stream
-    assert se._postings[("em_stream", "body")].base is bases["post"]
-    assert se._positional[("em_stream", "body")].base is bases["pos"]
-    assert se._presence[("em_stream", "src")].base is bases["pres"]
-    assert se._range[("em_stream", "n")].base is bases["rng"]
+    for k, (kind, f) in kinds.items():
+        assert se.index_entry(kind, "em_stream", f).state.base is bases[k]

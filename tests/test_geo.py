@@ -293,7 +293,7 @@ def test_geo_index_incremental_under_delta(spark):
     eng = SearchEngine(spark)
     eng.register(base_df, spec)
     eng.build_geo_index("gidx_d", "loc", precision=4, materialize=True)
-    state = eng._geo[("gidx_d", "loc")]
+    state = eng.index_entry("geo", "gidx_d", "loc").state
     base_before = state.base
     base_ids, _ = _ids(eng, "gidx_d", QD)
     new = (spark.createDataFrame([(99, "a", 9.0)],
@@ -313,9 +313,9 @@ def test_geo_index_incremental_under_delta(spark):
 def test_geo_index_precision_rebuild_and_validation(spark):
     eng = _mk_geo_engine(spark, "gidx_p")
     eng.build_geo_index("gidx_p", "loc", precision=3)
-    assert eng._geo_prec[("gidx_p", "loc")] == 3
+    assert eng.index_entry("geo", "gidx_p", "loc").params["precision"] == 3
     eng.build_geo_index("gidx_p", "loc", precision=5)
-    assert eng._geo_prec[("gidx_p", "loc")] == 5
+    assert eng.index_entry("geo", "gidx_p", "loc").params["precision"] == 5
     got, _ = _ids(eng, "gidx_p", QD)
     assert got == [1, 2, 3]
     with pytest.raises(ValueError, match="precision"):

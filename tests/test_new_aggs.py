@@ -2186,6 +2186,20 @@ def test_fuzz_regressions_typed_errors(agg_engine):
                      {"t": {"terms": {"field": "g", "size": 1}}})) == 1
 
 
+def test_numeric_metric_on_complex_field_typed(spark):
+    # exec_fuzz catch: stats/avg/sum over an array<struct> column leaked
+    # Spark's AnalysisException out of search_aggs
+    eng = SearchEngine(spark)
+    eng.register(spark.createDataFrame(
+        [(1, [("a", 1)])], "id int, tags array<struct<k:string,v:int>>"),
+        TableSpec("aggtags", ["id"]))
+    for kind in ("avg", "sum", "stats", "extended_stats"):
+        q = json.dumps({"query": {"match_all": {}},
+                        "aggs": {"m": {kind: {"field": "tags"}}}})
+        with pytest.raises(DslError, match="needs a numeric field"):
+            eng.search_aggs("aggtags", q).collect()
+
+
 def test_phrase_prefix_non_text_field_typed(agg_engine):
     # r14.75 fuzz catch: the max_expansions dictionary probe ran the
     # analyzer on a non-text column before compile could reject it

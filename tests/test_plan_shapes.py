@@ -152,7 +152,8 @@ def test_mlt_df_stage_is_token_filtered(parquet_engine):
     document's term vector — never a corpus-wide vocabulary aggregation
     per MLT call (the r04 judge's one `weak` mark)."""
     parquet_engine.build_postings_index("documents_plan", "text")
-    view = parquet_engine._postings[("documents_plan", "text")].view()
+    view = parquet_engine.index_entry("postings", "documents_plan",
+                                      "text").state.view()
     dfreq = parquet_engine._mlt_dfreq(view, ["spark", "query"])
     plan = _plan(dfreq)
     assert "token" in plan and " IN (spark,query)" in plan

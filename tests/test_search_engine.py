@@ -373,7 +373,7 @@ def test_postings_invalidated_on_reindex(spark):
     # settings reload also invalidates
     eng.build_postings_index("emails_inv", "body")
     eng.search("emails_inv", "#update#{}#")
-    assert ("emails_inv", "body") not in eng._postings
+    assert eng.index_entry("postings", "emails_inv", "body") is None
 
 
 def test_postings_or_same_field_is_single_lookup(indexed_engine, spark):
@@ -522,7 +522,7 @@ def test_presence_index_incremental_under_delta(spark):
     spec = TableSpec("pres_delta", ["id"])
     eng.register(spark.createDataFrame(rows, schema), spec)
     eng.build_presence_index("pres_delta", "src", materialize=True)
-    state = eng._presence[("pres_delta", "src")]
+    state = eng.index_entry("presence", "pres_delta", "src").state
     base_before = state.base
 
     new_rows = [("p1", "t1b", None),   # src goes null → retired
@@ -651,7 +651,7 @@ def test_range_index_incremental_under_delta(spark):
     spec = TableSpec("rg_delta", ["id"])
     eng.register(spark.createDataFrame(rows, schema_), spec)
     eng.build_range_index("rg_delta", "n", materialize=True)
-    state = eng._range[("rg_delta", "n")]
+    state = eng.index_entry("range", "rg_delta", "n").state
     base_before = state.base
 
     new_rows = [("r1", "a", 99),   # moves out of [10, 30]
@@ -3077,7 +3077,7 @@ def test_span_index_flush_attach_roundtrip(spark, tmp_path):
     cold.register(spark.createDataFrame(
         SPAN6_ROWS, "id string, body string"),
         TableSpec("span6f", ["id"]))
-    cold.attach_span_index("span6f", "body", report["span"][0])
+    cold.attach_index("span6f", "span", "body", report["span"][0])
     after = sorted((r["id"], r["_score"]) for r in cold.search(
         "span6f", _span_q(1, "true"), default_field="body").collect())
     assert after == before

@@ -69,12 +69,20 @@ def main() -> int:
         df.withColumn("ts", F.col("ts").cast("timestamp")).cache(),
         TableSpec("fz", ["id"]))
     # a second index so "fz*" exercises the multi-index merge +
-    # pagination decomposition (r15) — union-by-name schema, shared key
+    # pagination decomposition (r15) — union-by-name schema, shared key.
+    # fz2 carries the postings/phrase/presence/range/span indexes while
+    # fz stays unindexed, so the same bodies fuzz both the index-served
+    # and the scan routes
     eng.register(
         spark.createDataFrame(
             [(9, "spark only here", 5), (10, None, None)],
             "id int, body string, n int").cache(),
         TableSpec("fz2", ["id"]))
+    eng.build_postings_index("fz2", "body")
+    eng.build_phrase_index("fz2", "body")
+    eng.build_presence_index("fz2", "body")
+    eng.build_range_index("fz2", "n")
+    eng.build_span_index("fz2", "body")
 
     fields = st.sampled_from(["body", "n", "ts", "id", "emb", "tags",
                               "tags.k", "tags.v", "nope"])
