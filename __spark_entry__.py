@@ -3028,7 +3028,7 @@ def q_stream_replay(spark, sf_dir):
     import tempfile as _tempfile
 
     from cassandra_es_index_spark.streaming.indexer import (
-        apply_mutation_batch,
+        apply_mutation_batch, release_batch,
     )
 
     key = _ck(spark, sf_dir, "stream_replay")
@@ -3066,15 +3066,15 @@ def q_stream_replay(spark, sf_dir):
                           F.lit(None).cast("string").alias("event_type"),
                           F.lit("empty_update").alias("op"),
                           (F.unix_seconds("ts") + 3 * h).alias("mts")))
-        apply_mutation_batch(
+        release_batch(apply_mutation_batch(
             store, b2_upd.unionByName(b2_del).unionByName(b2_emp),
-            ts_col="mts")
+            ts_col="mts"))
         b3 = (ev.where(F.col("event_id") % 14 == 0)
               .select("event_id",
                       (F.col("value") + 5000).alias("value"),
                       "event_type", F.lit("insert").alias("op"),
                       (F.unix_seconds("ts") + 4 * h).alias("mts")))
-        apply_mutation_batch(store, b3, ts_col="mts")
+        release_batch(apply_mutation_batch(store, b3, ts_col="mts"))
         _CACHE[key] = store
     return _CACHE[key].read().select("event_id", "value", "event_type")
 

@@ -26,7 +26,7 @@ from cassandra_es_index_spark.docmodel import base_rows_view, build_documents
 from cassandra_es_index_spark.indexstore import ParquetIndexStore
 from cassandra_es_index_spark.search import SearchEngine
 from cassandra_es_index_spark.streaming.indexer import (
-    MutationIndexer, apply_mutation_batch,
+    MutationIndexer, apply_mutation_batch, release_batch,
 )
 
 
@@ -102,7 +102,9 @@ class CassandraEsIndexEngine:
 
         With ``changes`` (the batch returned by ``apply_mutation_batch``),
         postings indexes are maintained INCREMENTALLY: only the batch is
-        tokenized and only its doc-ids' postings rows are replaced, so
+        tokenized — its documents built once, from the pinned batch, which
+        is released once the index deltas are materialized — and only its
+        doc-ids' postings rows are replaced, so
         term search stays index-served under a steady mutation stream
         (the reference's ES updates its inverted index per-doc the same
         way, ref ElasticIndex.java:603-614). Without ``changes`` (e.g. a
@@ -114,20 +116,22 @@ class CassandraEsIndexEngine:
         registered base snapshot — still load a row (the reference reads
         them from Cassandra, which holds the write)."""
         store = self._stores[table]
-        if not store.exists():
-            return
-        resolved = store.read().drop("segment")
-        base, spec = self.search_engine.catalog.get(table)
-        if changes is not None and self.search_engine.has_postings(table):
-            upserts = changes.get("upserts")
-            new_docs = (build_documents(upserts, spec)
-                        if upserts is not None else None)
-            self.search_engine.apply_delta(
-                table, resolved, new_docs, changes.get("deletes"))
-        else:
-            self.search_engine.set_documents(table, resolved)
-        self.search_engine.set_row_source(
-            table, self._row_source_view(base, spec, resolved))
+        if store.exists():
+            resolved = store.read().drop("segment")
+            base, spec = self.search_engine.catalog.get(table)
+            if changes is not None and self.search_engine.has_postings(table):
+                upserts = changes.get("upserts")
+                new_docs = (build_documents(upserts, spec)
+                            if upserts is not None else None)
+                self.search_engine.apply_delta(
+                    table, resolved, new_docs, changes.get("deletes"))
+            else:
+                self.search_engine.set_documents(table, resolved)
+            self.search_engine.set_row_source(
+                table, self._row_source_view(base, spec, resolved))
+        if changes is not None:
+            # the index deltas are materialized: the batch pin is done
+            release_batch(changes)
 
     def _row_source_view(self, base: DataFrame, spec: TableSpec,
                          resolved_docs: DataFrame) -> DataFrame:

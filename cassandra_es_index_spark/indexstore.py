@@ -39,6 +39,7 @@ import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from cassandra_es_index_spark.catalog import TableSpec
 from cassandra_es_index_spark.docmodel import (
@@ -154,7 +155,9 @@ class ParquetIndexStore:
         base = raw.where(F.col(GEN) == 0)
         delta = raw.where(F.col(GEN) > 0)
         delta_ids = delta.select(DOC_ID).distinct()
-        w = Window.partitionBy(DOC_ID).orderBy(F.desc(GEN))
+        # a generation's tombstones rank first: a same-generation upsert
+        # and tombstone of one _id resolve to deleted, deterministically
+        w = Window.partitionBy(DOC_ID).orderBy(F.desc(GEN), F.desc(DELETED))
         latest = (delta.withColumn("_rn", F.row_number().over(w))
                        .where(F.col("_rn") == 1)
                        .where(~F.col(DELETED))
@@ -168,6 +171,42 @@ class ParquetIndexStore:
 
     # -- upsert / delete (S3, S5) -------------------------------------------
 
+    def write_batch(self, batch: DataFrame | None,
+                    ids: DataFrame | None) -> None:
+        """Append one write batch as ONE delta generation: ``batch``'s
+        upsert documents and a tombstone for each ``_id`` in ``ids``, in a
+        single parquet write. The store schema is read once (schema check
+        and tombstone columns alike) and auto-compaction is checked once,
+        so ``delta-compact-gens`` counts batches. Should a batch upsert and
+        delete one ``_id``, the tombstone wins (``_resolve`` ranks a
+        generation's tombstones first). On a store with no files yet, the
+        documents become the gen-0 base and the tombstones shadow
+        nothing."""
+        docs = None if batch is None else self._batch_docs(batch)
+        if not self.exists():
+            if docs is not None:
+                if ids is not None:
+                    docs = docs.join(ids.select(DOC_ID), DOC_ID, "left_anti")
+                (self._tag(docs, 0).write.mode("overwrite")
+                     .partitionBy(SEGMENT).parquet(self.path))
+                self._set_gen(0)
+            return
+        if docs is None and ids is None:
+            return
+        stored = self._raw().schema
+        if docs is not None:
+            self._check_schema(docs, stored)
+        gen = self._next_gen()
+        parts = []
+        if docs is not None:
+            parts.append(self._tag(docs, gen))
+        if ids is not None:
+            parts.append(self._tag(self._tombstones(ids, stored), gen,
+                                   deleted=True))
+        out = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+        out.write.mode("append").partitionBy(SEGMENT).parquet(self.path)
+        self._maybe_autocompact()
+
     def upsert(self, batch: DataFrame) -> None:
         """``doc_as_upsert`` semantics (ref ElasticIndex.java:603-614):
         replace-or-insert by ``_id``. Appends one delta generation —
@@ -179,6 +218,12 @@ class ParquetIndexStore:
         ``batch`` may be a base-table slice (documents get built here) or
         already-built documents carrying ``_id`` (e.g. from a sink
         fallback)."""
+        self.write_batch(batch, None)
+
+    def _batch_docs(self, batch: DataFrame) -> DataFrame:
+        """Upsert documents of a write batch: built from a base-table
+        slice unless they already carry ``_id``, segment-assigned, one row
+        per ``_id``."""
         if DOC_ID not in batch.columns:
             missing = [k for k in self.spec.key_columns
                        if k not in batch.columns]
@@ -192,17 +237,7 @@ class ParquetIndexStore:
         docs = batch if DOC_ID in batch.columns else build_documents(batch, self.spec)
         if SEGMENT not in docs.columns:
             docs = docs.withColumn(SEGMENT, self.segment_column())
-        docs = self._dedupe_batch(docs)
-        if not self.exists():
-            (self._tag(docs, 0).write.mode("overwrite")
-                 .partitionBy(SEGMENT).parquet(self.path))
-            self._set_gen(0)
-            return
-        self._check_schema(docs)
-        gen = self._next_gen()
-        (self._tag(docs, gen).write.mode("append")
-             .partitionBy(SEGMENT).parquet(self.path))
-        self._maybe_autocompact()
+        return self._dedupe_batch(docs)
 
     @staticmethod
     def _dedupe_batch(docs: DataFrame) -> DataFrame:
@@ -218,48 +253,39 @@ class ParquetIndexStore:
                     .where(F.col("_batch_rn") == 1)
                     .drop("_batch_rn"))
 
-    def _check_schema(self, docs: DataFrame) -> None:
+    def _check_schema(self, docs: DataFrame, stored: T.StructType) -> None:
         """Fail fast when an upsert batch's schema diverges from the store.
 
         ``spark.read.parquet`` without mergeSchema resolves the table schema
         from one representative footer, so a divergent batch would be
         written but its extra columns silently dropped (or read as null) on
         later reads — better to reject it at the write."""
-        stored = {(f.name, f.dataType.simpleString())
-                  for f in self._raw().schema.fields
-                  if f.name not in (GEN, DELETED, SEGMENT)}
+        have = {(f.name, f.dataType.simpleString()) for f in stored.fields
+                if f.name not in (GEN, DELETED, SEGMENT)}
         incoming = {(f.name, f.dataType.simpleString())
                     for f in docs.schema.fields if f.name != SEGMENT}
-        if stored != incoming:
-            extra = sorted(n for n, _ in incoming - stored)
-            missing = sorted(n for n, _ in stored - incoming)
+        if have != incoming:
+            extra = sorted(n for n, _ in incoming - have)
+            missing = sorted(n for n, _ in have - incoming)
             raise ValueError(
                 f"upsert batch schema mismatch for {self.spec.name!r}: "
                 f"batch-only {extra}, store-only {missing}")
 
-    def _tombstone(self, ids: DataFrame) -> None:
-        """Append tombstone rows (id-only, full doc schema nulled) under the
-        dedicated tombstone segment."""
-        sample = self._raw().drop(GEN, DELETED, SEGMENT)
-        gen = self._next_gen()
-        stones = ids.select(DOC_ID)
-        for f_def in sample.schema.fields:
-            if f_def.name != DOC_ID:
-                stones = stones.withColumn(
-                    f_def.name, F.lit(None).cast(f_def.dataType))
-        stones = (self._tag(stones.select(*[f.name for f in sample.schema.fields]),
-                            gen, deleted=True)
-                  .withColumn(SEGMENT, F.lit(TOMBSTONE_SEG)))
-        stones.write.mode("append").partitionBy(SEGMENT).parquet(self.path)
-        self._maybe_autocompact()
+    @staticmethod
+    def _tombstones(ids: DataFrame, stored: T.StructType) -> DataFrame:
+        """Tombstone rows for ``ids``: the document schema with every field
+        but ``_id`` nulled, under the dedicated tombstone segment."""
+        return ids.select(*[
+            (F.col(DOC_ID) if f.name == DOC_ID else F.lit(None))
+            .cast(f.dataType).alias(f.name)
+            for f in stored.fields if f.name not in (GEN, DELETED, SEGMENT)
+        ]).withColumn(SEGMENT, F.lit(TOMBSTONE_SEG))
 
     def delete_ids(self, ids: DataFrame) -> None:
         """Single-doc deletes by ``_id`` (ref ElasticIndex.java:642-649);
         missing ids are a no-op, like the reference accepting 404 — the
         tombstone simply shadows nothing."""
-        if not self.exists():
-            return
-        self._tombstone(ids)
+        self.write_batch(None, ids)
 
     def bulk(self, ndjson: str) -> list[dict]:
         """ES ``_bulk`` analogue (r13): the NDJSON action surface the
@@ -342,7 +368,6 @@ class ParquetIndexStore:
                              "schema derives from it)")
         drop = {DOC_ID, INDEXATION_FIELD, TTL_FIELD, SEGMENT, GEN,
                 DELETED}
-        import pyspark.sql.types as T
         base_fields = [f_ for f_ in sample.schema.fields
                        if f_.name not in drop]
         base_schema = T.StructType(base_fields)
@@ -474,12 +499,11 @@ class ParquetIndexStore:
 
         writes = [s for s in state.values() if s is not None]
         deletes = [d for d, s in state.items() if s is None]
-        if writes:
-            self.upsert(self.spark.createDataFrame(
-                [to_row(s) for s in writes], base_schema))
-        if deletes:
-            self.delete_ids(self.spark.createDataFrame(
-                [(d,) for d in deletes], f"{DOC_ID} string"))
+        self.write_batch(
+            self.spark.createDataFrame([to_row(s) for s in writes],
+                                       base_schema) if writes else None,
+            self.spark.createDataFrame([(d,) for d in deletes],
+                                       f"{DOC_ID} string") if deletes else None)
         return results
 
     def delete_where(self, predicate: Column) -> DataFrame | None:
@@ -505,7 +529,7 @@ class ParquetIndexStore:
                 f"{self.spec.name!r}: {e}") from e
         matches = (matched.select(DOC_ID).distinct()
                        .localCheckpoint(eager=True))
-        self._tombstone(matches)
+        self.write_batch(None, matches)
         return matches
 
     # -- TTL / retention (S6, W10, A2) --------------------------------------

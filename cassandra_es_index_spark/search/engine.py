@@ -319,11 +319,13 @@ class PostingsState:
               touched_ids: DataFrame | None) -> None:
         """Merge one mutation batch: retire all postings of the touched
         ids, append the batch's fresh postings. O(batch ∪ outstanding
-        overlay) — the base is never read or written."""
+        overlay) — the base is never read or written. ``touched_ids`` and
+        ``new_postings`` are projections of the caller's (pinned) batch,
+        so only the new ``dead`` and ``delta`` are materialized; they
+        must be before the caller releases that pin."""
         if touched_ids is None:
             return
-        touched = touched_ids.select(self.key).distinct().cache()
-        touched.count()
+        touched = touched_ids.select(self.key).distinct()
         old_delta, old_dead = self.delta, self.dead
         dead = touched if old_dead is None else (
             old_dead.unionByName(touched).distinct())
@@ -344,10 +346,8 @@ class PostingsState:
         else:
             self.delta = None
         for old in (old_delta, old_dead):
-            if old is not None and old is not touched:
+            if old is not None:
                 old.unpersist()
-        if old_dead is not None:  # touched was folded into the new dead set
-            touched.unpersist()
         self._pending += 1
         if self._pending >= self.fold_every and self.cache_base:
             self.fold()

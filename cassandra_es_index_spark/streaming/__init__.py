@@ -9,7 +9,7 @@ superset — absent in the reference, first-class here).
 """
 
 from cassandra_es_index_spark.streaming.indexer import (
-    MutationIndexer, apply_mutation_batch,
+    MutationIndexer, apply_mutation_batch, release_batch,
 )
 
-__all__ = ["MutationIndexer", "apply_mutation_batch"]
+__all__ = ["MutationIndexer", "apply_mutation_batch", "release_batch"]

@@ -8,8 +8,11 @@ from pyspark.sql import functions as F
 
 from cassandra_es_index_spark.catalog import TableSpec
 from cassandra_es_index_spark.docmodel import DOC_ID
+from cassandra_es_index_spark.engine import CassandraEsIndexEngine
 from cassandra_es_index_spark.indexstore import ParquetIndexStore
-from cassandra_es_index_spark.streaming import apply_mutation_batch
+from cassandra_es_index_spark.streaming import (
+    apply_mutation_batch, release_batch,
+)
 from cassandra_es_index_spark.streaming.indexer import MutationIndexer
 from cassandra_es_index_spark.streaming import windows as W
 
@@ -79,6 +82,136 @@ def test_analytic_mode_skips_deletes(spark, tmp_path):
     apply_mutation_batch(store, spark.createDataFrame(
         [(_ts(2), "partition_delete", "a", None, None)], MUT_SCHEMA))
     assert {r[DOC_ID] for r in store.read().collect()} == {"a"}
+
+
+# Two mutations of key "a" at one ts, after an insert of "a" at minute 1:
+# the W3 winner must not depend on the order the batch lists them in.
+EQUAL_TS_PAIRS = {
+    # among upserts the greater JSON row wins ("Y" > "X")
+    "update_update": ([("update", "X", 2), ("update", "Y", 2)], {"a": "Y"}),
+    # a partition delete wins its tie (tombstone wins)
+    "update_delete": ([("update", "X", 2), ("partition_delete", None, None)],
+                      {}),
+    # an empty update never hides an update
+    "update_empty": ([("update", "X", 2), ("empty_update", None, None)],
+                     {"a": "X"}),
+}
+
+
+@pytest.mark.parametrize("pair", sorted(EQUAL_TS_PAIRS))
+def test_equal_ts_winner_ignores_input_order(spark, tmp_path, pair):
+    mutations, want = EQUAL_TS_PAIRS[pair]
+    for i, order in enumerate((mutations, mutations[::-1])):
+        store = ParquetIndexStore(spark, str(tmp_path / f"idx{i}"),
+                                  TableSpec("emails", ["id"]))
+        for batch in ([(_ts(1), "insert", "a", "v1", 1)],
+                      [(_ts(2), op, "a", body, uid)
+                       for op, body, uid in order]):
+            release_batch(apply_mutation_batch(
+                store, spark.createDataFrame(batch, MUT_SCHEMA)))
+        got = {r[DOC_ID]: r["body"] for r in store.read().collect()}
+        assert got == want, [m[0] for m in order]
+
+
+SEED_ROWS = [(_ts(1), "insert", k, f"{k} seed", 1) for k in "abc"]
+MIXED_ROWS = [
+    (_ts(2), "update", "a", "a fresh", 2),
+    (_ts(2), "insert", "d", "d new", 3),
+    (_ts(2), "partition_delete", "b", None, None),
+    (_ts(2), "empty_update", "c", None, None),
+]
+
+
+def _rows(store):
+    return sorted((r[DOC_ID], r["body"], r["userid"])
+                  for r in store.read().collect())
+
+
+def test_mixed_batch_spends_one_generation(spark, tmp_path):
+    """Upserts and tombstones of one batch share one store generation and
+    read back the same rows as the two-batch route."""
+    one = _store(spark, tmp_path / "one")
+    release_batch(apply_mutation_batch(
+        one, spark.createDataFrame(SEED_ROWS, MUT_SCHEMA)))
+    gen = one.delta_stats()["gen"]
+    release_batch(apply_mutation_batch(
+        one, spark.createDataFrame(MIXED_ROWS, MUT_SCHEMA)))
+    assert one.delta_stats()["gen"] == gen + 1
+
+    two = _store(spark, tmp_path / "two")
+    for rows in (SEED_ROWS,
+                 [m for m in MIXED_ROWS if m[1] != "partition_delete"],
+                 [m for m in MIXED_ROWS if m[1] == "partition_delete"]):
+        release_batch(apply_mutation_batch(
+            two, spark.createDataFrame(rows, MUT_SCHEMA)))
+    assert two.delta_stats()["gen"] == gen + 2
+    assert _rows(one) == _rows(two) == [
+        ("a", "a fresh", 2), ("c", "c seed", 1), ("d", "d new", 3)]
+
+
+def test_same_generation_tombstone_wins(spark, tmp_path):
+    """An upsert and a tombstone of one _id in one generation resolve to
+    deleted, before and after compaction."""
+    store = _store(spark, tmp_path)
+    release_batch(apply_mutation_batch(
+        store, spark.createDataFrame(SEED_ROWS, MUT_SCHEMA)))
+    store.write_batch(
+        spark.createDataFrame([("a", "a again", 7), ("d", "d new", 3)],
+                              "id string, body string, userid int"),
+        spark.createDataFrame([("a",)], f"{DOC_ID} string"))
+    delta = (spark.read.parquet(store.path).where(F.col("_gen") > 0)
+             .select(DOC_ID, "_gen", "_deleted").collect())
+    assert sorted(tuple(r) for r in delta) == [
+        ("a", 1, False), ("a", 1, True), ("d", 1, False)]
+    assert [r[0] for r in _rows(store)] == ["b", "c", "d"]
+    store.compact_deltas()
+    assert [r[0] for r in _rows(store)] == ["b", "c", "d"]
+
+
+def _facade_with_postings(spark, tmp_path, table):
+    engine = CassandraEsIndexEngine(spark, str(tmp_path / "indexes"))
+    engine.register(
+        spark.createDataFrame([(k, f"{k} seed", 1) for k in "abc"],
+                              "id string, body string, userid int"),
+        TableSpec(table, ["id"]), build=True)
+    engine.search_engine.build_postings_index(table, "body",
+                                              materialize=True)
+    return engine
+
+
+def test_batch_source_evaluated_once(spark, tmp_path):
+    """The store write and the postings delta both read the pinned,
+    resolved batch: the batch's source runs once per apply_mutations."""
+    engine = _facade_with_postings(spark, tmp_path, "em_once")
+    evals = spark.sparkContext.accumulator(0)
+
+    def counted(key):
+        evals.add(1)
+        return key
+
+    # every evaluation of the batch needs its key column
+    batch = (spark.createDataFrame(MIXED_ROWS, MUT_SCHEMA)
+             .withColumn("id", F.udf(counted, "string")("id")))
+    engine.apply_mutations("em_once", batch)
+    assert evals.value == len(MIXED_ROWS)
+    assert _rows(engine.store("em_once")) == [
+        ("a", "a fresh", 2), ("c", "c seed", 1), ("d", "d new", 3)]
+    hits = engine.search("em_once", "#options:load-rows=false#body:fresh")
+    assert [r["id"] for r in hits.collect()] == ["a"]
+
+
+def test_batch_pin_released(spark, tmp_path):
+    """Five facade batches leave as many persistent RDDs as one."""
+    engine = _facade_with_postings(spark, tmp_path, "em_pins")
+    sizes = []
+    for i in range(5):
+        engine.apply_mutations("em_pins", spark.createDataFrame([
+            (_ts(i + 2), "update", "a", f"a take {i}", i),
+            (_ts(i + 2), "insert", f"n{i}", "new row", i),
+            (_ts(i + 2), "partition_delete", "b", None, None),
+        ], MUT_SCHEMA))
+        sizes.append(spark.sparkContext._jsc.getPersistentRDDs().size())
+    assert sizes[-1] == sizes[0], sizes
 
 
 def test_foreachbatch_stream(spark, tmp_path):
