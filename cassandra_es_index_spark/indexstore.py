@@ -76,6 +76,11 @@ class ParquetIndexStore:
         # auto-fold deltas once this many delta generations accumulate
         # (bounds read-time merge cost; 0 disables)
         self.compact_every = int(cfg.get("delta-compact-gens") or 32)
+        # the stored documents' schema (partition column excepted), kept
+        # from the first read so later reads skip the footer-inference
+        # job; `_check_schema` forbids drift, and every whole-store
+        # (re)write forgets it
+        self._schema: T.StructType | None = None
 
     # -- segment assignment -------------------------------------------------
 
@@ -128,6 +133,7 @@ class ParquetIndexStore:
             self.truncate()
         docs = build_documents(base, self.spec).withColumn(
             SEGMENT, self.segment_column())
+        self._schema = None
         (self._tag(docs, 0).write.mode("overwrite")
              .partitionBy(SEGMENT).parquet(self.path))
         self._set_gen(0)
@@ -137,7 +143,16 @@ class ParquetIndexStore:
             name.startswith(f"{SEGMENT}=") for name in os.listdir(self.path))
 
     def _raw(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        """The stored rows, generations and tombstones included. Only the
+        first read infers the schema from the files; the partition
+        column's type is inferred from the directories on each read,
+        since the tombstone segment changes it."""
+        if self._schema is not None:
+            return self.spark.read.schema(self._schema).parquet(self.path)
+        raw = self.spark.read.parquet(self.path)
+        self._schema = T.StructType(
+            [f for f in raw.schema.fields if f.name != SEGMENT])
+        return raw
 
     def read(self) -> DataFrame:
         """Resolved view: last writer per ``_id`` wins, tombstones dropped.
@@ -187,6 +202,7 @@ class ParquetIndexStore:
             if docs is not None:
                 if ids is not None:
                     docs = docs.join(ids.select(DOC_ID), DOC_ID, "left_anti")
+                self._schema = None
                 (self._tag(docs, 0).write.mode("overwrite")
                      .partitionBy(SEGMENT).parquet(self.path))
                 self._set_gen(0)
@@ -660,12 +676,14 @@ class ParquetIndexStore:
     # -- truncate / drop (S7, S8) -------------------------------------------
 
     def truncate(self) -> None:
+        self._schema = None
         if os.path.isdir(self.path):
             shutil.rmtree(self.path, ignore_errors=True)
         os.makedirs(self.path, exist_ok=True)
         self._set_gen(0)
 
     def drop(self) -> None:
+        self._schema = None
         shutil.rmtree(self.path, ignore_errors=True)
 
     # -- snapshot / restore (ES _snapshot analogue) ---------------------------
@@ -702,6 +720,7 @@ class ParquetIndexStore:
                 raise ValueError(f"store {self.path!r} already exists; "
                                  "pass overwrite=True to replace it")
             shutil.rmtree(self.path, ignore_errors=True)
+        self._schema = None
         shutil.copytree(src, self.path)
 
     # -- internals ----------------------------------------------------------

@@ -1809,7 +1809,8 @@ class SearchEngine:
         costs the same as page 1 (no deep scan-and-discard), which is why
         ES recommends it over ``from`` for deep pagination.
 
-        ``dtypes`` (one entry per ordering column, None = leave untyped)
+        ``dtypes`` (one entry per ordering column, None = leave untyped:
+        the ``_score`` component, which takes no boolean anchor)
         casts each anchor literal to its column's type — a JSON
         ``search_after`` body can only carry strings/numbers, so a date- or
         timestamp-ordered page needs the string anchor coerced explicitly
@@ -1848,6 +1849,12 @@ class SearchEngine:
                 pred = pred | (eq & cmp)
                 eq = eq & col.isNull()
                 continue
+            if isinstance(v, bool) and dtypes is not None \
+                    and dtypes[i] is None:
+                # the one untyped component is the score, a number
+                raise es_dsl.DslError(
+                    f"search_after value {i} anchors _score and must be "
+                    f"a number, got {v!r}")
             lit = F.lit(v)
             if dtypes is not None and dtypes[i] is not None:
                 lit = lit.cast(dtypes[i])

@@ -51,69 +51,6 @@ class DslError(ValueError):
     pass
 
 
-_METRIC_KINDS = ("avg", "sum", "min", "max", "value_count", "cardinality",
-                 "stats", "percentiles", "percentile_ranks",
-                 "extended_stats", "weighted_avg",
-                 "geo_centroid", "geo_bounds",
-                 "boxplot", "matrix_stats",
-                 "median_absolute_deviation", "string_stats",
-                 "top_metrics", "reverse_nested", "rate", "t_test",
-                 "geo_line", "scripted_metric")
-_BUCKET_KINDS = ("terms", "histogram", "date_histogram", "range",
-                 "geo_distance", "filters",
-                 "date_range", "significant_terms",
-                 "significant_text", "rare_terms",
-                 "multi_terms", "adjacency_matrix",
-                 "geotile_grid", "geohash_grid", "auto_date_histogram",
-                 "categorize_text", "variable_width_histogram",
-                 "frequent_item_sets", "ip_range", "ip_prefix")
-# single-bucket aggs: one bucket (doc_count + metric sub-aggs) whose doc
-# set is a transform of the match set
-_SINGLE_BUCKET_KINDS = ("filter", "missing", "global")
-# Per-kind parameter allowlists for the GENERIC bucket parse path (r11
-# — the specialized branches carry their own): a silently-dropped
-# `shard_size`/`time_zone`/`other_bucket` would change bucket contents
-# vs ES with no signal (the r9 leaf-params lesson, applied to aggs).
-# `keyed` is an accepted no-op where listed: the engine's flattened
-# frame is ALWAYS keyed by the key column, so both response shapes
-# read identically.
-_GENERIC_BUCKET_PARAMS = {
-    "terms": {"field", "size", "order", "missing", "min_doc_count",
-              "include", "exclude"},
-    "histogram": {"field", "interval", "offset", "missing",
-                  "min_doc_count", "extended_bounds", "hard_bounds"},
-    "date_histogram": {"field", "calendar_interval", "fixed_interval",
-                       "offset", "missing", "min_doc_count",
-                       "extended_bounds", "hard_bounds", "time_zone"},
-    "range": {"field", "ranges", "keyed"},
-    "date_range": {"field", "ranges", "keyed", "format"},
-    "filters": {"filters", "keyed", "other_bucket", "other_bucket_key"},
-    "adjacency_matrix": {"filters"},
-    "ip_range": {"field", "ranges", "keyed"},
-    "ip_prefix": {"field", "prefix_length", "is_ipv6",
-                  "append_prefix_length", "min_doc_count"},
-}
-# ES pipeline aggs computed OVER the bucket frame (single-level only):
-# value per bucket from a sibling metric (or "_count")
-_PIPELINE_KINDS = ("cumulative_sum", "derivative", "serial_diff",
-                   "moving_fn", "moving_avg", "bucket_script",
-                   "bucket_selector",
-                   "bucket_sort", "normalize", "cumulative_cardinality",
-                   "moving_percentiles")
-# ES normalize methods → the rescaling applied per bucket over its
-# parent's bucket frame (r9); z-score uses the POPULATION deviation
-# (extended_stats convention); a constant frame (max == min) or zero
-# sum yields null values (Spark 0-divisor), documented
-_NORMALIZE_METHODS = ("rescale_0_1", "rescale_0_100", "percent_of_sum",
-                      "mean", "z-score", "softmax")
-# sibling pipeline aggs: one value (or flattened stat set, r9) computed
-# OVER the bucket agg's frame, declared NEXT TO the bucket agg (ES
-# syntax), emitted as constant columns on every bucket row
-_SIBLING_KINDS = ("avg_bucket", "sum_bucket", "min_bucket", "max_bucket",
-                  "stats_bucket", "extended_stats_bucket",
-                  "percentiles_bucket", "bucket_correlation",
-                  "bucket_count_ks_test", "change_point")
-
 # bucket_script / bucket_selector scripts: the painless subset that is
 # pure arithmetic/comparison over params refs — translated to a Spark SQL
 # expression (params.x → the resolved bucket column)
@@ -1982,2050 +1919,6 @@ def _sort(spec: Any) -> tuple[tuple[str, bool, bool], ...]:
     return tuple(out)
 
 
-def _top_hits(name: str, body: Any) -> TopHits:
-    if not isinstance(body, dict):
-        raise DslError(f"top_hits agg {name!r} needs an object")
-    size = body.get("size", 3)
-    if not isinstance(size, int) or size <= 0:
-        raise DslError(f"top_hits agg {name!r}: size must be positive")
-    source = body.get("_source", [])
-    if isinstance(source, str):
-        source = [source]
-    if not isinstance(source, list) or not all(
-            isinstance(s, str) for s in source):
-        raise DslError(f"top_hits agg {name!r}: _source must be "
-                       "a field name or list of field names")
-    th_sort = _sort(body.get("sort"))
-    if any(isinstance(f, GeoSort) for f, *_ in th_sort):
-        raise DslError(f"top_hits agg {name!r}: _geo_distance sort is "
-                       "not supported inside top_hits (engine subset)")
-    return TopHits(size=size, sort=th_sort, source=tuple(source))
-
-
-def _ranges(name: str,
-            spec: Any) -> tuple[tuple[str, float | None, float | None], ...]:
-    """ES range-agg ``ranges``: each entry has ``from`` (inclusive)
-    and/or ``to`` (exclusive), and an optional ``key`` label (default is
-    ES's ``from-to`` with ``*`` for an open side)."""
-    if not isinstance(spec, list) or not spec:
-        raise DslError(f"range agg {name!r} needs a non-empty 'ranges' list")
-    out = []
-    for entry in spec:
-        if not isinstance(entry, dict) or \
-                ("from" not in entry and "to" not in entry):
-            raise DslError(f"range agg {name!r}: each range needs "
-                           "'from' and/or 'to'")
-        lo = entry.get("from")
-        hi = entry.get("to")
-        for v in (lo, hi):
-            if v is not None and not isinstance(v, (int, float)):
-                raise DslError(f"range agg {name!r}: bounds must be numbers")
-        key = entry.get("key") or (
-            f"{'*' if lo is None else float(lo)}"
-            f"-{'*' if hi is None else float(hi)}")
-        out.append((str(key),
-                    None if lo is None else float(lo),
-                    None if hi is None else float(hi)))
-    if len({k for k, *_ in out}) != len(out):
-        raise DslError(f"range agg {name!r}: duplicate range keys")
-    return tuple(out)
-
-
-def _date_ranges(name: str, spec: Any, key_format: Any = None,
-                 ) -> tuple[tuple[str | None, str | None,
-                                  str | None], ...]:
-    """ES date_range-agg ``ranges``: like ``_ranges`` but bounds are date
-    strings the engine casts to timestamps (``from`` inclusive, ``to``
-    exclusive). ES date-math bounds (``now-1M/d``, ``2024-01-01||+1w``)
-    pass through and resolve engine-side against the injectable ``now``
-    anchor (r6; ``search/datemath.py``) — ``from``/``to`` both round
-    DOWN, their gte/lt comparison semantics.
-
-    With a ``format`` (r14): unnamed ranges get a None key here and the
-    engine renders the ES-style default ``from-to`` label from the
-    RESOLVED bound instants through the format (so date-math bounds
-    label correctly); the format itself is validated at parse time."""
-    if not isinstance(spec, list) or not spec:
-        raise DslError(
-            f"date_range agg {name!r} needs a non-empty 'ranges' list")
-    if key_format is not None:
-        if not isinstance(key_format, str) or not key_format:
-            raise DslError(f"date_range agg {name!r}: format must be a "
-                           "non-empty string")
-        try:
-            datemath.key_formatter(key_format)
-        except datemath.DateMathError as e:
-            raise DslError(f"date_range agg {name!r}: {e}") from e
-    out = []
-    for entry in spec:
-        if not isinstance(entry, dict) or \
-                ("from" not in entry and "to" not in entry):
-            raise DslError(f"date_range agg {name!r}: each range needs "
-                           "'from' and/or 'to'")
-        lo = entry.get("from")
-        hi = entry.get("to")
-        for v in (lo, hi):
-            if v is not None and not isinstance(v, str):
-                raise DslError(
-                    f"date_range agg {name!r}: bounds must be date "
-                    "strings (optionally with ES date-math)")
-        key = entry.get("key")
-        if key is None and key_format is None:
-            key = (f"{'*' if lo is None else lo}"
-                   f"-{'*' if hi is None else hi}")
-        out.append((None if key is None else str(key), lo, hi))
-    named = [k for k, *_ in out if k is not None]
-    if len(set(named)) != len(named):
-        raise DslError(f"date_range agg {name!r}: duplicate range keys")
-    return tuple(out)
-
-
-def _ip_ranges(name: str,
-               spec: Any) -> tuple[tuple[str, float | None,
-                                         float | None], ...]:
-    """ES ip_range-agg ``ranges``: each entry has ``from`` (inclusive)
-    / ``to`` (exclusive) dotted-quad bounds, OR a CIDR ``mask``
-    (resolved to [network, broadcast+1) — ES's mask semantics). Bounds
-    resolve to their 32-bit values AT PARSE TIME (plan-time constants;
-    a 32-bit long is exact in the float the generic range machinery
-    carries). IPv4 only — IPv6 bounds typed-reject (engine subset).
-    Default keys are ES's ``from-to`` (``*`` for an open side) or the
-    mask string itself."""
-    import ipaddress
-    if not isinstance(spec, list) or not spec:
-        raise DslError(
-            f"ip_range agg {name!r} needs a non-empty 'ranges' list")
-
-    def ip_val(v: Any, side: str) -> int:
-        try:
-            addr = ipaddress.ip_address(str(v))
-        except ValueError:
-            raise DslError(f"ip_range agg {name!r}: {side} {v!r} is "
-                           "not a valid IP address") from None
-        if addr.version != 4:
-            raise DslError(f"ip_range agg {name!r}: IPv6 bounds are "
-                           "not supported (engine subset)")
-        return int(addr)
-
-    out = []
-    for entry in spec:
-        if not isinstance(entry, dict) \
-                or ("mask" not in entry
-                    and "from" not in entry and "to" not in entry):
-            raise DslError(f"ip_range agg {name!r}: each range needs "
-                           "'from'/'to' bounds or a 'mask'")
-        if "mask" in entry and ("from" in entry or "to" in entry):
-            raise DslError(f"ip_range agg {name!r}: 'mask' excludes "
-                           "'from'/'to' (ES contract)")
-        if "mask" in entry:
-            try:
-                net = ipaddress.ip_network(str(entry["mask"]),
-                                           strict=False)
-            except ValueError:
-                raise DslError(
-                    f"ip_range agg {name!r}: mask {entry['mask']!r} "
-                    "is not a valid CIDR block") from None
-            if net.version != 4:
-                raise DslError(f"ip_range agg {name!r}: IPv6 masks "
-                               "are not supported (engine subset)")
-            lo = int(net.network_address)
-            hi = int(net.broadcast_address) + 1
-            key = entry.get("key") or str(entry["mask"])
-        else:
-            lo = ip_val(entry["from"], "from") \
-                if "from" in entry else None
-            hi = ip_val(entry["to"], "to") if "to" in entry else None
-            key = entry.get("key") or (
-                f"{'*' if lo is None else entry['from']}"
-                f"-{'*' if hi is None else entry['to']}")
-        out.append((str(key),
-                    None if lo is None else float(lo),
-                    None if hi is None else float(hi)))
-    if len({k for k, *_ in out}) != len(out):
-        raise DslError(f"ip_range agg {name!r}: duplicate range keys")
-    return tuple(out)
-
-
-_RN_SUB_KINDS = ("avg", "sum", "min", "max", "value_count",
-                 "cardinality")
-
-
-def _metric(name: str, spec: dict[str, Any]) -> MetricAgg:
-    rn_sub_spec = None
-    if isinstance(spec, dict) and "reverse_nested" in spec \
-            and set(spec) == {"reverse_nested", "aggs"}:
-        # reverse_nested is the one metric-tier kind that may carry
-        # sub-aggs (ES: aggregation continues in parent scope) — peel
-        # them off before the exactly-one-kind check
-        rn_sub_spec = spec["aggs"]
-        spec = {"reverse_nested": spec["reverse_nested"]}
-    if not isinstance(spec, dict) or len(spec) != 1:
-        raise DslError(
-            f"metric agg {name!r} must have exactly one kind: {spec!r}")
-    (kind, body), = spec.items()
-    if kind not in _METRIC_KINDS:
-        raise DslError(f"unsupported metric agg {kind!r} (supported: "
-                       f"{', '.join(_METRIC_KINDS)})")
-    if kind == "rate":
-        # ES rate: bucket doc_count (or `field` sum) rescaled to a
-        # time unit of the PARENT date_histogram's span — the span
-        # itself is validated at execution where the parent is known.
-        # Fixed-span parents use one literal factor; calendar month/
-        # quarter/year parents (r12) use a per-bucket span column.
-        # Unit subset: second/minute/hour/day/week. `mode:
-        # value_count` typed-rejects.
-        if not isinstance(body, dict) or "unit" not in body:
-            raise DslError(f"rate agg {name!r} needs a 'unit'")
-        extra = set(body) - {"unit", "field", "mode"}
-        if extra:
-            raise DslError(f"rate agg {name!r}: unsupported params "
-                           f"{sorted(extra)} (engine subset)")
-        unit = str(body["unit"])
-        if unit not in ("second", "minute", "hour", "day", "week"):
-            raise DslError(
-                f"rate agg {name!r}: unit must be second/minute/hour/"
-                f"day/week (fixed spans — engine subset), got {unit!r}")
-        fld = body.get("field")
-        if fld is not None and not isinstance(fld, str):
-            raise DslError(f"rate agg {name!r}: field must be a string")
-        # ES rate mode (r12): sum (default) | value_count — the latter
-        # counts field VALUES instead of summing them
-        mode = body.get("mode", "sum")
-        if mode not in ("sum", "value_count"):
-            raise DslError(f"rate agg {name!r}: mode must be 'sum' or "
-                           f"'value_count', got {mode!r}")
-        if mode == "value_count" and not fld:
-            raise DslError(f"rate agg {name!r}: mode value_count "
-                           "needs a 'field' (ES contract)")
-        return MetricAgg(name=name, kind="rate", field=fld or "",
-                         unit=unit, rate_mode=str(mode))
-    if kind == "scripted_metric":
-        # ES scripted_metric, DECLARATIVELY (r12): the engine's subset
-        # translates the init/map/combine/reduce pipeline at parse time
-        # into ONE Spark SQL aggregate expression — the iterative
-        # per-doc script becomes sum() aggregates Catalyst combines
-        # map-side, which is both the 100 TB shape and deterministic
-        # where the general scripted_metric is not. Subset (all typed):
-        # - init:    `state.v = 0` assignments only (a nonzero init is
-        #   per-shard in ES — shard-count-dependent results — so it is
-        #   rejected, not emulated);
-        # - map:     `state.v += <arith>` statements over the
-        #   doc['f'].value painless arithmetic subset (no comparisons/
-        #   conditionals; null field values contribute nothing, the
-        #   sum-skips-nulls convention);
-        # - combine: `return <arith over state.*>`;
-        # - reduce:  a single-state identity (`return states[0]` or
-        #   the canonical `for (t in states) { s += t }` sum loop) —
-        #   this engine is ONE shard (the SamplerAgg premise), so the
-        #   combine arithmetic is exact over GLOBAL sums and reduce
-        #   has nothing to merge.
-        if not isinstance(body, dict):
-            raise DslError(f"scripted_metric agg {name!r} must be an "
-                           "object")
-        sm_required = {"init_script", "map_script", "combine_script",
-                       "reduce_script"}
-        sm_missing = sm_required - set(body)
-        if sm_missing:
-            raise DslError(f"scripted_metric agg {name!r} needs "
-                           f"{sorted(sm_missing)}")
-        sm_extra = set(body) - sm_required
-        if sm_extra:
-            raise DslError(
-                f"scripted_metric agg {name!r}: unsupported params "
-                f"{sorted(sm_extra)} (engine subset; params would make "
-                "the translation non-declarative)")
-
-        def stmts(s: str) -> list[str]:
-            return [x.strip() for x in str(s).split(";") if x.strip()]
-
-        sm_vars: set[str] = set()
-        for st in stmts(body["init_script"]):
-            m_i = _re.fullmatch(r"state\.(\w+)\s*=\s*0(?:\.0)?", st)
-            if m_i is None:
-                raise DslError(
-                    f"scripted_metric agg {name!r}: init must be "
-                    f"'state.<var> = 0' assignments, got {st!r} (a "
-                    "nonzero init is per-shard in ES — shard-count-"
-                    "dependent — and is rejected, not emulated)")
-            sm_vars.add(m_i.group(1))
-        if not sm_vars:
-            raise DslError(f"scripted_metric agg {name!r}: init_script "
-                           "initializes no state variables")
-        var_sums: dict[str, list[str]] = {v: [] for v in sm_vars}
-        for st in stmts(body["map_script"]):
-            m_m = _re.fullmatch(r"state\.(\w+)\s*\+=\s*(.+)", st)
-            if m_m is None:
-                raise DslError(
-                    f"scripted_metric agg {name!r}: map must be "
-                    f"'state.<var> += <arithmetic>' statements, got "
-                    f"{st!r}")
-            v, expr = m_m.group(1), m_m.group(2)
-            if v not in sm_vars:
-                raise DslError(
-                    f"scripted_metric agg {name!r}: map writes "
-                    f"uninitialized state.{v}")
-            if _re.search(r"==|!=|<=|>=|<|>|&&|\|\||!|\?", expr):
-                raise DslError(
-                    f"scripted_metric agg {name!r}: map expressions "
-                    "are arithmetic only (engine subset — no "
-                    "comparisons/conditionals)")
-            var_sums[v].append(_compile_doc_script(name, expr))
-        mapped = {v: es_ for v, es_ in var_sums.items() if es_}
-        if not mapped:
-            raise DslError(f"scripted_metric agg {name!r}: map_script "
-                           "updates no state variables")
-        m_c = _re.fullmatch(r"return\s+(.+?)\s*;?",
-                            str(body["combine_script"]).strip())
-        if m_c is None:
-            raise DslError(
-                f"scripted_metric agg {name!r}: combine must be "
-                "'return <arithmetic over state.*>'")
-        comb = m_c.group(1)
-        if _re.search(r"==|!=|<=|>=|<|>|&&|\|\||!|\?", comb):
-            raise DslError(
-                f"scripted_metric agg {name!r}: combine is arithmetic "
-                "only (engine subset)")
-
-        def comb_ref(m_v: "_re.Match[str]") -> str:
-            v = m_v.group(1)
-            if v not in mapped:
-                raise DslError(
-                    f"scripted_metric agg {name!r}: combine reads "
-                    f"state.{v}, which the map never updates")
-            return f"`__stv_{v}`"
-
-        comb_sub = _re.sub(r"state\.(\w+)", comb_ref, comb)
-        comb_sql = _arith_sql(name, comb_sub)
-        red = _re.sub(r"\s+", " ", str(body["reduce_script"]).strip())
-        red_ok = (
-            _re.fullmatch(r"return states\[0\] ?;?", red) or
-            _re.fullmatch(
-                r"double (\w+) = 0 ?; for \( ?(\w+) in states ?\) "
-                r"\{ ?\1 \+= \2 ?;? ?\} return \1 ?;?", red))
-        if not red_ok:
-            raise DslError(
-                f"scripted_metric agg {name!r}: reduce must be a "
-                "single-state identity — 'return states[0]' or the "
-                "canonical 'double s = 0; for (t in states) "
-                "{ s += t } return s' sum loop (this engine is ONE "
-                "shard; any other reduce would change the result)")
-        final = comb_sql
-        for v, exprs in mapped.items():
-            total = " + ".join(f"sum({e})" for e in exprs)
-            final = final.replace(f"`__stv_{v}`", f"({total})")
-        return MetricAgg(name, "scripted_metric", "",
-                         script_sql=f"CAST(({final}) AS DOUBLE)")
-    if kind == "geo_line":
-        # ES geo_line: the bucket's points as a GeoJSON LineString in
-        # sort order — {"point": {"field": p}, "sort": {"field": s},
-        # "size"?, "sort_order"?}. include_sort: true typed-rejects
-        # (it changes the response shape; the sort values are the
-        # caller's own field). Output: one string column.
-        if not isinstance(body, dict) \
-                or not isinstance(body.get("point"), dict) \
-                or "field" not in body["point"] \
-                or not isinstance(body.get("sort"), dict) \
-                or "field" not in body["sort"]:
-            raise DslError(
-                f"geo_line agg {name!r} needs "
-                "{'point': {'field': …}, 'sort': {'field': …}}")
-        gl_extra = set(body) - {"point", "sort", "size", "sort_order",
-                                "include_sort"}
-        if gl_extra:
-            raise DslError(f"geo_line agg {name!r}: unsupported params "
-                           f"{sorted(gl_extra)} (engine subset)")
-        if body.get("include_sort"):
-            raise DslError(
-                f"geo_line agg {name!r}: include_sort: true is not "
-                "supported (it changes the response shape; the sort "
-                "values are the request's own field — documented)")
-        order = body.get("sort_order", "asc")
-        if order not in ("asc", "desc"):
-            raise DslError(f"geo_line agg {name!r}: sort_order must be "
-                           f"'asc' or 'desc', got {order!r}")
-        size = body.get("size", 10000)
-        if isinstance(size, bool) or not isinstance(size, int) \
-                or not 1 <= size <= 10000:
-            raise DslError(f"geo_line agg {name!r}: size must be an "
-                           "integer in [1, 10000] (the ES ceiling)")
-        return MetricAgg(name, "geo_line", body["point"]["field"],
-                         sort_field=str(body["sort"]["field"]),
-                         sort_asc=(order == "asc"), line_size=size)
-    if kind == "weighted_avg":
-        # ES shape: {"value": {"field": v}, "weight": {"field": w}}
-        if not isinstance(body, dict) \
-                or not isinstance(body.get("value"), dict) \
-                or "field" not in body["value"] \
-                or not isinstance(body.get("weight"), dict) \
-                or "field" not in body["weight"]:
-            raise DslError(
-                f"weighted_avg agg {name!r} needs "
-                "{'value': {'field': …}, 'weight': {'field': …}}")
-        return MetricAgg(name, kind, body["value"]["field"],
-                         weight_field=body["weight"]["field"])
-    if kind == "t_test":
-        # ES shape: {"t_test": {"a": {"field": f, "filter"?: q},
-        # "b": {...}, "type"?: ...}}. DEVIATION (documented on
-        # MetricAgg): returns <name>_t + <name>_df instead of ES's
-        # p-value. paired requires two plain fields over the SAME rows
-        # (ES contract: no filters with paired).
-        if not isinstance(body, dict) \
-                or not isinstance(body.get("a"), dict) \
-                or not isinstance(body.get("b"), dict):
-            raise DslError(f"t_test agg {name!r} needs "
-                           "{'a': {'field': …}, 'b': {'field': …}}")
-        tt_extra = set(body) - {"a", "b", "type"}
-        if tt_extra:
-            raise DslError(f"t_test agg {name!r}: unsupported params "
-                           f"{sorted(tt_extra)} (engine subset)")
-        tt_type = str(body.get("type", "heteroscedastic"))
-        if tt_type not in ("paired", "heteroscedastic",
-                           "homoscedastic"):
-            raise DslError(
-                f"t_test agg {name!r}: type must be paired/"
-                f"heteroscedastic/homoscedastic, got {tt_type!r}")
-        sides = {}
-        for side in ("a", "b"):
-            sspec = body[side]
-            s_extra = set(sspec) - {"field", "filter"}
-            if s_extra:
-                raise DslError(
-                    f"t_test agg {name!r}.{side}: unsupported params "
-                    f"{sorted(s_extra)}")
-            if not isinstance(sspec.get("field"), str):
-                raise DslError(f"t_test agg {name!r}.{side} needs a "
-                               "'field'")
-            filt = None
-            if "filter" in sspec:
-                if tt_type == "paired":
-                    raise DslError(
-                        f"t_test agg {name!r}: paired type cannot "
-                        "take filters (ES contract — pairs come from "
-                        "the same documents)")
-                filt = _node(sspec["filter"])
-            sides[side] = (sspec["field"], filt)
-        if tt_type != "paired" and sides["a"][0] == sides["b"][0] \
-                and sides["a"][1] is None and sides["b"][1] is None:
-            raise DslError(
-                f"t_test agg {name!r}: unpaired types need distinct "
-                "fields or filters (identical populations)")
-        return MetricAgg(name, kind, sides["a"][0],
-                         t_b=sides["b"][0],
-                         t_filter_a=sides["a"][1],
-                         t_filter_b=sides["b"][1],
-                         t_type=tt_type)
-    if kind == "matrix_stats":
-        # ES shape: {"matrix_stats": {"fields": [a, b, ...]}} —
-        # listwise deletion across the field set
-        flds = body.get("fields") if isinstance(body, dict) else None
-        if not isinstance(flds, list) or len(flds) < 2 or not all(
-                isinstance(f, str) for f in flds):
-            raise DslError(f"matrix_stats agg {name!r} needs a 'fields' "
-                           "list of at least two field names")
-        if len(set(flds)) != len(flds):
-            raise DslError(f"matrix_stats agg {name!r}: duplicate fields")
-        return MetricAgg(name, kind, flds[0], multi_fields=tuple(flds))
-    if kind == "reverse_nested":
-        # ES reverse_nested jumps back to PARENT documents inside a
-        # nested agg: doc_count = distinct parents holding ≥1 element
-        # in the bucket. r13 adds parent-scope METRIC sub-aggs (ES:
-        # aggregation continues in parent scope) — engine subset:
-        # avg/sum/min/max/value_count/cardinality over a parent field,
-        # computed over the distinct-parent frame (one extra
-        # map-side-combinable aggregation on (bucket, parent) — never
-        # a per-bucket corpus join). `path` (multi-level nesting) and
-        # bucket sub-aggs stay typed errors.
-        if body not in ({}, None):
-            raise DslError(
-                f"reverse_nested agg {name!r}: parameters are not "
-                "supported (engine subset — one nested level, so the "
-                "jump target is always the document root)")
-        subs: list[MetricAgg] = []
-        if rn_sub_spec is not None:
-            if not isinstance(rn_sub_spec, dict) or not rn_sub_spec:
-                raise DslError(f"reverse_nested agg {name!r}: aggs "
-                               "must be a non-empty object")
-            for sn, ss in rn_sub_spec.items():
-                sm = _metric(sn, ss)
-                if sm.kind not in _RN_SUB_KINDS:
-                    raise DslError(
-                        f"reverse_nested agg {name!r}: parent-scope "
-                        f"sub-agg {sn!r} kind {sm.kind!r} is not "
-                        f"supported (engine subset: "
-                        f"{', '.join(_RN_SUB_KINDS)})")
-                if sm.precision_threshold is not None:
-                    raise DslError(
-                        f"reverse_nested agg {name!r}: "
-                        "precision_threshold is not supported on "
-                        "parent-scope cardinality (engine subset — "
-                        "exact count distinct)")
-                subs.append(sm)
-        return MetricAgg(name, kind, "", sub_metrics=tuple(subs))
-    if kind == "top_metrics":
-        # ES shape: {"metrics": {"field": f} | [{...}, ...],
-        # "sort": {field: "asc"|"desc"}, "size": 1} — the metric field
-        # values of the TOP document under the sort. Engine subset:
-        # size 1 (the ES default; the flattened frame has no
-        # array-of-hits shape), plain-field sort only.
-        if not isinstance(body, dict):
-            raise DslError(f"top_metrics agg {name!r} must be an object")
-        mts = body.get("metrics")
-        if isinstance(mts, dict):
-            mts = [mts]
-        if not isinstance(mts, list) or not mts or not all(
-                isinstance(e, dict) and isinstance(e.get("field"), str)
-                for e in mts):
-            raise DslError(f"top_metrics agg {name!r} needs 'metrics' "
-                           "as {'field': name} or a list of those")
-        mfields = tuple(e["field"] for e in mts)
-        if len(set(mfields)) != len(mfields):
-            raise DslError(f"top_metrics agg {name!r}: duplicate "
-                           "metric fields")
-        size = body.get("size", 1)
-        if isinstance(size, bool) or not isinstance(size, int) \
-                or not 1 <= size <= 10:
-            raise DslError(f"top_metrics agg {name!r}: size must be an "
-                           "integer in [1, 10] (the ES ceiling)")
-        tsort = _sort(body.get("sort"))
-        if len(tsort) != 1 or not isinstance(tsort[0][0], str) \
-                or tsort[0][0] == "_score":
-            raise DslError(f"top_metrics agg {name!r} needs exactly one "
-                           "plain-field sort entry")
-        sfield, sasc, _ = tsort[0]
-        return MetricAgg(name, kind, sfield, multi_fields=mfields,
-                         sort_asc=sasc, line_size=size)
-    if not isinstance(body, dict) or "field" not in body:
-        raise DslError(f"metric agg {name!r} needs {{'field': name}}")
-    if kind in ("boxplot", "median_absolute_deviation"):
-        # EXACT percentiles by default; ES `compression` opts into the
-        # percentile_approx sketch (the shape that scales), mirroring
-        # the percentiles metric's contract
-        comp_v = body.get("compression")
-        if comp_v is not None and (isinstance(comp_v, bool)
-                                   or not isinstance(comp_v, int)
-                                   or comp_v <= 0):
-            raise DslError("compression must be a positive integer")
-        return MetricAgg(name, kind, body["field"], compression=comp_v)
-    if kind == "percentile_ranks":
-        vals = body.get("values")
-        if not isinstance(vals, list) or not vals or not all(
-                isinstance(v, (int, float)) for v in vals):
-            raise DslError(f"percentile_ranks agg {name!r} needs a "
-                           "non-empty numeric 'values' list")
-        return MetricAgg(name, kind, body["field"],
-                         rank_values=tuple(float(v) for v in vals))
-    # simple-metric tail (avg/sum/min/max/value_count/cardinality/
-    # stats/extended_stats/percentiles/weighted_avg base …): param
-    # allowlist (r12 — an unknown key was previously a silent no-op)
-    # + ES `missing` (null field values substitute this value instead
-    # of dropping from the aggregate)
-    tail_allow = {"field", "missing"}
-    if kind == "cardinality":
-        tail_allow |= {"precision_threshold"}
-    if kind == "percentiles":
-        tail_allow |= {"percents", "compression", "tdigest"}
-    t_extra = set(body) - tail_allow
-    if t_extra:
-        raise DslError(f"metric agg {name!r} ({kind}): unsupported "
-                       f"params {sorted(t_extra)} (engine subset)")
-    mval = body.get("missing")
-    if mval is not None and (isinstance(mval, bool)
-                             or not isinstance(mval,
-                                               (int, float, str))):
-        raise DslError(f"metric agg {name!r}: missing must be a "
-                       "number or string")
-    threshold = body.get("precision_threshold")
-    if threshold is not None and (not isinstance(threshold, int)
-                                  or threshold <= 0):
-        raise DslError("precision_threshold must be a positive integer")
-    percents: tuple[float, ...] = _DEFAULT_PERCENTS
-    compression = None
-    if kind == "percentiles":
-        if "percents" in body:
-            raw = body["percents"]
-            if not isinstance(raw, list) or not raw or not all(
-                    isinstance(p, (int, float)) and 0 <= p <= 100
-                    for p in raw):
-                raise DslError(f"percentiles agg {name!r}: percents must "
-                               "be numbers in [0, 100]")
-            percents = tuple(float(p) for p in raw)
-        # ES nests compression under "tdigest"; accept flat too
-        compression = body.get("compression",
-                               (body.get("tdigest") or {}).get("compression"))
-        if compression is not None and (not isinstance(compression, int)
-                                        or compression <= 0):
-            raise DslError("compression must be a positive integer")
-    return MetricAgg(name, kind, body["field"],
-                     precision_threshold=threshold,
-                     percents=percents,
-                     compression=compression,
-                     missing=mval)
-
-
-def _aggs(spec: Any) -> BucketAgg | tuple[MetricAgg, ...] | None:
-    if spec is None:
-        return None
-    if not isinstance(spec, dict) or not spec:
-        raise DslError("aggs must be a non-empty object")
-    entries = list(spec.items())
-    # peel off sibling pipeline aggs (avg_bucket & co) — they sit NEXT TO
-    # the bucket agg in ES syntax and attach to it after parsing
-    sib_raw: list[tuple[str, str, str, tuple[float, ...]]] = []
-    rest: list[tuple[str, Any]] = []
-    for name, body in entries:
-        if isinstance(body, dict) and body:
-            k = next((k for k in body if k != "aggs"), None)
-            if k in _SIBLING_KINDS:
-                pbody = body[k]
-                if not isinstance(pbody, dict) \
-                        or "buckets_path" not in pbody \
-                        or ">" not in str(pbody["buckets_path"]):
-                    raise DslError(
-                        f"sibling agg {name!r} needs a 'buckets_path' "
-                        "of the form 'bucket>metric'")
-                percents: tuple[float, ...] = ()
-                if k == "bucket_count_ks_test":
-                    # ES bucket_count_ks_test (r12): Kolmogorov-Smirnov
-                    # of the bucket-count distribution against the
-                    # request's `fractions` (default uniform) — the
-                    # drift/anomaly idiom over a date_histogram.
-                    # Engine subset (typed): alternatives
-                    # less/greater/two_sided; p-values via the
-                    # ASYMPTOTIC null distributions (one-sided
-                    # exp(−2nD²), two-sided the Kolmogorov series with
-                    # the √n + 0.12 + 0.11/√n refinement) — documented
-                    # vs ES's sampled variant; `sampling_method`
-                    # typed-rejects (it changes which docs n counts).
-                    k_extra = set(pbody) - {"buckets_path",
-                                            "alternative", "fractions"}
-                    if k_extra:
-                        raise DslError(
-                            f"bucket_count_ks_test agg {name!r}: "
-                            f"unsupported params {sorted(k_extra)} "
-                            "(engine subset — sampling_method would "
-                            "silently change the statistic)")
-                    alts = pbody.get("alternative",
-                                     ["less", "greater", "two_sided"])
-                    if not isinstance(alts, list) or not alts or not all(
-                            a in ("less", "greater", "two_sided")
-                            for a in alts):
-                        raise DslError(
-                            f"bucket_count_ks_test agg {name!r}: "
-                            "alternative must be a non-empty list of "
-                            "less/greater/two_sided")
-                    fr = pbody.get("fractions")
-                    if fr is not None and (
-                            not isinstance(fr, list) or len(fr) < 2
-                            or not all(isinstance(x, (int, float))
-                                       and not isinstance(x, bool)
-                                       and x >= 0 for x in fr)
-                            or sum(fr) <= 0):
-                        raise DslError(
-                            f"bucket_count_ks_test agg {name!r}: "
-                            "fractions must be ≥2 non-negative numbers "
-                            "with a positive sum")
-                    sib_raw.append(
-                        (name, k, str(pbody["buckets_path"]),
-                         (tuple(dict.fromkeys(alts)),
-                          tuple(float(x) for x in fr)
-                          if fr is not None else None)))
-                    continue
-                if k == "change_point":
-                    # ES change_point (r12): detect a shift in the
-                    # bucket series. Engine subset (documented,
-                    # deterministic): the BEST MEAN-SHIFT split —
-                    # argmax over split points of the two-segment
-                    # Welch t statistic — reported as `step_change`
-                    # when its two-sided p < 0.05, else `stationary`
-                    # (ES's agglomerate of spike/dip/trend detectors
-                    # is shard-order- and sampling-dependent; the
-                    # mean-shift test is the reproducible core).
-                    cp_extra = set(pbody) - {"buckets_path"}
-                    if cp_extra:
-                        raise DslError(
-                            f"change_point agg {name!r}: unsupported "
-                            f"params {sorted(cp_extra)} "
-                            "(engine subset)")
-                    sib_raw.append(
-                        (name, k, str(pbody["buckets_path"]), ()))
-                    continue
-                if k == "bucket_correlation":
-                    # ES bucket_correlation (r12): Pearson correlation
-                    # between the bucket series (key-ascending) and the
-                    # indicator expectations. Engine subset (typed):
-                    # plain Pearson — ES's count_correlation variant
-                    # additionally scales by the indicator's doc_count,
-                    # so doc_count is REJECTED rather than silently
-                    # ignored (the no-silent-drops contract).
-                    c_extra = set(pbody) - {"buckets_path", "function"}
-                    if c_extra:
-                        raise DslError(
-                            f"bucket_correlation agg {name!r}: "
-                            f"unsupported params {sorted(c_extra)}")
-                    fn = pbody.get("function")
-                    if not isinstance(fn, dict) \
-                            or set(fn) != {"count_correlation"} \
-                            or not isinstance(fn["count_correlation"],
-                                              dict) \
-                            or set(fn["count_correlation"]) \
-                            != {"indicator"}:
-                        raise DslError(
-                            f"bucket_correlation agg {name!r} needs "
-                            "{'function': {'count_correlation': "
-                            "{'indicator': {...}}}}")
-                    ind = fn["count_correlation"]["indicator"]
-                    if not isinstance(ind, dict) \
-                            or "expectations" not in ind:
-                        raise DslError(
-                            f"bucket_correlation agg {name!r}: the "
-                            "indicator needs 'expectations'")
-                    i_extra = set(ind) - {"expectations"}
-                    if i_extra:
-                        raise DslError(
-                            f"bucket_correlation agg {name!r}: "
-                            f"unsupported indicator params "
-                            f"{sorted(i_extra)} (engine subset: plain "
-                            "Pearson — doc_count scaling would "
-                            "silently change the statistic)")
-                    exp = ind["expectations"]
-                    if not isinstance(exp, list) or len(exp) < 2 \
-                            or not all(isinstance(e, (int, float))
-                                       and not isinstance(e, bool)
-                                       for e in exp):
-                        raise DslError(
-                            f"bucket_correlation agg {name!r}: "
-                            "expectations must be a list of ≥2 numbers")
-                    sib_raw.append((name, k, str(pbody["buckets_path"]),
-                                    tuple(float(e) for e in exp)))
-                    continue
-                if k == "percentiles_bucket":
-                    praw = pbody.get("percents", list(_DEFAULT_PERCENTS))
-                    if not isinstance(praw, list) or not praw or not all(
-                            isinstance(p, (int, float))
-                            and not isinstance(p, bool)
-                            and 0 <= p <= 100 for p in praw):
-                        raise DslError(
-                            f"percentiles_bucket agg {name!r}: percents "
-                            "must be numbers in [0, 100]")
-                    percents = tuple(float(p) for p in praw)
-                sib_raw.append((name, k, str(pbody["buckets_path"]),
-                                percents))
-                continue
-        rest.append((name, body))
-    entries = rest
-    if sib_raw and not entries:
-        raise DslError("sibling pipeline aggs need a bucket agg to "
-                       "aggregate over")
-    first_kind = None
-    for name, body in entries:
-        if not isinstance(body, dict) or not body:
-            raise DslError(f"agg {name!r} must be an object")
-        first_kind = next((k for k in body if k != "aggs"), None)
-        if first_kind is None:
-            raise DslError(f"agg {name!r} has no aggregation clause")
-        break
-    if sib_raw and first_kind not in _BUCKET_KINDS:
-        raise DslError("sibling pipeline aggs need a bucket agg sibling")
-    if first_kind == "composite":
-        if len(entries) != 1:
-            raise DslError("exactly one bucket agg is supported per request")
-        name, body = entries[0]
-        extra = set(body) - {"composite", "aggs"}
-        if extra:
-            raise DslError(f"unexpected keys {sorted(extra)} in composite "
-                           f"agg {name!r}")
-        params = body["composite"]
-        if not isinstance(params, dict) \
-                or not isinstance(params.get("sources"), list) \
-                or not params["sources"]:
-            raise DslError(f"composite agg {name!r} needs a non-empty "
-                           "'sources' list")
-        sources: list[CompositeSource] = []
-        for s in params["sources"]:
-            if not isinstance(s, dict) or len(s) != 1:
-                raise DslError("each composite source must be "
-                               "{name: {kind: {...}}}")
-            (sname, sbody), = s.items()
-            if not isinstance(sbody, dict) or len(sbody) != 1:
-                raise DslError(f"composite source {sname!r} must have "
-                               "exactly one kind")
-            (skind, sparams), = sbody.items()
-            if skind not in ("terms", "histogram", "date_histogram",
-                             "geotile_grid"):
-                raise DslError(
-                    f"unsupported composite source kind {skind!r}")
-            if not isinstance(sparams, dict) or "field" not in sparams:
-                raise DslError(f"composite source {sname!r} needs a 'field'")
-            allowed_sp = {"field", "order", "missing_bucket"} | {
-                "terms": set(),
-                "histogram": {"interval"},
-                "date_histogram": {"calendar_interval",
-                                   "fixed_interval", "offset",
-                                   "time_zone"},
-                "geotile_grid": {"precision"},
-            }[skind]
-            sp_extra = set(sparams) - allowed_sp
-            if sp_extra:
-                # no silent drops: a vanished interval/precision would
-                # change every bucket key without a signal
-                raise DslError(
-                    f"composite source {sname!r} ({skind}): "
-                    f"unsupported parameters {sorted(sp_extra)} "
-                    "(engine subset)")
-            if skind == "histogram":
-                siv = sparams.get("interval")
-                if siv is None:
-                    raise DslError("histogram source needs an 'interval'")
-                if isinstance(siv, bool) \
-                        or not isinstance(siv, (int, float)) or siv <= 0:
-                    raise DslError(
-                        "histogram source interval must be a number > 0")
-            if skind == "date_histogram" \
-                    and "calendar_interval" not in sparams \
-                    and "fixed_interval" not in sparams:
-                raise DslError("date_histogram source needs a "
-                               "'calendar_interval' or 'fixed_interval'")
-            soff = 0.0
-            if skind == "date_histogram":
-                raw_off = sparams.get("offset")
-                if raw_off is not None:
-                    m = _re.fullmatch(r"([+-]?)(\d+)([smhd])",
-                                      str(raw_off))
-                    if m is None:
-                        raise DslError("date_histogram source offset "
-                                       "must be ±N(s|m|h|d)")
-                    mult = {"s": 1, "m": 60, "h": 3600, "d": 86400}
-                    secs = int(m.group(2)) * mult[m.group(3)]
-                    soff = float(-secs if m.group(1) == "-" else secs)
-                stz = sparams.get("time_zone")
-                if stz is not None:
-                    if not isinstance(stz, str) or not stz:
-                        raise DslError("time_zone must be a non-empty "
-                                       "string")
-                    tzs = _fixed_tz_seconds(stz)
-                    if tzs is None:
-                        raise DslError(
-                            "composite date_histogram time_zone must "
-                            "be a fixed offset (keyset 'after' anchors "
-                            "need fixed instants) — named zones work "
-                            "on the plain date_histogram agg")
-                    # boundary = trunc(ts + tz - off) + off - tz
-                    soff -= tzs
-            sprec = 7
-            if skind == "geotile_grid":
-                sprec = sparams.get("precision", 7)
-                if isinstance(sprec, bool) or not isinstance(sprec, int) \
-                        or not 0 <= sprec <= 29:
-                    raise DslError(
-                        "geotile_grid source precision must be an "
-                        "integer in [0, 29] (ES zoom range)")
-            order = sparams.get("order", "asc")
-            if order not in ("asc", "desc"):
-                raise DslError(f"bad source order {order!r}")
-            mb = sparams.get("missing_bucket", False)
-            if not isinstance(mb, bool):
-                raise DslError("missing_bucket must be a boolean")
-            sources.append(CompositeSource(
-                sname, skind, sparams["field"],
-                interval=sparams.get("interval"),
-                calendar_interval=sparams.get("calendar_interval"),
-                fixed_interval=sparams.get("fixed_interval"),
-                offset_sec=soff,
-                asc=order == "asc",
-                missing_bucket=mb,
-                precision=sprec))
-        names = [s.name for s in sources]
-        if len(set(names)) != len(names):
-            raise DslError("duplicate composite source names")
-        size = params.get("size", 10)
-        if not isinstance(size, int) or size <= 0:
-            raise DslError("composite size must be a positive integer")
-        after = None
-        if "after" in params:
-            aspec = params["after"]
-            if not isinstance(aspec, dict) or set(aspec) != set(names):
-                raise DslError("composite 'after' must provide one value "
-                               "per source")
-            after = tuple(aspec[n] for n in names)
-        metrics = tuple(_metric(n, sp)
-                        for n, sp in (body.get("aggs") or {}).items())
-        return CompositeAgg(name, tuple(sources), size=size,
-                            after=after, metrics=metrics)
-    if first_kind == "nested":
-        if len(entries) != 1:
-            raise DslError("exactly one bucket agg is supported per request")
-        name, body = entries[0]
-        extra = set(body) - {"nested", "aggs"}
-        if extra:
-            raise DslError(f"unexpected keys {sorted(extra)} in nested "
-                           f"agg {name!r}")
-        params = body["nested"]
-        if not isinstance(params, dict) \
-                or not isinstance(params.get("path"), str):
-            raise DslError(f"nested agg {name!r} needs a 'path' string")
-        if "." in params["path"]:
-            raise DslError(f"nested agg {name!r}: path must be a "
-                           "top-level array field (one nested level — "
-                           "engine subset)")
-        sub = _aggs(body.get("aggs")) if body.get("aggs") else None
-        if isinstance(sub, (NestedAgg, SamplerAgg)):
-            raise DslError("nested aggs hold ordinary bucket/metric "
-                           "sub-aggs only (no nested-in-nested or "
-                           "sampler — engine subset)")
-        return NestedAgg(name, params["path"], sub=sub)
-    if first_kind in ("children", "parent"):
-        if len(entries) != 1:
-            raise DslError("exactly one bucket agg is supported per request")
-        name, body = entries[0]
-        extra = set(body) - {first_kind, "aggs"}
-        if extra:
-            raise DslError(f"unexpected keys {sorted(extra)} in "
-                           f"{first_kind} agg {name!r}")
-        params = body[first_kind]
-        if not isinstance(params, dict) \
-                or not isinstance(params.get("type"), str) \
-                or not params["type"]:
-            raise DslError(f"{first_kind} agg {name!r} needs a 'type' "
-                           "string (the relation name from the join "
-                           "mapping — see register_relation)")
-        j_extra = set(params) - {"type"}
-        if j_extra:
-            raise DslError(f"{first_kind} agg {name!r}: unsupported "
-                           f"params {sorted(j_extra)} (engine subset)")
-        sub = _aggs(body.get("aggs")) if body.get("aggs") else None
-        if isinstance(sub, (RelAgg, SamplerAgg)) or (
-                isinstance(sub, SingleBucketAgg) and sub.kind == "global"):
-            raise DslError(
-                f"{first_kind} agg {name!r}: sampler/global/join "
-                "sub-aggs are not supported under a join agg (they "
-                "would score or scope against the wrong table — "
-                "engine subset)")
-        return RelAgg(name, first_kind, params["type"], sub=sub)
-    if first_kind in ("sampler", "diversified_sampler", "random_sampler"):
-        if len(entries) != 1:
-            raise DslError("exactly one bucket agg is supported per request")
-        name, body = entries[0]
-        extra = set(body) - {first_kind, "aggs"}
-        if extra:
-            raise DslError(f"unexpected keys {sorted(extra)} in "
-                           f"sampler agg {name!r}")
-        params = body[first_kind] or {}
-        if not isinstance(params, dict):
-            raise DslError(f"sampler agg {name!r} must be an object")
-        if first_kind == "random_sampler":
-            r_extra = set(params) - {"probability", "seed"}
-            if r_extra:
-                raise DslError(
-                    f"random_sampler agg {name!r}: unsupported params "
-                    f"{sorted(r_extra)} (engine subset)")
-            p = params.get("probability")
-            if isinstance(p, bool) or not isinstance(p, (int, float)) \
-                    or not 0.0 < p <= 1.0:
-                raise DslError(
-                    f"random_sampler agg {name!r}: probability must be "
-                    "a number in (0, 1]")
-            seed = params.get("seed", 0)
-            if isinstance(seed, bool) or not isinstance(seed, int) \
-                    or seed < 0:
-                raise DslError(
-                    f"random_sampler agg {name!r}: seed must be a "
-                    "non-negative integer")
-            sub = _aggs(body.get("aggs")) if body.get("aggs") else None
-            if isinstance(sub, SamplerAgg):
-                raise DslError("sampler aggs do not nest (top level "
-                               "only)")
-            return SamplerAgg(name, "random_sampler",
-                              probability=float(p), seed=seed, sub=sub)
-        allowed = {"shard_size"} if first_kind == "sampler" \
-            else {"shard_size", "field", "max_docs_per_value"}
-        bad = set(params) - allowed
-        if bad:
-            raise DslError(f"sampler agg {name!r}: unsupported "
-                           f"parameters {sorted(bad)}")
-        shard_size = params.get("shard_size", 100)
-        if not isinstance(shard_size, int) or isinstance(shard_size, bool) \
-                or shard_size <= 0:
-            raise DslError(f"sampler agg {name!r}: shard_size must be a "
-                           "positive integer")
-        field = ""
-        max_per = 1
-        if first_kind == "diversified_sampler":
-            field = params.get("field")
-            if not isinstance(field, str) or not field:
-                raise DslError(f"diversified_sampler agg {name!r} needs "
-                               "a 'field' (engine subset: field-based "
-                               "diversification only)")
-            max_per = params.get("max_docs_per_value", 1)
-            if not isinstance(max_per, int) or isinstance(max_per, bool) \
-                    or max_per <= 0:
-                raise DslError(f"diversified_sampler agg {name!r}: "
-                               "max_docs_per_value must be a positive "
-                               "integer")
-        sub = _aggs(body.get("aggs")) if body.get("aggs") else None
-        if isinstance(sub, SamplerAgg):
-            raise DslError("sampler aggs do not nest (top level only)")
-        return SamplerAgg(name, first_kind, shard_size=shard_size,
-                          field=field, max_docs_per_value=max_per,
-                          sub=sub)
-    if first_kind in _SINGLE_BUCKET_KINDS:
-        if len(entries) != 1:
-            raise DslError("exactly one bucket agg is supported per request")
-        name, body = entries[0]
-        extra = set(body) - {first_kind, "aggs"}
-        if extra:
-            raise DslError(f"unexpected keys {sorted(extra)} in "
-                           f"single-bucket agg {name!r}")
-        params = body[first_kind]
-        subs = body.get("aggs") or {}
-        has_bucket_sub = any(
-            isinstance(sp, dict) and any(
-                k in _BUCKET_KINDS for k in sp if k != "aggs")
-            for sp in subs.values())
-        if first_kind == "missing" and has_bucket_sub:
-            # missing agg with a BUCKET sub-agg (r6): same desugar as
-            # filter — the missing bucket IS the docs where the field
-            # is absent
-            if not isinstance(params, dict) or "field" not in params:
-                raise DslError(f"missing agg {name!r} needs a 'field'")
-            clause = {"bool": {"must_not": [
-                {"exists": {"field": params["field"]}}]}}
-            return _aggs({name: {"filters": {"filters": {name: clause}},
-                                 "aggs": subs}})
-        if first_kind == "filter" and has_bucket_sub:
-            # filter agg with a BUCKET sub-agg (r6): desugar to a
-            # one-entry `filters` bucket — the generic nested machinery
-            # then handles the sub levels/metrics; the flattened key
-            # column carries the agg's name (the filter bucket is
-            # anonymous in ES; documented)
-            if not isinstance(params, dict) or not params:
-                raise DslError(f"filter agg {name!r} needs a query clause")
-            return _aggs({name: {"filters": {"filters": {name: params}},
-                                 "aggs": subs}})
-        metrics = tuple(_metric(n, sp) for n, sp in subs.items())
-        if first_kind == "filter":
-            if not isinstance(params, dict) or not params:
-                raise DslError(f"filter agg {name!r} needs a query clause")
-            return SingleBucketAgg(name, "filter", node=_node(params),
-                                   metrics=metrics)
-        if first_kind == "missing":
-            if not isinstance(params, dict) or "field" not in params:
-                raise DslError(f"missing agg {name!r} needs a 'field'")
-            m_extra = set(params) - {"field"}
-            if m_extra:
-                raise DslError(f"missing agg {name!r}: unsupported "
-                               f"params {sorted(m_extra)} "
-                               "(engine subset)")
-            return SingleBucketAgg(name, "missing", field=params["field"],
-                                   metrics=metrics)
-        # global: body must be the empty object (ES syntax)
-        if params not in ({}, None):
-            raise DslError(f"global agg {name!r} takes no parameters")
-        return SingleBucketAgg(name, "global", metrics=metrics)
-    if first_kind in _BUCKET_KINDS:
-        if len(entries) != 1:
-            raise DslError("exactly one bucket agg is supported per request")
-        name, body = entries[0]
-        extra = set(body) - {first_kind, "aggs"}
-        if extra:
-            # sibling metrics belong INSIDE the bucket's `aggs` object
-            # (ES syntax) — stray keys here would be silently dropped
-            raise DslError(f"unexpected keys {sorted(extra)} in bucket "
-                           f"agg {name!r} (siblings go under 'aggs')")
-        params = body[first_kind]
-        if not isinstance(params, dict) or (
-                first_kind not in ("filters", "multi_terms",
-                                   "adjacency_matrix",
-                                   "frequent_item_sets")
-                and "field" not in params):
-            raise DslError(f"bucket agg {name!r} needs a 'field'")
-        allowed_bp = _GENERIC_BUCKET_PARAMS.get(first_kind)
-        if allowed_bp is not None:
-            bp_extra = set(params) - allowed_bp
-            if bp_extra:
-                # no silent drops: a vanished shard_size/time_zone/
-                # other_bucket would silently change bucket contents
-                raise DslError(
-                    f"{first_kind} agg {name!r}: unsupported params "
-                    f"{sorted(bp_extra)} (engine subset)")
-        if sib_raw and first_kind in ("rare_terms", "multi_terms",
-                                      "significant_terms",
-                                      "geotile_grid", "geohash_grid",
-                                      "auto_date_histogram",
-                                      "variable_width_histogram",
-                                      "frequent_item_sets"):
-            # these branches return before the sibling attach below — a
-            # silent pass-through would DROP the requested aggregation
-            raise DslError(
-                "sibling pipeline aggs are not supported beside "
-                f"{first_kind} buckets")
-        if first_kind == "rare_terms":
-            # ES rare_terms: buckets at or below max_doc_count, ordered
-            # doc_count asc then key asc, no top-size truncation
-            extra_p = set(params) - {"field", "max_doc_count"}
-            if extra_p:
-                raise DslError(f"rare_terms agg {name!r}: unsupported "
-                               f"params {sorted(extra_p)}")
-            if body.get("aggs"):
-                raise DslError("rare_terms does not support "
-                               "sub-aggregations")
-            mx = params.get("max_doc_count", 1)
-            if not isinstance(mx, int) or mx <= 0:
-                raise DslError("max_doc_count must be a positive integer")
-            return BucketAgg(name=name, kind="rare_terms",
-                             field=params["field"], size=mx)
-        if first_kind == "multi_terms":
-            # ES multi_terms: composite key over several fields, terms
-            # ordering (doc_count desc, keys asc), size cap; flattened
-            # one column per source field
-            tspec = params.get("terms")
-            if not isinstance(tspec, list) or len(tspec) < 2 or not all(
-                    isinstance(t, dict) and "field" in t for t in tspec):
-                raise DslError(
-                    f"multi_terms agg {name!r} needs a 'terms' list of "
-                    "at least two {'field': ...} entries")
-            msize = params.get("size", 10)
-            if not isinstance(msize, int) or msize <= 0:
-                raise DslError("multi_terms size must be a positive "
-                               "integer")
-            metrics = tuple(_metric(n, sp)
-                            for n, sp in (body.get("aggs") or {}).items())
-            flds = tuple(t["field"] for t in tspec)
-            if len(set(flds)) != len(flds):
-                raise DslError("duplicate multi_terms fields")
-            return BucketAgg(name=name, kind="multi_terms",
-                             field=flds[0], multi_fields=flds,
-                             size=msize, metrics=metrics)
-        if first_kind == "categorize_text":
-            # ES categorize_text, deterministic subset (r11): ES's
-            # drain-tree categorizer is ML-adaptive (merges near-equal
-            # templates by similarity) and not reproducible; the
-            # engine groups by an EXACT token template — lowercase
-            # whitespace tokens with every digit-bearing token masked
-            # to <num> — the classic log-template key. Terms-style
-            # selection (doc_count desc, key asc, size cap, ES default
-            # 10); metric sub-aggs ride the same aggregation. The
-            # adaptive knobs (similarity_threshold,
-            # max_unique_tokens, categorization_filters, …)
-            # typed-reject.
-            extra_p = set(params) - {"field", "size"}
-            if extra_p:
-                raise DslError(
-                    f"categorize_text agg {name!r}: unsupported "
-                    f"params {sorted(extra_p)} (engine subset — the "
-                    "adaptive drain-tree knobs are not reproducible)")
-            csize = params.get("size", 10)
-            if isinstance(csize, bool) or not isinstance(csize, int) \
-                    or csize <= 0:
-                raise DslError("categorize_text size must be a "
-                               "positive integer")
-            metrics = tuple(_metric(n, sp)
-                            for n, sp in (body.get("aggs")
-                                          or {}).items())
-            return BucketAgg(name=name, kind="categorize_text",
-                             field=params["field"], size=csize,
-                             metrics=metrics)
-        if first_kind in ("geotile_grid", "geohash_grid"):
-            # ES geo grid aggs (r8): web-mercator "z/x/y" tiles /
-            # base32 geohash cells of the struct<lat,lon> geo_point
-            # field, doc_count desc + key asc, size cap (ES default
-            # 10000); metric sub-aggs ride the same aggregation
-            extra_p = set(params) - {"field", "precision", "size"}
-            if extra_p:
-                raise DslError(f"{first_kind} agg {name!r}: unsupported "
-                               f"params {sorted(extra_p)}")
-            lo_p, hi_p, dflt = (0, 29, 7) if first_kind == "geotile_grid" \
-                else (1, 12, 5)
-            prec = params.get("precision", dflt)
-            if isinstance(prec, bool) or not isinstance(prec, int) \
-                    or not lo_p <= prec <= hi_p:
-                raise DslError(
-                    f"{first_kind} precision must be an integer in "
-                    f"[{lo_p}, {hi_p}]")
-            gsize = params.get("size", 10_000)
-            if isinstance(gsize, bool) or not isinstance(gsize, int) \
-                    or gsize <= 0:
-                raise DslError(f"{first_kind} size must be a positive "
-                               "integer")
-            metrics = tuple(_metric(n, sp)
-                            for n, sp in (body.get("aggs") or {}).items())
-            return BucketAgg(name=name, kind=first_kind,
-                             field=params["field"], size=gsize,
-                             precision=prec, metrics=metrics)
-        if first_kind == "geo_distance":
-            # ES geo_distance aggregation (r11): range buckets keyed by
-            # the doc point's distance from `origin`, expressed in
-            # `unit` (ES default m). Reuses the range-bucket machinery
-            # — the value column is the haversine distance scaled to
-            # the unit (arc distance_type only; `plane` typed-rejects,
-            # the engine computes one distance formula on both plans).
-            # Overlapping ranges count a doc in EACH bucket; null
-            # points drop out (ES semantics). Buckets order by key
-            # string asc like the range agg (documented deviation: ES
-            # returns request order).
-            extra_p = set(params) - {"field", "origin", "ranges",
-                                     "unit", "distance_type"}
-            if extra_p:
-                raise DslError(
-                    f"geo_distance agg {name!r}: unsupported params "
-                    f"{sorted(extra_p)}")
-            if "origin" not in params:
-                raise DslError(f"geo_distance agg {name!r} needs an "
-                               "'origin' point")
-            olat, olon = _geo_point(params["origin"],
-                                    f"geo_distance agg {name!r}")
-            dtype_p = str(params.get("distance_type", "arc")).lower()
-            if dtype_p != "arc":
-                raise DslError(
-                    f"geo_distance agg {name!r}: distance_type "
-                    f"{dtype_p!r} is not supported (engine subset: "
-                    "arc — one haversine formula on every plan)")
-            unit = str(params.get("unit", "m")).lower()
-            from cassandra_es_index_spark.functions.geo import _UNITS
-            if unit not in _UNITS:
-                raise DslError(f"geo_distance agg {name!r}: unknown "
-                               f"distance unit {unit!r}")
-            ranges = _ranges(name, params.get("ranges"))
-            metrics = tuple(_metric(n, sp)
-                            for n, sp in (body.get("aggs") or {}).items())
-            return BucketAgg(name=name, kind="geo_distance",
-                             field=params["field"], ranges=ranges,
-                             geo_origin=(olat, olon, _UNITS[unit]),
-                             metrics=metrics)
-        if first_kind == "auto_date_histogram":
-            # ES auto_date_histogram: target a bucket COUNT instead of
-            # an interval — the engine picks the smallest interval from
-            # its fixed ladder whose bucket count fits the data's
-            # min/max span (resolved in search_aggs, where the match
-            # set is known), then runs the ordinary date_histogram
-            # machinery. Metric sub-aggs ride along; sub-BUCKETS are
-            # rejected (the interval resolution is top-level-only,
-            # documented engine subset).
-            extra_p = set(params) - {"field", "buckets"}
-            if extra_p:
-                raise DslError(
-                    f"auto_date_histogram agg {name!r}: unsupported "
-                    f"params {sorted(extra_p)}")
-            nb = params.get("buckets", 10)
-            if isinstance(nb, bool) or not isinstance(nb, int) or nb < 1:
-                raise DslError("auto_date_histogram buckets must be a "
-                               "positive integer")
-            sub_specs_a = dict(body.get("aggs") or {})
-            if any(isinstance(sp, dict) and any(
-                    k in _BUCKET_KINDS or k in _SINGLE_BUCKET_KINDS
-                    for k in sp) for sp in sub_specs_a.values()):
-                raise DslError("auto_date_histogram supports metric "
-                               "sub-aggs only (documented subset)")
-            metrics = tuple(_metric(n, sp)
-                            for n, sp in sub_specs_a.items())
-            return BucketAgg(name=name, kind="auto_date_histogram",
-                             field=params["field"], buckets=nb,
-                             metrics=metrics)
-        if first_kind == "frequent_item_sets":
-            # ES frequent_item_sets (r12), the 2-itemset A-priori
-            # subset (typed): frequent co-occurring ITEM PAIRS across
-            # documents — items are the doc's DISTINCT analyzed tokens
-            # (string field) or distinct array elements (array<string>
-            # field). ES's ECLAT miner returns sets of any size;
-            # pairs are the overwhelmingly-common use and the shape
-            # with a clean distributed plan (apriori prune → pruned
-            # self-join on the doc key → pair count), so larger
-            # minimum_set_size typed-rejects. Output per bucket:
-            # item1, item2 (item1 < item2), doc_count, support.
-            extra_p = set(params) - {"fields", "minimum_support",
-                                     "minimum_set_size", "size"}
-            if extra_p:
-                raise DslError(
-                    f"frequent_item_sets agg {name!r}: unsupported "
-                    f"params {sorted(extra_p)} (engine subset)")
-            flds = params.get("fields")
-            if not isinstance(flds, list) or len(flds) != 1 \
-                    or not isinstance(flds[0], dict) \
-                    or "field" not in flds[0]:
-                raise DslError(
-                    f"frequent_item_sets agg {name!r} needs "
-                    "{'fields': [{'field': …}]} — exactly one field "
-                    "(engine subset)")
-            mss = params.get("minimum_set_size", 2)
-            if mss not in (2, 3):
-                raise DslError(
-                    "frequent_item_sets minimum_set_size must be 2 or "
-                    "3 (engine subset: the pair/triple A-priori miner "
-                    "— deeper levels would need iterative candidate "
-                    "generation; sets are EXACTLY that size, a "
-                    "documented deviation from ES's ≥-size ECLAT)")
-            msup = params.get("minimum_support", 0.1)
-            if isinstance(msup, bool) \
-                    or not isinstance(msup, (int, float)) \
-                    or not 0.0 < msup <= 1.0:
-                raise DslError("frequent_item_sets minimum_support "
-                               "must be a number in (0, 1]")
-            fis_size = params.get("size", 10)
-            if isinstance(fis_size, bool) or not isinstance(fis_size, int) \
-                    or not 1 <= fis_size <= 10000:
-                raise DslError("frequent_item_sets size must be an "
-                               "integer in [1, 10000]")
-            if body.get("aggs"):
-                raise DslError("frequent_item_sets does not support "
-                               "sub-aggregations")
-            return BucketAgg(name=name, kind="frequent_item_sets",
-                             field=flds[0]["field"],
-                             size=fis_size,
-                             interval=float(msup),
-                             precision=int(mss))  # set size (2|3)
-        if first_kind == "variable_width_histogram":
-            # ES variable_width_histogram: cluster a numeric field into
-            # ~`buckets` dynamically-sized buckets. ES's streaming
-            # clusterer is shard-order dependent; the engine's
-            # DETERMINISTIC analogue (documented) splits the sorted
-            # DISTINCT values at the buckets−1 LARGEST adjacent gaps
-            # (ties → the leftmost/smallest boundary), which is the
-            # 1-D clustering that minimizes within-cluster spread for
-            # fixed k. Output per bucket: min, key (the ES centroid =
-            # value average), max, doc_count. Metric sub-aggs ride
-            # along; sub-buckets typed-reject (documented subset).
-            extra_p = set(params) - {"field", "buckets"}
-            if extra_p:
-                raise DslError(
-                    f"variable_width_histogram agg {name!r}: "
-                    f"unsupported params {sorted(extra_p)} "
-                    "(engine subset: field + buckets; ES's "
-                    "shard_size/initial_buffer tune its streaming "
-                    "clusterer, which the deterministic gap-split "
-                    "replaces)")
-            nb = params.get("buckets", 10)
-            if isinstance(nb, bool) or not isinstance(nb, int) \
-                    or nb < 1 or nb > 256:
-                raise DslError(
-                    "variable_width_histogram buckets must be an "
-                    "integer in [1, 256] (engine ceiling — the "
-                    "boundary set is driver-resolved like "
-                    "auto_date_histogram's interval)")
-            sub_specs_v = dict(body.get("aggs") or {})
-            if any(isinstance(sp, dict) and any(
-                    k in _BUCKET_KINDS or k in _SINGLE_BUCKET_KINDS
-                    for k in sp) for sp in sub_specs_v.values()):
-                raise DslError("variable_width_histogram supports "
-                               "metric sub-aggs only (documented "
-                               "subset)")
-            metrics = tuple(_metric(n, sp)
-                            for n, sp in sub_specs_v.items())
-            return BucketAgg(name=name, kind="variable_width_histogram",
-                             field=params["field"], buckets=nb,
-                             metrics=metrics)
-        if first_kind in ("significant_terms", "significant_text"):
-            # foreground-vs-background scored terms; no sub-aggs (the
-            # score IS the payload), size caps the output.
-            # significant_text (r11): the unit is the analyzed TOKEN of
-            # a text field (distinct per doc — ES's doc-count
-            # semantics), same JLH scorer; top-level only (documented
-            # subset — significant_terms may nest one level under a
-            # bucket).
-            H_KINDS = ("jlh", "percentage", "chi_square",
-                       "mutual_information", "gnd")
-            extra_p = set(params) - {"field", "size",
-                                     "background_filter",
-                                     "min_doc_count"} - set(H_KINDS)
-            if extra_p:
-                raise DslError(
-                    f"{first_kind} agg {name!r}: unsupported "
-                    f"params {sorted(extra_p)}")
-            if body.get("aggs"):
-                raise DslError(f"{first_kind} does not support "
-                               "sub-aggregations")
-            bgf = params.get("background_filter")
-            if bgf is not None and (not isinstance(bgf, dict) or not bgf):
-                raise DslError(
-                    f"{first_kind} agg {name!r}: background_filter "
-                    "must be a query clause object")
-            # significance heuristic (r12): at most one of the ES
-            # heuristic keys; jlh is the default. gnd typed-rejects —
-            # its return transform differs across ES versions, so a
-            # silent approximation would mis-rank (the no-silent-drops
-            # contract).
-            chosen = [h for h in H_KINDS if h in params]
-            if len(chosen) > 1:
-                raise DslError(
-                    f"{first_kind} agg {name!r}: at most one "
-                    f"significance heuristic, got {chosen}")
-            h_kind, h_neg, h_sup = "jlh", False, True
-            if chosen:
-                h_kind = chosen[0]
-                if h_kind == "gnd":
-                    raise DslError(
-                        f"{first_kind} agg {name!r}: gnd is not "
-                        "supported (engine subset — its score "
-                        "transform is ES-version-dependent; use "
-                        "jlh/chi_square/mutual_information/"
-                        "percentage)")
-                hspec = params[h_kind]
-                if not isinstance(hspec, dict):
-                    raise DslError(
-                        f"{first_kind} agg {name!r}: the {h_kind} "
-                        "heuristic must be an object")
-                h_allow = (set() if h_kind in ("jlh", "percentage")
-                           else {"include_negatives",
-                                 "background_is_superset"})
-                h_extra = set(hspec) - h_allow
-                if h_extra:
-                    raise DslError(
-                        f"{first_kind} agg {name!r}: {h_kind} takes "
-                        f"{sorted(h_allow) or 'no'} params, got "
-                        f"{sorted(h_extra)}")
-                h_neg = hspec.get("include_negatives", False)
-                h_sup = hspec.get("background_is_superset", True)
-                if not isinstance(h_neg, bool) \
-                        or not isinstance(h_sup, bool):
-                    raise DslError(
-                        f"{first_kind} agg {name!r}: heuristic flags "
-                        "must be booleans")
-            # ES significant min_doc_count: foreground-count floor
-            # before ranking. ENGINE DEFAULT 1 (every matched term
-            # ranks) — a documented deviation from ES's noise-trim
-            # default of 3; pass the param for ES behavior.
-            sig_mdc = params.get("min_doc_count", 1)
-            if isinstance(sig_mdc, bool) or not isinstance(sig_mdc, int) \
-                    or sig_mdc < 1:
-                raise DslError(f"{first_kind} agg {name!r}: "
-                               "min_doc_count must be a positive "
-                               "integer")
-            return BucketAgg(name=name, kind=first_kind,
-                             field=params["field"],
-                             size=params.get("size"),
-                             bg_filter=_node(bgf) if bgf else None,
-                             min_doc_count=sig_mdc,
-                             sig_heuristic=(h_kind, h_neg, h_sup))
-        sub_specs = dict(body.get("aggs") or {})
-        sub_bucket = None
-        bucket_subs = []
-        top_hits = None
-        pipelines: list[tuple[str, str, str]] = []
-        for n, sp in list(sub_specs.items()):
-            if not isinstance(sp, dict) or not sp:
-                raise DslError(f"agg {n!r} must be an object")
-            kind = next((k for k in sp if k != "aggs"), None)
-            if kind is None:
-                raise DslError(f"agg {n!r} has no aggregation clause")
-            if kind == "top_hits":
-                if top_hits is not None:
-                    raise DslError("at most one top_hits per bucket level")
-                top_hits = _top_hits(n, sp[kind])
-                sub_specs.pop(n)
-                continue
-            if kind in _PIPELINE_KINDS:
-                pbody = sp[kind]
-                if not isinstance(pbody, dict):
-                    raise DslError(f"pipeline agg {n!r} must be an object")
-                if kind in ("cumulative_sum", "derivative",
-                            "serial_diff", "moving_fn"):
-                    if "buckets_path" not in pbody:
-                        raise DslError(f"pipeline agg {n!r} needs a "
-                                       "'buckets_path'")
-                    lag = pbody.get("lag", 1)
-                    if not isinstance(lag, int) or lag <= 0:
-                        raise DslError("serial_diff lag must be a "
-                                       "positive integer")
-                    path = str(pbody["buckets_path"])
-                    if kind == "moving_fn":
-                        # painless subset: the built-in MovingFunctions
-                        # over the window values
-                        m = _re.fullmatch(
-                            r"MovingFunctions\.(unweightedAvg|min|max"
-                            r"|sum)\(values\)",
-                            str(pbody.get("script", "")).strip())
-                        if m is None:
-                            raise DslError(
-                                f"moving_fn agg {n!r}: only MovingFunc"
-                                "tions.unweightedAvg/min/max/sum(values)"
-                                " scripts are supported")
-                        window = pbody.get("window")
-                        if not isinstance(window, int) or window <= 0:
-                            raise DslError("moving_fn needs a positive "
-                                           "integer 'window'")
-                        shift = pbody.get("shift", 0)
-                        if not isinstance(shift, int):
-                            raise DslError("moving_fn shift must be an "
-                                           "integer")
-                        pipelines.append(
-                            (n, kind, (path, m.group(1), window, shift)))
-                    elif kind == "serial_diff":
-                        pipelines.append((n, kind, (path, lag)))
-                    elif kind == "derivative" and "unit" in pbody:
-                        # ES derivative `unit` (r12): adds a
-                        # `<name>_normalized` column = derivative ÷
-                        # (parent bucket span / unit span) — the
-                        # per-unit rate of change. Fixed-interval
-                        # date_histogram parents only (one literal
-                        # factor — the `rate` agg's premise); validated
-                        # at execution where the parent is known.
-                        u = str(pbody["unit"])
-                        if not _re.fullmatch(r"\d+[smhd]", u.strip()):
-                            raise DslError(
-                                f"derivative agg {n!r}: unit must be a "
-                                f"fixed interval ('30s'/'5m'/'1h'/'7d'),"
-                                f" got {u!r}")
-                        pipelines.append((n, kind, (path, "unit", u)))
-                    else:
-                        pipelines.append((n, kind, path))
-                elif kind == "moving_avg":
-                    # ES legacy moving_avg (r13 — removed in ES 8 in
-                    # favour of moving_fn, but ubiquitous in older
-                    # request bodies an ES porter carries over). Engine
-                    # subset (typed): models simple (default) / linear
-                    # / ewma (settings.alpha, ES default 0.3); the
-                    # window INCLUDES the current bucket (the
-                    # moving_avg contract — moving_fn's shift applies
-                    # to the moving_fn kind only). minimize/predict
-                    # typed-reject (they fit model parameters /
-                    # extrapolate buckets — out of the deterministic
-                    # frame contract).
-                    ma_extra = set(pbody) - {"buckets_path", "window",
-                                             "model", "settings"}
-                    if ma_extra:
-                        raise DslError(
-                            f"moving_avg agg {n!r}: unsupported "
-                            f"params {sorted(ma_extra)} (engine "
-                            "subset; minimize/predict change the "
-                            "result nondeterministically)")
-                    if "buckets_path" not in pbody:
-                        raise DslError(f"pipeline agg {n!r} needs a "
-                                       "'buckets_path'")
-                    ma_w = pbody.get("window", 5)
-                    if not isinstance(ma_w, int) \
-                            or isinstance(ma_w, bool) \
-                            or not 1 <= ma_w <= 100:
-                        raise DslError(
-                            f"moving_avg agg {n!r}: window must be an "
-                            "integer in [1, 100] (the window unrolls "
-                            "to per-lag expressions — bounded by "
-                            "contract)")
-                    ma_model = pbody.get("model", "simple")
-                    if ma_model not in ("simple", "linear", "ewma"):
-                        raise DslError(
-                            f"moving_avg agg {n!r}: model must be "
-                            "simple/linear/ewma (engine subset — "
-                            "holt/holt_winters fit parameters)")
-                    ma_alpha = 0.3
-                    st = pbody.get("settings")
-                    if st is not None:
-                        if not isinstance(st, dict) \
-                                or set(st) - {"alpha"}:
-                            raise DslError(
-                                f"moving_avg agg {n!r}: settings "
-                                "supports {'alpha'} only (engine "
-                                "subset)")
-                        if "alpha" in st:
-                            if ma_model != "ewma":
-                                raise DslError(
-                                    f"moving_avg agg {n!r}: alpha "
-                                    "applies to the ewma model only")
-                            a = st["alpha"]
-                            if isinstance(a, bool) or not isinstance(
-                                    a, (int, float)) or not 0 < a <= 1:
-                                raise DslError(
-                                    f"moving_avg agg {n!r}: alpha "
-                                    "must be a number in (0, 1]")
-                            ma_alpha = float(a)
-                    pipelines.append(
-                        (n, kind, (str(pbody["buckets_path"]),
-                                   ma_model, ma_w, ma_alpha)))
-                elif kind == "moving_percentiles":
-                    # ES moving_percentiles (r12): percentiles over a
-                    # moving window of buckets. Per-bucket percentiles
-                    # don't merge (ES merges TDigest sketches), so the
-                    # engine computes EXACT percentiles over the
-                    # window's SOURCE rows — the buckets_path must
-                    # name a sibling `percentiles` metric (its field +
-                    # percents drive the pass; resolved in the
-                    # validation block below).
-                    mp_extra = set(pbody) - {"buckets_path", "window",
-                                             "shift"}
-                    if mp_extra:
-                        raise DslError(
-                            f"moving_percentiles agg {n!r}: "
-                            f"unsupported params {sorted(mp_extra)} "
-                            "(engine subset)")
-                    if "buckets_path" not in pbody:
-                        raise DslError(f"pipeline agg {n!r} needs a "
-                                       "'buckets_path'")
-                    mp_w = pbody.get("window")
-                    if not isinstance(mp_w, int) \
-                            or isinstance(mp_w, bool) or mp_w <= 0 \
-                            or mp_w > 1000:
-                        raise DslError(
-                            f"moving_percentiles agg {n!r}: window "
-                            "must be an integer in [1, 1000] (each "
-                            "source row fans out to `window` bucket "
-                            "windows — bounded by contract)")
-                    mp_s = pbody.get("shift", 0)
-                    if not isinstance(mp_s, int) \
-                            or isinstance(mp_s, bool):
-                        raise DslError(
-                            f"moving_percentiles agg {n!r}: shift "
-                            "must be an integer")
-                    pipelines.append(
-                        (n, kind, (str(pbody["buckets_path"]),
-                                   mp_w, mp_s)))
-                elif kind == "cumulative_cardinality":
-                    # ES cumulative_cardinality (r12): the running
-                    # count of DISTINCT values seen up to each bucket.
-                    # Per-bucket cardinalities don't merge into a
-                    # cumulative one, so the buckets_path must name a
-                    # sibling `cardinality` metric at this level — its
-                    # FIELD drives a first-appearance pass over the
-                    # source frame at execution (resolved in the
-                    # validation block below, where `metrics` exists).
-                    cc_extra = set(pbody) - {"buckets_path"}
-                    if cc_extra:
-                        raise DslError(
-                            f"cumulative_cardinality agg {n!r}: "
-                            f"unsupported params {sorted(cc_extra)} "
-                            "(engine subset)")
-                    if "buckets_path" not in pbody:
-                        raise DslError(f"pipeline agg {n!r} needs a "
-                                       "'buckets_path'")
-                    pipelines.append((n, kind, str(pbody["buckets_path"])))
-                elif kind == "normalize":
-                    if "buckets_path" not in pbody:
-                        raise DslError(f"normalize agg {n!r} needs a "
-                                       "'buckets_path'")
-                    method = pbody.get("method")
-                    if method not in _NORMALIZE_METHODS:
-                        raise DslError(
-                            f"normalize agg {n!r}: method must be one "
-                            f"of {', '.join(_NORMALIZE_METHODS)}, got "
-                            f"{method!r}")
-                    pipelines.append(
-                        (n, kind, (str(pbody["buckets_path"]), method)))
-                elif kind in ("bucket_script", "bucket_selector"):
-                    bp = pbody.get("buckets_path")
-                    if not isinstance(bp, dict) or not bp \
-                            or "script" not in pbody:
-                        raise DslError(
-                            f"{kind} agg {n!r} needs "
-                            "{'buckets_path': {param: path}, "
-                            "'script': str}")
-                    paths = {str(k): str(v) for k, v in bp.items()}
-                    pipelines.append(
-                        (n, kind,
-                         (_compile_bucket_script(n, str(pbody["script"]),
-                                                 paths), paths)))
-                else:  # bucket_sort
-                    bsort = _sort(pbody.get("sort"))
-                    bsize = pbody.get("size")
-                    if bsize is not None and (not isinstance(bsize, int)
-                                              or bsize <= 0):
-                        raise DslError("bucket_sort size must be a "
-                                       "positive integer")
-                    if not bsort and bsize is None:
-                        raise DslError(f"bucket_sort agg {n!r} needs "
-                                       "'sort' and/or 'size'")
-                    pipelines.append((n, kind, (bsort, bsize)))
-                sub_specs.pop(n)
-                continue
-            if kind in _BUCKET_KINDS:
-                bucket_subs.append(n)
-        if bucket_subs:
-            if len(bucket_subs) != 1:
-                raise DslError("at most one nested bucket agg is supported"
-                               " per level")
-            # recursion: sub-buckets nest to ARBITRARY depth, each level
-            # carrying its own metrics and at most one deeper bucket
-            sub_bucket = _aggs(
-                {bucket_subs[0]: sub_specs.pop(bucket_subs[0])})
-            # significant_terms may nest ONE level deep as the terminal
-            # sub-agg (per-parent foreground vs whole-index background,
-            # r6); the engine rejects deeper placements
-        metrics = tuple(_metric(n, s) for n, s in sub_specs.items())
-        order = None
-        if "order" in params:
-            # ES terms order: one {target: dir} object, or a LIST of
-            # them — multi-criteria ordering, applied left to right (r6)
-            ospec = params["order"]
-            specs = ospec if isinstance(ospec, list) else [ospec]
-            if not specs or not all(
-                    isinstance(o, dict) and len(o) == 1 for o in specs):
-                raise DslError("terms order must be {target: asc|desc} "
-                               "or a list of those")
-            valid = {"_count", "_key"}
-            for m in metrics:
-                valid.add(m.name)
-                if m.kind in ("stats", "extended_stats"):
-                    valid.update(
-                        f"{m.name}.{n[len(m.name) + 1:]}"
-                        for n in m.out_names())
-            crits = []
-            for o in specs:
-                (target, direction), = o.items()
-                if direction not in ("asc", "desc"):
-                    raise DslError(f"bad order direction {direction!r}")
-                if target not in valid:
-                    raise DslError(f"order target {target!r} is neither "
-                                   "_count, _key, nor a sub-agg name")
-                crits.append((target, direction == "asc"))
-            if len({t for t, _ in crits}) != len(crits):
-                raise DslError("duplicate terms order targets")
-            order = tuple(crits)
-        if first_kind == "histogram":
-            iv = params.get("interval")
-            if iv is None:
-                raise DslError("histogram needs an 'interval'")
-            if isinstance(iv, bool) or not isinstance(iv, (int, float)) \
-                    or iv <= 0:
-                raise DslError("histogram interval must be a number > 0")
-        if first_kind == "date_histogram" \
-                and "calendar_interval" not in params \
-                and "fixed_interval" not in params:
-            raise DslError("date_histogram needs a 'calendar_interval' "
-                           "or 'fixed_interval'")
-        ranges: tuple = ()
-        if first_kind == "range":
-            ranges = _ranges(name, params.get("ranges"))
-        elif first_kind == "date_range":
-            ranges = _date_ranges(name, params.get("ranges"),
-                                  params.get("format"))
-        elif first_kind == "ip_range":
-            ranges = _ip_ranges(name, params.get("ranges"))
-        ip_plen = None
-        ip_append = False
-        if first_kind == "ip_prefix":
-            ip_plen = params.get("prefix_length")
-            if isinstance(ip_plen, bool) or not isinstance(ip_plen, int) \
-                    or not 1 <= ip_plen <= 32:
-                raise DslError(f"ip_prefix agg {name!r}: prefix_length "
-                               "must be an integer in [1, 32] "
-                               "(IPv4 — engine subset)")
-            if params.get("is_ipv6", False) is not False:
-                raise DslError(f"ip_prefix agg {name!r}: is_ipv6 is "
-                               "not supported (engine subset — IPv4 "
-                               "dotted-quad fields only)")
-            ip_append = params.get("append_prefix_length", False)
-            if not isinstance(ip_append, bool):
-                raise DslError(f"ip_prefix agg {name!r}: "
-                               "append_prefix_length must be a boolean")
-        filter_nodes: tuple = ()
-        if first_kind in ("filters", "adjacency_matrix"):
-            fspec = params.get("filters")
-            if not isinstance(fspec, dict) or not fspec:
-                raise DslError(f"{first_kind} agg {name!r} needs a "
-                               "non-empty 'filters' object")
-            filter_nodes = tuple((fname, _node(clause))
-                                 for fname, clause in fspec.items())
-            if first_kind == "adjacency_matrix" \
-                    and any("&" in fname for fname, _ in filter_nodes):
-                raise DslError("adjacency_matrix filter names must not "
-                               "contain '&' (the intersection separator)")
-            if first_kind == "filters" and (
-                    params.get("other_bucket")
-                    or "other_bucket_key" in params):
-                # ES other_bucket (r12): one extra bucket of the docs
-                # matching NONE of the named filters — a parse-time
-                # desugar to Not(Or(all clauses)); the engine's filters
-                # machinery then treats it like any named bucket
-                ob = params.get("other_bucket", True)
-                if not isinstance(ob, bool):
-                    raise DslError("filters other_bucket must be a "
-                                   "boolean")
-                ob_key = params.get("other_bucket_key", "_other_")
-                if not isinstance(ob_key, str) or not ob_key:
-                    raise DslError("filters other_bucket_key must be a "
-                                   "non-empty string")
-                if ob_key in {fname for fname, _ in filter_nodes}:
-                    raise DslError(
-                        f"filters other_bucket_key {ob_key!r} collides "
-                        "with a named filter bucket")
-                if ob:
-                    filter_nodes += ((ob_key, Not(Or(tuple(
-                        n for _, n in filter_nodes)))),)
-        mdc = params.get("min_doc_count")
-        if mdc is not None and (not isinstance(mdc, int) or mdc < 0):
-            raise DslError("min_doc_count must be a non-negative integer")
-        offset = params.get("offset")
-        if offset is not None:
-            if first_kind == "histogram":
-                if not isinstance(offset, (int, float)) \
-                        or isinstance(offset, bool):
-                    raise DslError("histogram offset must be numeric")
-                offset = float(offset) % float(params["interval"])
-            elif first_kind == "date_histogram":
-                # ES date_histogram offset: a signed duration shifting
-                # every bucket boundary (e.g. "+6h" → day buckets start
-                # at 06:00). Fixed units only, like ES (the offset must
-                # be smaller than the calendar unit to be meaningful).
-                m = _re.fullmatch(r"([+-]?)(\d+)([smhd])", str(offset))
-                if m is None:
-                    raise DslError(
-                        "date_histogram offset must be ±N(s|m|h|d)")
-                mult = {"s": 1, "m": 60, "h": 3600, "d": 86400}
-                secs = int(m.group(2)) * mult[m.group(3)]
-                offset = float(-secs if m.group(1) == "-" else secs)
-            else:
-                raise DslError("offset is a histogram/date_histogram "
-                               "param")
-
-        tz_named = None
-        tz = params.get("time_zone")
-        if tz is not None:
-            if first_kind != "date_histogram":
-                raise DslError("time_zone is a date_histogram param")
-            if not isinstance(tz, str) or not tz:
-                raise DslError("time_zone must be a non-empty string")
-            tzsec = _fixed_tz_seconds(tz)
-            if tzsec is None:
-                # named IANA zone: the DST-variable offset rules out
-                # the effective-offset fold, so the engine truncates in
-                # local wall-clock per instant. Combinations that must
-                # GENERATE aligned keys outside the data (min_doc_count
-                # 0 spans, extended_bounds) typed-reject — fixed
-                # offsets cover those; fixed_interval's epoch alignment
-                # under a DST-variable zone is engine-ambiguous, so it
-                # typed-rejects too (ES resolves it with its own
-                # rounding prepare; fixed offsets reproduce it exactly)
-                try:
-                    from zoneinfo import ZoneInfo
-                    ZoneInfo(tz)
-                except Exception:
-                    raise DslError(f"unknown time_zone {tz!r}")
-                if params.get("fixed_interval") is not None:
-                    raise DslError(
-                        "a named time_zone needs calendar_interval "
-                        "(fixed-offset zones work with fixed_interval)")
-                if mdc == 0 or "extended_bounds" in params:
-                    raise DslError(
-                        "a named time_zone cannot combine with "
-                        "min_doc_count 0 / extended_bounds (key "
-                        "generation needs a fixed offset) — use a "
-                        "fixed-offset time_zone")
-                tz_named = tz
-            elif tzsec:
-                # boundary = trunc_zone(ts) + offset, trunc_zone(ts) =
-                # trunc(ts + tz) - tz → effective offset = offset - tz
-                offset = float(offset or 0.0) - tzsec
-
-        def _inc_exc(key: str):
-            raw = params.get(key)
-            if raw is None:
-                return None
-            if first_kind != "terms":
-                raise DslError(f"{key} is a terms-agg param")
-            if isinstance(raw, str):
-                return ("re", raw)
-            if isinstance(raw, list) and raw:
-                return ("values", tuple(raw))
-            if isinstance(raw, dict) and key == "include":
-                # ES partitioned terms (r12): walk a huge-cardinality
-                # field in disjoint deterministic slices —
-                # {"partition": p, "num_partitions": m}. The engine
-                # partitioner is pmod(xxhash64(key-as-string), m)
-                # (documented constant; ES's own partition hash is
-                # likewise engine-internal — the CONTRACT is
-                # deterministic + disjoint + complete, pinned by test)
-                if set(raw) != {"partition", "num_partitions"}:
-                    raise DslError(
-                        "terms include partition form needs exactly "
-                        "{'partition': p, 'num_partitions': m}")
-                p, m = raw["partition"], raw["num_partitions"]
-                if not isinstance(p, int) or not isinstance(m, int) \
-                        or isinstance(p, bool) or isinstance(m, bool) \
-                        or m <= 0 or not 0 <= p < m:
-                    raise DslError(
-                        "terms include partition needs integers "
-                        "0 <= partition < num_partitions")
-                return ("partition", p, m)
-            raise DslError(f"terms {key} must be a regex string, a "
-                           "non-empty value list, or the include "
-                           "partition object")
-
-        include = _inc_exc("include")
-        exclude = _inc_exc("exclude")
-        if top_hits is not None and sub_bucket is not None:
-            raise DslError("top_hits is supported on the innermost "
-                           "bucket level only")
-        if pipelines:
-            if sub_bucket is not None:
-                raise DslError(
-                    "pipeline aggs are supported on the innermost "
-                    "bucket level only (declare them inside the "
-                    "deepest bucket's aggs)")
-            valid_paths = {"_count"} | {
-                n for m in metrics for n in m.out_names()}
-            for pi, (pn, pk, payload) in enumerate(pipelines):
-                if pk == "moving_percentiles":
-                    if first_kind not in ("histogram", "date_histogram"):
-                        raise DslError(
-                            "moving_percentiles needs an ordered "
-                            "histogram/date_histogram bucket "
-                            "(ES requirement)")
-                    mp_path, mp_w, mp_s = payload
-                    tgt = next((m for m in metrics
-                                if m.name == mp_path
-                                and m.kind == "percentiles"), None)
-                    if tgt is None:
-                        raise DslError(
-                            f"moving_percentiles agg {pn!r}: "
-                            f"buckets_path {mp_path!r} must name a "
-                            "sibling percentiles metric (its field "
-                            "and percents drive the source-window "
-                            "pass)")
-                    pipelines[pi] = (pn, pk, (mp_path, tgt.field,
-                                              tgt.percents, mp_w,
-                                              mp_s))
-                    continue
-                if pk == "cumulative_cardinality":
-                    if first_kind not in ("histogram", "date_histogram"):
-                        raise DslError(
-                            "cumulative_cardinality needs an ordered "
-                            "histogram/date_histogram bucket "
-                            "(ES requirement)")
-                    tgt = next((m for m in metrics
-                                if m.name == payload
-                                and m.kind == "cardinality"), None)
-                    if tgt is None:
-                        raise DslError(
-                            f"cumulative_cardinality agg {pn!r}: "
-                            f"buckets_path {payload!r} must name a "
-                            "sibling cardinality metric at this level "
-                            "(its field drives the first-appearance "
-                            "pass)")
-                    # rewrite the payload to carry the resolved field
-                    pipelines[pi] = (pn, pk, (payload, tgt.field))
-                    continue
-                if pk in ("cumulative_sum", "derivative",
-                          "serial_diff", "moving_fn", "moving_avg"):
-                    # sequence aggs need a key-ordered frame (ES
-                    # requires histogram parents)
-                    if first_kind not in ("histogram", "date_histogram"):
-                        raise DslError(
-                            f"{pk} needs an ordered histogram/"
-                            "date_histogram bucket (ES requirement)")
-                    path = payload if isinstance(payload, str) \
-                        else payload[0]
-                    if path not in valid_paths:
-                        raise DslError(f"pipeline agg {pn!r}: unknown "
-                                       f"buckets_path {path!r}")
-                elif pk == "normalize":
-                    # any multi-bucket parent qualifies (ES normalize)
-                    if payload[0] not in valid_paths:
-                        raise DslError(f"pipeline agg {pn!r}: unknown "
-                                       f"buckets_path {payload[0]!r}")
-                elif pk in ("bucket_script", "bucket_selector"):
-                    for tgt in payload[1].values():
-                        if tgt != "_count" and tgt not in valid_paths:
-                            raise DslError(
-                                f"pipeline agg {pn!r}: unknown "
-                                f"buckets_path {tgt!r}")
-                else:  # bucket_sort — targets are bucket columns
-                    for fld, _asc, _nf in payload[0]:
-                        if fld not in valid_paths | {"_key"}:
-                            raise DslError(
-                                f"bucket_sort {pn!r}: unknown sort "
-                                f"target {fld!r}")
-        eb = None
-        if "extended_bounds" in params:
-            ebs = params["extended_bounds"]
-            if not isinstance(ebs, dict) \
-                    or "min" not in ebs or "max" not in ebs:
-                raise DslError("extended_bounds needs {'min': …, 'max': …}")
-            eb = (ebs["min"], ebs["max"])
-        hb = None
-        if "hard_bounds" in params:
-            hbs = params["hard_bounds"]
-            if not isinstance(hbs, dict) \
-                    or "min" not in hbs or "max" not in hbs:
-                raise DslError("hard_bounds needs {'min': …, 'max': …}")
-            if eb is not None:
-                raise DslError("hard_bounds and extended_bounds are "
-                               "mutually exclusive (ES contract)")
-            # type-validate per parent kind (r12 review finding): a
-            # numeric bound on date_histogram would cast as epoch
-            # SECONDS where ES means MILLIS — silently empty buckets;
-            # reject rather than guess the unit
-            for side in ("min", "max"):
-                v = hbs[side]
-                if first_kind == "histogram":
-                    if isinstance(v, bool) \
-                            or not isinstance(v, (int, float)):
-                        raise DslError(
-                            f"histogram hard_bounds {side} must be "
-                            "numeric")
-                else:  # date_histogram
-                    if not isinstance(v, str):
-                        raise DslError(
-                            f"date_histogram hard_bounds {side} must "
-                            "be a date STRING (engine subset — a "
-                            "numeric epoch is ambiguous between "
-                            "seconds and ES's millis)")
-            hb = (hbs["min"], hbs["max"])
-        siblings: list[tuple[str, str, str, tuple[float, ...]]] = []
-        if sib_raw:
-            # sibling aggs aggregate over the TERMINAL (leaf) bucket
-            # level's frame; the buckets_path must walk the full chain
-            # of level names down to a leaf metric or _count (r6 —
-            # previously single-level only)
-            chain = [name]
-            leaf: Any = None
-            b = sub_bucket
-            while b is not None and not isinstance(b, tuple):
-                chain.append(b.name)
-                leaf = b
-                b = getattr(b, "sub", None)
-            leaf_metrics = metrics if leaf is None else leaf.metrics
-            depth = len(chain) - 1
-            count_col = "doc_count" if depth == 0 else (
-                "sub_doc_count" if depth == 1
-                else f"sub{depth}_doc_count")
-            sib_valid = {"_count"} | {
-                n for m in leaf_metrics for n in m.out_names()}
-            want = ">".join(chain)
-            for sn, sk, spath, spcts in sib_raw:
-                *bkts, metric = spath.split(">")
-                if bkts != chain or metric not in sib_valid:
-                    raise DslError(
-                        f"sibling agg {sn!r}: buckets_path {spath!r} "
-                        f"must be '{want}>[_count|leaf metric]'")
-                siblings.append(
-                    (sn, sk,
-                     count_col if metric == "_count" else metric,
-                     spcts))
-        bsize = params.get("size")
-        if bsize is not None and (isinstance(bsize, bool)
-                                  or not isinstance(bsize, int)
-                                  or bsize < 1):
-            # fuzz catch (r14.75): a negative size leaked an
-            # AnalysisException out of the bucket limit (ES contract:
-            # [size] must be greater than 0)
-            raise DslError(f"{first_kind} agg {name!r}: size must be "
-                           f"a positive integer, got {bsize!r}")
-        return BucketAgg(
-            name=name, kind=first_kind,
-            field=params.get("field", ""),
-            size=bsize,
-            interval=params.get("interval"),
-            offset=offset,
-            include=include,
-            exclude=exclude,
-            calendar_interval=params.get("calendar_interval"),
-            fixed_interval=params.get("fixed_interval"),
-            time_zone=tz_named,
-            order=order,
-            ranges=ranges,
-            key_format=(params.get("format")
-                        if first_kind == "date_range" else None),
-            filter_nodes=filter_nodes,
-            missing=params.get("missing"),
-            min_doc_count=mdc,
-            metrics=metrics,
-            top_hits=top_hits,
-            pipelines=tuple(pipelines),
-            siblings=tuple(siblings),
-            extended_bounds=eb,
-            hard_bounds=hb,
-            precision=ip_plen,
-            append_prefix=ip_append,
-            sub=sub_bucket)
-    # metrics-only request: every entry must be a metric
-    return tuple(_metric(n, s) for n, s in entries)
-
-
 # ------------------------------------------------------ clause parameters
 #
 # Every query clause declares its parameters as a spec: key → tag, where
@@ -4069,17 +1962,20 @@ def _is_num(v: Any) -> bool:
     return isinstance(v, (int, float)) and not isinstance(v, bool)
 
 
-def _int_min(lo: int) -> _Tag:
-    what = {0: "a non-negative integer", 1: "a positive integer"}
-    return _tag(what.get(lo, f"an integer >= {lo}"),
-                lambda v: _is_int(v) and v >= lo)
+def _int_min(lo: float, hi: float = math.inf) -> _Tag:
+    what = {0: "a non-negative integer", 1: "a positive integer",
+            -math.inf: "an integer"}
+    return _tag(what.get(lo, f"an integer >= {lo}") if hi == math.inf
+                else f"an integer in [{lo}, {hi}]",
+                lambda v: _is_int(v) and lo <= v <= hi)
 
 
 def _number(lo: float = -math.inf, hi: float = math.inf, *,
             lo_open: bool = False, hi_open: bool = False,
-            strings: bool = False) -> _Tag:
-    """A JSON number (never a boolean) within the bounds; ``strings``
-    also reads numeric strings, as ``boost`` always has."""
+            strings: bool = False, keep: bool = False) -> _Tag:
+    """A JSON number (never a boolean) within the bounds, read as a
+    float unless ``keep``; ``strings`` also reads numeric strings, as
+    ``boost`` always has."""
     def ok(v: Any) -> bool:
         f = float(v) if strings and isinstance(v, str) else v
         return _is_num(f) and (lo < f if lo_open else lo <= f) \
@@ -4089,7 +1985,7 @@ def _number(lo: float = -math.inf, hi: float = math.inf, *,
             if hi == math.inf
             else f"a number in {'(' if lo_open else '['}{lo}, {hi}"
                  f"{')' if hi_open else ']'}")
-    return _tag(desc, ok, float)
+    return _tag(desc, ok, None if keep else float)
 
 
 def _enum(*choices: str, fold: bool = False, desc: str = "") -> _Tag:
@@ -5554,6 +3450,1473 @@ def _distance_feature(kind: str, body: Any, spec: dict) -> Node:
                                   "'pivot': ...}", what="unknown keys")
     return DistanceFeature(p["field"], p["origin"], p["pivot"],
                            p["boost"])
+
+
+# ------------------------------------------------------ aggregation kinds
+#
+# Every aggregation kind is one row of `_AGGS`, registered with
+# `@_agg(role, *kinds, **spec)`. The role says where the kind may sit:
+#   metric    a metric (at the top level or inside a bucket level);
+#   bucket    a bucket kind that may also nest as a level's one deeper
+#             bucket;
+#   top       composite, the single-bucket, sampler and join kinds:
+#             top level (or under another top kind);
+#   pipeline  a per-level pipeline inside a bucket level's aggs;
+#   sibling   a sibling pipeline declared next to a bucket agg;
+#   top_hits  the hits of a bucket level.
+# The spec declares the kind's parameters in the clause vocabulary and
+# `_params` checks it; a builder gets (kind, name, checked parameters,
+# parsed sub-aggs) and keeps the rules that tie parameters together. A
+# row's `subs` parses the sub-aggs (`_level`, `_metric_subs`,
+# `_no_subs`, `_any_subs`, or the raw object), `siblings` allows
+# sibling pipelines beside it, `ordered` marks the pipelines that need a
+# histogram/date_histogram parent, and `resolve` checks a pipeline's
+# buckets_path against its level's metrics.
+
+
+@dataclass(frozen=True)
+class _AggKind:
+    role: str
+    build: Callable[..., Any]
+    spec: dict[str, _Tag] | None      # None: the body is passed raw
+    subs: Callable[[str, dict], Any] | None = None
+    siblings: bool = False
+    ordered: bool = False
+    resolve: Callable[..., Any] | None = None
+    null: bool = False                # a null body reads as {}
+    # (what, note) of the unknown-parameter error
+    unknown: tuple[str, str] = ("unsupported params", "engine subset")
+
+
+_AGGS: dict[str, _AggKind] = {}
+
+
+def _agg(role: str, *kinds: str, subs=None, siblings: bool = False,
+         ordered: bool = False, resolve=None, null: bool = False,
+         what: str = "unsupported params", note: str = "engine subset",
+         raw: bool = False, **spec: _Tag):
+    """Register the decorated ``build(kind, name, params, sub)`` as the
+    builder of each of ``kinds``; ``raw`` passes the body unchecked."""
+    def register(build):
+        for kind in kinds:
+            _AGGS[kind] = _AggKind(role, build, None if raw else spec,
+                                   subs, siblings, ordered, resolve,
+                                   null, (what, note))
+        return build
+    return register
+
+
+def _role(kind: str) -> str | None:
+    return _AGGS[kind].role if kind in _AGGS else None
+
+
+def _agg_kind(name: str, body: Any) -> str:
+    """The kind of one agg entry: its one key besides ``aggs``."""
+    if not isinstance(body, dict) or not body:
+        raise DslError(f"agg {name!r} must be an object")
+    kind = next((k for k in body if k != "aggs"), None)
+    if kind is None:
+        raise DslError(f"agg {name!r} has no aggregation clause")
+    return kind
+
+
+def _build(kind: str, name: str, body: Any, sub: Any = None) -> Any:
+    """Check ``body`` against the kind's spec and run its builder."""
+    row = _AGGS[kind]
+    if row.spec is not None:
+        if body is None and row.null:
+            body = {}
+        need = next((k for k, t in row.spec.items() if t.default is _REQ
+                     and k not in body), None) \
+            if isinstance(body, dict) else None
+        body = _params(f"{kind} agg {name!r}", body, row.spec, need and (
+            f"{'an' if need[0] in 'aeiou' else 'a'} {need!r}"),
+            what=row.unknown[0], note=row.unknown[1])
+    return row.build(kind, name, body, sub)
+
+
+def _entry(name: str, spec: Any) -> tuple[str, Any]:
+    """(kind, value) of an entry that takes no sub-aggs."""
+    kind = _agg_kind(name, spec)
+    if len(spec) != 1:
+        raise DslError(f"unexpected keys {sorted(set(spec) - {kind})} "
+                       f"in {kind} agg {name!r}")
+    return kind, _build(kind, name, spec[kind])
+
+
+def _aggs(spec: Any) -> Any:
+    """One aggregation object: sibling pipelines split from the rest,
+    then a metrics-only tuple or the one bucket/top agg built by its
+    row, its sub-aggs parsed by the row's ``subs``."""
+    if spec is None:
+        return None
+    if not isinstance(spec, dict) or not spec:
+        raise DslError("aggs must be a non-empty object")
+    kinds = {n: _agg_kind(n, body) for n, body in spec.items()}
+    sibs = [n for n, k in kinds.items() if _role(k) == "sibling"]
+    rest = [n for n in spec if n not in sibs]
+    if not rest:
+        raise DslError("sibling pipeline aggs need a bucket agg to "
+                       "aggregate over")
+    kind = kinds[rest[0]]
+    if _role(kind) not in ("bucket", "top"):
+        if sibs:
+            raise DslError("sibling pipeline aggs need a bucket agg "
+                           "sibling")
+        return tuple(_metric(n, spec[n]) for n in rest)
+    if len(rest) != 1:
+        raise DslError("exactly one bucket agg is supported per request")
+    name, body, row = rest[0], spec[rest[0]], _AGGS[kind]
+    extra = set(body) - {kind, "aggs"}
+    if extra:
+        raise DslError(f"unexpected keys {sorted(extra)} in {kind} agg "
+                       f"{name!r} (siblings go under 'aggs')")
+    if sibs and not row.siblings:
+        raise DslError("sibling pipeline aggs need a bucket agg sibling; "
+                       f"they are not supported beside {kind} buckets")
+    sib = [(n, *_entry(n, spec[n])) for n in sibs]
+    subs = body.get("aggs")
+    if subs is not None and not isinstance(subs, dict):
+        raise DslError(f"agg {name!r}: aggs must be an object of "
+                       "sub-aggregations")
+    agg = _build(kind, name, body[kind], row.subs(kind, subs or {}))
+    return _with_siblings(agg, sib) if sib else agg
+
+
+def _metric(name: str, spec: Any) -> MetricAgg:
+    sub = None
+    if isinstance(spec, dict) and set(spec) == {"reverse_nested", "aggs"}:
+        # reverse_nested is the one metric kind that may carry sub-aggs
+        # (ES: aggregation continues in parent scope)
+        sub, spec = spec["aggs"], {"reverse_nested": spec["reverse_nested"]}
+    if not isinstance(spec, dict) or len(spec) != 1:
+        raise DslError(
+            f"metric agg {name!r} must have exactly one kind: {spec!r}")
+    (kind, body), = spec.items()
+    if _role(kind) != "metric":
+        metrics = [k for k in _AGGS if _role(k) == "metric"]
+        raise DslError(f"unsupported metric agg {kind!r} (supported: "
+                       f"{', '.join(metrics)})")
+    return _build(kind, name, body, sub)
+
+
+# -- sub-agg parsers (a row's `subs`)
+
+def _no_subs(kind: str, subs: dict) -> None:
+    if subs:
+        raise DslError(f"{kind} does not support sub-aggregations")
+
+
+def _any_subs(kind: str, subs: dict) -> Any:
+    return _aggs(subs) if subs else None
+
+
+def _raw_subs(kind: str, subs: dict) -> dict:
+    return subs
+
+
+def _metric_subs(kind: str, subs: dict) -> tuple[MetricAgg, ...]:
+    for n, sp in subs.items():
+        k = _agg_kind(n, sp)
+        if _role(k) in ("bucket", "top"):
+            raise DslError(f"{kind} supports metric sub-aggs only "
+                           f"(documented subset), got {k!r}")
+    return tuple(_metric(n, sp) for n, sp in subs.items())
+
+
+def _level(kind: str, subs: dict) -> tuple:
+    """A bucket level's sub-aggs: (metrics, the one deeper bucket,
+    top_hits, pipelines as (name, kind, payload))."""
+    metrics, deeper, pipes, top_hits = {}, {}, [], None
+    for n, sp in subs.items():
+        k = _agg_kind(n, sp)
+        if _role(k) == "top_hits":
+            if top_hits is not None:
+                raise DslError("at most one top_hits per bucket level")
+            top_hits = _entry(n, sp)[1]
+        elif _role(k) == "pipeline":
+            pipes.append((n, *_entry(n, sp)))
+        else:
+            (deeper if _role(k) == "bucket" else metrics)[n] = sp
+    if len(deeper) > 1:
+        raise DslError("at most one nested bucket agg is supported per "
+                       "level")
+    # sub-buckets nest to arbitrary depth, each level carrying its own
+    # metrics and at most one deeper bucket
+    return (tuple(_metric(n, sp) for n, sp in metrics.items()),
+            _aggs(deeper) if deeper else None, top_hits, pipes)
+
+
+def _bucket(kind: str, name: str, level: tuple, **kw: Any) -> BucketAgg:
+    """A bucket level with its sub-aggs; pipelines resolve against the
+    level's metrics."""
+    metrics, sub, top_hits, pipes = level
+    if top_hits is not None and sub is not None:
+        raise DslError("top_hits is supported on the innermost bucket "
+                       "level only")
+    if pipes and sub is not None:
+        raise DslError("pipeline aggs are supported on the innermost "
+                       "bucket level only (declare them inside the "
+                       "deepest bucket's aggs)")
+    valid = {"_count"} | {n for m in metrics for n in m.out_names()}
+    pipelines = []
+    for pn, pk, payload in pipes:
+        if _AGGS[pk].ordered and kind not in ("histogram",
+                                              "date_histogram"):
+            raise DslError(f"{pk} needs an ordered histogram/"
+                           "date_histogram bucket (ES requirement)")
+        pipelines.append((pn, pk, _AGGS[pk].resolve(pn, payload, metrics,
+                                                     valid)))
+    return BucketAgg(name=name, kind=kind, metrics=metrics,
+                     top_hits=top_hits, pipelines=tuple(pipelines),
+                     sub=sub, **kw)
+
+
+def _with_siblings(agg: BucketAgg, sibs: list) -> BucketAgg:
+    """Attach sibling pipelines: each aggregates over the TERMINAL
+    bucket level's frame, so its buckets_path walks the full chain of
+    level names down to a leaf metric or _count."""
+    chain, leaf, b = [agg.name], agg, agg.sub
+    while b is not None and not isinstance(b, tuple):
+        chain.append(b.name)
+        leaf, b = b, getattr(b, "sub", None)
+    depth = len(chain) - 1
+    count_col = ("doc_count", "sub_doc_count")[depth] if depth < 2 \
+        else f"sub{depth}_doc_count"
+    valid = {"_count"} | {n for m in leaf.metrics for n in m.out_names()}
+    want = ">".join(chain)
+    out = []
+    for sn, sk, (spath, spcts) in sibs:
+        *bkts, metric = spath.split(">")
+        if bkts != chain or metric not in valid:
+            raise DslError(f"sibling agg {sn!r}: buckets_path {spath!r} "
+                           f"must be '{want}>[_count|leaf metric]'")
+        out.append((sn, sk, count_col if metric == "_count" else metric,
+                    spcts))
+    return _dc_replace(agg, siblings=tuple(out))
+
+
+# -- shared parameter shapes
+
+FIELD = NAME(_REQ)
+_MISSING = _tag("a number or string",
+                lambda v: _is_num(v) or isinstance(v, str))
+_ASC = _enum("asc", "desc")
+_SORT = _Tag("a sort (a field, {field: order} or a list of those)", _sort)
+_PERCENTS = _Tag("a non-empty list of numbers in [0, 100]",
+                 lambda v: _list_of(v, _number(0, 100)))
+_DURATION_UNITS = {"s": 1, "m": 60, "h": 3600, "d": 86400}
+
+
+def _list_of(v: Any, tag: _Tag, lo: int = 1) -> tuple:
+    """The checked entries of a list of at least ``lo`` ``tag`` values."""
+    if not isinstance(v, list) or len(v) < lo:
+        raise ValueError(v)
+    return tuple(tag.check(x) for x in v)
+
+
+def _field_of(key: str) -> _Tag:
+    """``{"field": name}``, read as the name."""
+    return _Tag("{'field': name}",
+                lambda v: _params(key, v, {"field": FIELD})["field"])
+
+
+def _duration(v: Any) -> float:
+    """Seconds of a signed ``±N(s|m|h|d)`` offset."""
+    m = _re.fullmatch(r"([+-]?)(\d+)([smhd])", v) \
+        if isinstance(v, str) else None
+    if m is None:
+        raise ValueError(v)
+    secs = int(m.group(2)) * _DURATION_UNITS[m.group(3)]
+    return float(-secs if m.group(1) == "-" else secs)
+
+
+_OFFSET = _Tag("±N(s|m|h|d)", _duration)
+
+
+def _clause_object(v: Any) -> Node:
+    if not isinstance(v, dict) or not v:
+        raise ValueError(v)
+    return _node(v)
+
+
+def _zone_offset(tz: str) -> int | None:
+    """Seconds of a fixed-offset ``time_zone``; None for a named IANA
+    zone (checked to exist)."""
+    secs = _fixed_tz_seconds(tz)
+    if secs is None:
+        try:
+            from zoneinfo import ZoneInfo
+            ZoneInfo(tz)
+        except Exception:
+            raise DslError(f"unknown time_zone {tz!r}") from None
+    return secs
+
+
+# ------------------------------------------------------------ metric kinds
+
+@_agg("metric", "avg", "sum", "min", "max", "value_count", "stats",
+      "extended_stats", "geo_centroid", "geo_bounds", "string_stats",
+      field=FIELD, missing=_MISSING)
+@_agg("metric", "cardinality", field=FIELD, missing=_MISSING,
+      precision_threshold=INT1)
+@_agg("metric", "percentiles", field=FIELD, missing=_MISSING,
+      percents=_PERCENTS(_DEFAULT_PERCENTS), compression=INT1,
+      tdigest=_Tag("{'compression': n}", lambda v: _params(
+          "tdigest", v, {"compression": INT1})["compression"]))
+def _simple_metric(kind: str, name: str, p: dict, sub: Any) -> MetricAgg:
+    # `missing` substitutes null field values instead of dropping them
+    # from the aggregate; `precision_threshold` opts cardinality into
+    # HLL++ and `compression` percentiles into the sketch (ES nests it
+    # under `tdigest`; a flat one is read too)
+    comp = p.get("compression")
+    return MetricAgg(name, kind, p["field"],
+                     precision_threshold=p.get("precision_threshold"),
+                     percents=p.get("percents", _DEFAULT_PERCENTS),
+                     compression=p.get("tdigest") if comp is None
+                     else comp, missing=p["missing"])
+
+
+@_agg("metric", "boxplot", "median_absolute_deviation", field=FIELD,
+      compression=INT1)
+def _sketch_metric(kind: str, name: str, p: dict, sub: Any) -> MetricAgg:
+    # exact percentiles by default; `compression` opts into the
+    # percentile_approx sketch, as for the percentiles metric
+    return MetricAgg(name, kind, p["field"], compression=p["compression"])
+
+
+@_agg("metric", "percentile_ranks", field=FIELD, values=_Tag(
+    "a non-empty list of numbers", lambda v: _list_of(v, _number()))(_REQ))
+def _percentile_ranks(kind: str, name: str, p: dict,
+                      sub: Any) -> MetricAgg:
+    return MetricAgg(name, kind, p["field"], rank_values=p["values"])
+
+
+@_agg("metric", "rate", unit=_enum(
+    "second", "minute", "hour", "day", "week",
+    desc="second/minute/hour/day/week (fixed spans — engine subset)")(_REQ),
+    field=NAME, mode=_enum("sum", "value_count")("sum"))
+def _rate(kind: str, name: str, p: dict, sub: Any) -> MetricAgg:
+    # a bucket's doc_count (or field sum / value count) rescaled to a
+    # time unit of the PARENT date_histogram's span, validated at
+    # execution where the parent is known
+    if p["mode"] == "value_count" and not p["field"]:
+        raise DslError(f"rate agg {name!r}: mode value_count needs a "
+                       "'field' (ES contract)")
+    return MetricAgg(name=name, kind="rate", field=p["field"] or "",
+                     unit=p["unit"], rate_mode=p["mode"])
+
+
+@_agg("metric", "scripted_metric", note="engine subset; params would make "
+      "the translation non-declarative", init_script=STR(_REQ),
+      map_script=STR(_REQ), combine_script=STR(_REQ),
+      reduce_script=STR(_REQ))
+def _scripted_metric(kind: str, name: str, p: dict,
+                     sub: Any) -> MetricAgg:
+    # ES scripted_metric, DECLARATIVELY: the init/map/combine/reduce
+    # pipeline translates at parse time into ONE Spark SQL aggregate
+    # expression — the per-doc script becomes sum() aggregates Catalyst
+    # combines map-side. Subset (all typed):
+    # - init:    `state.v = 0` assignments only (a nonzero init is
+    #   per-shard in ES — shard-count-dependent — so it is rejected);
+    # - map:     `state.v += <arith>` over the doc['f'].value painless
+    #   arithmetic subset (null field values contribute nothing);
+    # - combine: `return <arith over state.*>`;
+    # - reduce:  a single-state identity — this engine is ONE shard, so
+    #   the combine arithmetic is exact over GLOBAL sums.
+    def stmts(s: str) -> list[str]:
+        return [x.strip() for x in s.split(";") if x.strip()]
+
+    sm_vars: set[str] = set()
+    for st in stmts(p["init_script"]):
+        m_i = _re.fullmatch(r"state\.(\w+)\s*=\s*0(?:\.0)?", st)
+        if m_i is None:
+            raise DslError(
+                f"scripted_metric agg {name!r}: init must be "
+                f"'state.<var> = 0' assignments, got {st!r} (a "
+                "nonzero init is per-shard in ES — shard-count-"
+                "dependent — and is rejected, not emulated)")
+        sm_vars.add(m_i.group(1))
+    if not sm_vars:
+        raise DslError(f"scripted_metric agg {name!r}: init_script "
+                       "initializes no state variables")
+    var_sums: dict[str, list[str]] = {v: [] for v in sm_vars}
+    for st in stmts(p["map_script"]):
+        m_m = _re.fullmatch(r"state\.(\w+)\s*\+=\s*(.+)", st)
+        if m_m is None:
+            raise DslError(
+                f"scripted_metric agg {name!r}: map must be "
+                f"'state.<var> += <arithmetic>' statements, got {st!r}")
+        v, expr = m_m.group(1), m_m.group(2)
+        if v not in sm_vars:
+            raise DslError(f"scripted_metric agg {name!r}: map writes "
+                           f"uninitialized state.{v}")
+        if _re.search(r"==|!=|<=|>=|<|>|&&|\|\||!|\?", expr):
+            raise DslError(
+                f"scripted_metric agg {name!r}: map expressions are "
+                "arithmetic only (engine subset — no comparisons/"
+                "conditionals)")
+        var_sums[v].append(_compile_doc_script(name, expr))
+    mapped = {v: es_ for v, es_ in var_sums.items() if es_}
+    if not mapped:
+        raise DslError(f"scripted_metric agg {name!r}: map_script "
+                       "updates no state variables")
+    m_c = _re.fullmatch(r"return\s+(.+?)\s*;?", p["combine_script"].strip())
+    if m_c is None:
+        raise DslError(f"scripted_metric agg {name!r}: combine must be "
+                       "'return <arithmetic over state.*>'")
+    comb = m_c.group(1)
+    if _re.search(r"==|!=|<=|>=|<|>|&&|\|\||!|\?", comb):
+        raise DslError(f"scripted_metric agg {name!r}: combine is "
+                       "arithmetic only (engine subset)")
+
+    def comb_ref(m_v: "_re.Match[str]") -> str:
+        if m_v.group(1) not in mapped:
+            raise DslError(
+                f"scripted_metric agg {name!r}: combine reads "
+                f"state.{m_v.group(1)}, which the map never updates")
+        return f"`__stv_{m_v.group(1)}`"
+
+    final = _arith_sql(name, _re.sub(r"state\.(\w+)", comb_ref, comb))
+    red = _re.sub(r"\s+", " ", p["reduce_script"].strip())
+    if not (_re.fullmatch(r"return states\[0\] ?;?", red) or _re.fullmatch(
+            r"double (\w+) = 0 ?; for \( ?(\w+) in states ?\) "
+            r"\{ ?\1 \+= \2 ?;? ?\} return \1 ?;?", red)):
+        raise DslError(
+            f"scripted_metric agg {name!r}: reduce must be a "
+            "single-state identity — 'return states[0]' or the "
+            "canonical 'double s = 0; for (t in states) { s += t } "
+            "return s' sum loop (this engine is ONE shard; any other "
+            "reduce would change the result)")
+    for v, exprs in mapped.items():
+        total = " + ".join(f"sum({e})" for e in exprs)
+        final = final.replace(f"`__stv_{v}`", f"({total})")
+    return MetricAgg(name, "scripted_metric", "",
+                     script_sql=f"CAST(({final}) AS DOUBLE)")
+
+
+@_agg("metric", "geo_line", point=_field_of("point")(_REQ),
+      sort=_field_of("sort")(_REQ), size=_int_min(1, 10000)(10000),
+      sort_order=_ASC("asc"), include_sort=BOOL(False))
+def _geo_line(kind: str, name: str, p: dict, sub: Any) -> MetricAgg:
+    # the bucket's points as a GeoJSON LineString in sort order
+    if p["include_sort"]:
+        raise DslError(
+            f"geo_line agg {name!r}: include_sort: true is not "
+            "supported (it changes the response shape; the sort "
+            "values are the request's own field — documented)")
+    return MetricAgg(name, "geo_line", p["point"], sort_field=p["sort"],
+                     sort_asc=p["sort_order"] == "asc",
+                     line_size=p["size"])
+
+
+@_agg("metric", "weighted_avg", value=_field_of("value")(_REQ),
+      weight=_field_of("weight")(_REQ))
+def _weighted_avg(kind: str, name: str, p: dict, sub: Any) -> MetricAgg:
+    return MetricAgg(name, kind, p["value"], weight_field=p["weight"])
+
+
+def _tt_side(key: str) -> _Tag:
+    return _Tag("{'field': name, 'filter'?: clause}", lambda v: _params(
+        f"t_test {key}", v, {"field": FIELD, "filter": CLAUSE(_NO_NULL)},
+        what="unsupported params"))(_REQ)
+
+
+@_agg("metric", "t_test", a=_tt_side("a"), b=_tt_side("b"), type=_enum(
+    "paired", "heteroscedastic", "homoscedastic",
+    desc="paired/heteroscedastic/homoscedastic")("heteroscedastic"))
+def _t_test(kind: str, name: str, p: dict, sub: Any) -> MetricAgg:
+    # DEVIATION (documented on MetricAgg): returns <name>_t + <name>_df
+    # instead of ES's p-value
+    a, b = p["a"], p["b"]
+    if p["type"] == "paired" and (a["filter"] is not None
+                                  or b["filter"] is not None):
+        raise DslError(f"t_test agg {name!r}: paired type cannot take "
+                       "filters (ES contract — pairs come from the same "
+                       "documents)")
+    if p["type"] != "paired" and a["field"] == b["field"] \
+            and a["filter"] is None and b["filter"] is None:
+        raise DslError(f"t_test agg {name!r}: unpaired types need "
+                       "distinct fields or filters (identical "
+                       "populations)")
+    return MetricAgg(name, kind, a["field"], t_b=b["field"],
+                     t_filter_a=a["filter"], t_filter_b=b["filter"],
+                     t_type=p["type"])
+
+
+@_agg("metric", "matrix_stats", fields=_Tag(
+    "a list of at least two field names",
+    lambda v: _list_of(v, NAME, 2))(_REQ))
+def _matrix_stats(kind: str, name: str, p: dict, sub: Any) -> MetricAgg:
+    # listwise deletion across the field set
+    if len(set(p["fields"])) != len(p["fields"]):
+        raise DslError(f"matrix_stats agg {name!r}: duplicate fields")
+    return MetricAgg(name, kind, p["fields"][0], multi_fields=p["fields"])
+
+
+_RN_SUB_KINDS = ("avg", "sum", "min", "max", "value_count",
+                 "cardinality")
+
+
+@_agg("metric", "reverse_nested", raw=True)
+def _reverse_nested(kind: str, name: str, body: Any,
+                    sub: Any) -> MetricAgg:
+    # jumps back to PARENT documents inside a nested agg: doc_count =
+    # distinct parents holding ≥1 element in the bucket; parent-scope
+    # METRIC sub-aggs run over that distinct-parent frame
+    if body not in ({}, None):
+        raise DslError(
+            f"reverse_nested agg {name!r}: parameters {body!r} are not "
+            "supported (engine subset — one nested level, so the "
+            "jump target is always the document root)")
+    if sub is not None and (not isinstance(sub, dict) or not sub):
+        raise DslError(f"reverse_nested agg {name!r}: aggs must be a "
+                       "non-empty object")
+    subs = tuple(_metric(sn, ss) for sn, ss in (sub or {}).items())
+    for sm in subs:
+        if sm.kind not in _RN_SUB_KINDS:
+            raise DslError(
+                f"reverse_nested agg {name!r}: parent-scope sub-agg "
+                f"{sm.name!r} kind {sm.kind!r} is not supported (engine "
+                f"subset: {', '.join(_RN_SUB_KINDS)})")
+        if sm.precision_threshold is not None:
+            raise DslError(
+                f"reverse_nested agg {name!r}: precision_threshold is "
+                "not supported on parent-scope cardinality (engine "
+                "subset — exact count distinct)")
+    return MetricAgg(name, kind, "", sub_metrics=subs)
+
+
+@_agg("metric", "top_metrics", metrics=_Tag(
+    "{'field': name} or a non-empty list of those",
+    lambda v: _list_of([v] if isinstance(v, dict) else v,
+                       _field_of("top_metrics metrics")))(_REQ),
+    sort=_SORT, size=_int_min(1, 10)(1))
+def _top_metrics(kind: str, name: str, p: dict, sub: Any) -> MetricAgg:
+    # the metric field values of the TOP document under the sort
+    # (size ≤ 10, plain-field sort only)
+    if len(set(p["metrics"])) != len(p["metrics"]):
+        raise DslError(f"top_metrics agg {name!r}: duplicate metric "
+                       "fields")
+    tsort = p["sort"] or ()
+    if len(tsort) != 1 or not isinstance(tsort[0][0], str) \
+            or tsort[0][0] == "_score":
+        raise DslError(f"top_metrics agg {name!r} needs exactly one "
+                       "plain-field sort entry")
+    return MetricAgg(name, kind, tsort[0][0], multi_fields=p["metrics"],
+                     sort_asc=tsort[0][1], line_size=p["size"])
+
+
+# ------------------------------------------------------------ bucket kinds
+
+def _order(v: Any) -> tuple[tuple[str, bool], ...]:
+    """ES terms ``order``: one ``{target: asc|desc}`` object or a list
+    of them, applied left to right."""
+    specs = v if isinstance(v, list) else [v]
+    if not specs or not all(isinstance(o, dict) and len(o) == 1
+                            for o in specs):
+        raise ValueError(v)
+    return tuple((t, _ASC.check(d) == "asc")
+                 for o in specs for t, d in o.items())
+
+
+def _include(key: str) -> _Tag:
+    """terms ``include``/``exclude``: a regex matching the WHOLE term,
+    a value list, or (include) the partition object — a deterministic
+    disjoint slice pmod(xxhash64(key-as-string), m) == p."""
+    def check(v: Any) -> tuple:
+        if isinstance(v, str):
+            return ("re", v)
+        if isinstance(v, list) and v and all(
+                isinstance(x, (str, int, float)) for x in v):
+            return ("values", tuple(v))
+        if key == "include" and isinstance(v, dict):
+            p = _params("terms include partition", v,
+                        {"partition": INT0(_REQ),
+                         "num_partitions": INT1(_REQ)},
+                        "exactly {'partition': p, 'num_partitions': m}")
+            if p["partition"] >= p["num_partitions"]:
+                raise DslError("terms include partition needs integers "
+                               "0 <= partition < num_partitions")
+            return ("partition", p["partition"], p["num_partitions"])
+        raise ValueError(v)
+    return _Tag("a regex string, a non-empty list of scalars" + (
+        ", or the partition object" if key == "include" else ""), check)
+
+
+@_agg("bucket", "terms", subs=_level, siblings=True, field=FIELD,
+      size=INT1, order=_Tag("{target: 'asc'|'desc'} or a list of those",
+                            _order), missing=ANY, min_doc_count=INT0,
+      include=_include("include"), exclude=_include("exclude"))
+def _terms_agg(kind: str, name: str, p: dict, level: tuple) -> BucketAgg:
+    order = p["order"]
+    if order is not None:
+        # targets: _count, _key, a sub-metric or "<stats>.avg" etc.
+        valid = {"_count", "_key"}
+        for m in level[0]:
+            valid.add(m.name)
+            if m.kind in ("stats", "extended_stats"):
+                valid.update(f"{m.name}.{n[len(m.name) + 1:]}"
+                             for n in m.out_names())
+        for target, _ in order:
+            if target not in valid:
+                raise DslError(f"order target {target!r} is neither "
+                               "_count, _key, nor a sub-agg name")
+        if len({t for t, _ in order}) != len(order):
+            raise DslError("duplicate terms order targets")
+    return _bucket(kind, name, level, field=p["field"], size=p["size"],
+                   order=order, missing=p["missing"],
+                   min_doc_count=p["min_doc_count"],
+                   include=p["include"], exclude=p["exclude"])
+
+
+def _bounds(key: str) -> _Tag:
+    return _Tag("{'min': …, 'max': …}", lambda v: tuple(_params(
+        key, v, {"min": ANY(_REQ), "max": ANY(_REQ)}).values()))(_NO_NULL)
+
+
+def _histo_bounds(kind: str, p: dict) -> tuple:
+    """(extended_bounds, hard_bounds): extended_bounds widens the empty
+    buckets of min_doc_count 0; hard_bounds drops docs whose bucket
+    falls outside. Date bounds must be strings: a numeric epoch is
+    ambiguous between seconds and ES's millis."""
+    hb = p["hard_bounds"]
+    if hb is not None:
+        if p["extended_bounds"] is not None:
+            raise DslError("hard_bounds and extended_bounds are "
+                           "mutually exclusive (ES contract)")
+        for side, v in zip(("min", "max"), hb):
+            if kind == "histogram" and not _is_num(v):
+                raise DslError(f"histogram hard_bounds {side} must be "
+                               "numeric")
+            if kind == "date_histogram" and not isinstance(v, str):
+                raise DslError(
+                    f"date_histogram hard_bounds {side} must be a date "
+                    "STRING (engine subset — a numeric epoch is "
+                    "ambiguous between seconds and ES's millis)")
+    return p["extended_bounds"], hb
+
+
+_HISTO = dict(field=FIELD, missing=ANY, min_doc_count=INT0,
+              extended_bounds=_bounds("extended_bounds"),
+              hard_bounds=_bounds("hard_bounds"))
+
+
+@_agg("bucket", "histogram", subs=_level, siblings=True,
+      interval=_number(0, lo_open=True, keep=True)(_REQ),
+      offset=_number(keep=True), **_HISTO)
+def _histogram(kind: str, name: str, p: dict, level: tuple) -> BucketAgg:
+    # buckets align to offset + n×interval; |offset| < interval
+    offset = p["offset"]
+    if offset is not None:
+        offset = float(offset) % float(p["interval"])
+    eb, hb = _histo_bounds(kind, p)
+    return _bucket(kind, name, level, field=p["field"],
+                   interval=p["interval"], offset=offset,
+                   missing=p["missing"], min_doc_count=p["min_doc_count"],
+                   extended_bounds=eb, hard_bounds=hb)
+
+
+@_agg("bucket", "date_histogram", subs=_level, siblings=True,
+      calendar_interval=NAME, fixed_interval=NAME, offset=_OFFSET,
+      time_zone=NAME, **_HISTO)
+def _date_histogram(kind: str, name: str, p: dict,
+                    level: tuple) -> BucketAgg:
+    if p["calendar_interval"] is None and p["fixed_interval"] is None:
+        raise DslError("date_histogram needs a 'calendar_interval' or "
+                       "'fixed_interval'")
+    # the offset shifts every bucket boundary (e.g. "+6h": day buckets
+    # start at 06:00); a FIXED time_zone folds into it (boundary =
+    # trunc(ts + tz - offset) + offset - tz), so `time_zone` carries
+    # only NAMED zones, truncated per instant in local wall-clock
+    offset, tz, named = p["offset"], p["time_zone"], None
+    if tz is not None:
+        tzsec = _zone_offset(tz)
+        if tzsec is None:
+            # key generation outside the data needs a fixed offset, and
+            # fixed_interval's epoch alignment under DST is ambiguous
+            if p["fixed_interval"] is not None:
+                raise DslError("a named time_zone needs calendar_interval"
+                               " (fixed-offset zones work with "
+                               "fixed_interval)")
+            if p["min_doc_count"] == 0 or p["extended_bounds"] is not None:
+                raise DslError(
+                    "a named time_zone cannot combine with min_doc_count"
+                    " 0 / extended_bounds (key generation needs a fixed "
+                    "offset) — use a fixed-offset time_zone")
+            named = tz
+        elif tzsec:
+            offset = float(offset or 0.0) - tzsec
+    eb, hb = _histo_bounds(kind, p)
+    return _bucket(kind, name, level, field=p["field"], offset=offset,
+                   calendar_interval=p["calendar_interval"],
+                   fixed_interval=p["fixed_interval"], time_zone=named,
+                   missing=p["missing"], min_doc_count=p["min_doc_count"],
+                   extended_bounds=eb, hard_bounds=hb)
+
+
+def _range_list(ctx: str, v: Any, spec: dict[str, _Tag]) -> list[dict]:
+    """The checked entries of a ``ranges`` list: each has ``from``
+    and/or ``to`` (``ip_range``: or a ``mask``)."""
+    if not isinstance(v, list) or not v:
+        raise DslError(f"{ctx} needs a non-empty 'ranges' list")
+    out = []
+    for entry in v:
+        if not isinstance(entry, dict) or not set(entry) & (
+                set(spec) - {"key"}):
+            raise DslError(f"{ctx}: each range needs 'from' and/or 'to'"
+                           + (" bounds or a 'mask'" if "mask" in spec
+                              else ""))
+        out.append(_params(f"{ctx} range", entry, spec))
+    return out
+
+
+def _unique_keys(ctx: str, ranges: list[tuple]) -> tuple:
+    named = [k for k, *_ in ranges if k is not None]
+    if len(set(named)) != len(named):
+        raise DslError(f"{ctx}: duplicate range keys")
+    return tuple(ranges)
+
+
+def _num_ranges(ctx: str, v: Any) -> tuple:
+    """((key, from, to), ...): ``from`` inclusive, ``to`` exclusive,
+    None an open side; key is ES's ``from-to`` label unless named."""
+    out = []
+    for e in _range_list(ctx, v, {"from": _number(), "to": _number(),
+                                  "key": SCALAR}):
+        lo, hi = e["from"], e["to"]
+        key = e["key"] or f"{'*' if lo is None else lo}" \
+                          f"-{'*' if hi is None else hi}"
+        out.append((str(key), lo, hi))
+    return _unique_keys(ctx, out)
+
+
+@_agg("bucket", "range", subs=_level, siblings=True, field=FIELD,
+      ranges=ANY, keyed=BOOL)
+def _range_agg(kind: str, name: str, p: dict, level: tuple) -> BucketAgg:
+    # overlapping ranges count a doc in EACH bucket (ES semantics);
+    # `keyed` is an accepted no-op: the flattened frame is always keyed
+    return _bucket(kind, name, level, field=p["field"],
+                   ranges=_num_ranges(f"range agg {name!r}", p["ranges"]))
+
+
+@_agg("bucket", "date_range", subs=_level, siblings=True, field=FIELD,
+      ranges=ANY, keyed=BOOL, format=NAME)
+def _date_range(kind: str, name: str, p: dict, level: tuple) -> BucketAgg:
+    # bounds are date strings (ES date-math resolves engine-side against
+    # the injectable `now`); with a `format`, unnamed ranges get a None
+    # key here and the engine renders the ES-style label from the
+    # RESOLVED bound instants
+    ctx, fmt = f"date_range agg {name!r}", p["format"]
+    if fmt is not None:
+        try:
+            datemath.key_formatter(fmt)
+        except datemath.DateMathError as e:
+            raise DslError(f"{ctx}: {e}") from e
+    out = []
+    for e in _range_list(ctx, p["ranges"], {"from": STR, "to": STR,
+                                            "key": SCALAR}):
+        lo, hi, key = e["from"], e["to"], e["key"]
+        if key is None and fmt is None:
+            key = f"{'*' if lo is None else lo}-{'*' if hi is None else hi}"
+        out.append((None if key is None else str(key), lo, hi))
+    return _bucket(kind, name, level, field=p["field"], key_format=fmt,
+                   ranges=_unique_keys(ctx, out))
+
+
+def _ip(ctx: str, v: str, net: bool = False) -> Any:
+    """An IPv4 address (or CIDR block); IPv6 is an engine-subset
+    error."""
+    import ipaddress
+    try:
+        addr = (ipaddress.ip_network(v, strict=False) if net
+                else ipaddress.ip_address(v))
+    except ValueError:
+        raise DslError(f"{ctx}: {v!r} is not a valid "
+                       f"{'CIDR block' if net else 'IP address'}") from None
+    if addr.version != 4:
+        raise DslError(f"{ctx}: IPv6 {'masks' if net else 'bounds'} are "
+                       "not supported (engine subset)")
+    return addr
+
+
+@_agg("bucket", "ip_range", subs=_level, siblings=True, field=FIELD,
+      ranges=ANY, keyed=BOOL)
+def _ip_range(kind: str, name: str, p: dict, level: tuple) -> BucketAgg:
+    # bounds resolve to their 32-bit values at parse time (exact in the
+    # float the range machinery carries); a `mask` is [network,
+    # broadcast+1); default keys are ES's `from-to` or the mask
+    ctx, out = f"ip_range agg {name!r}", []
+    for e in _range_list(ctx, p["ranges"], {
+            "from": STR(_NO_NULL), "to": STR(_NO_NULL),
+            "mask": STR(_NO_NULL), "key": SCALAR}):
+        if e["mask"] is not None:
+            if e["from"] is not None or e["to"] is not None:
+                raise DslError(f"{ctx}: 'mask' excludes 'from'/'to' (ES "
+                               "contract)")
+            net = _ip(ctx, e["mask"], net=True)
+            lo, hi = int(net.network_address), \
+                int(net.broadcast_address) + 1
+            key = e["key"] or e["mask"]
+        else:
+            lo, hi = (None if e[s] is None else int(_ip(ctx, e[s]))
+                      for s in ("from", "to"))
+            key = e["key"] or f"{'*' if lo is None else e['from']}" \
+                              f"-{'*' if hi is None else e['to']}"
+        out.append((str(key), None if lo is None else float(lo),
+                    None if hi is None else float(hi)))
+    return _bucket(kind, name, level, field=p["field"],
+                   ranges=_unique_keys(ctx, out))
+
+
+def _named_clauses(v: Any) -> tuple[tuple[str, Node], ...]:
+    if not isinstance(v, dict) or not v:
+        raise ValueError(v)
+    return tuple((n, _node(c)) for n, c in v.items())
+
+
+_FILTERS = _Tag("a non-empty object of named query clauses",
+                _named_clauses)
+
+
+@_agg("bucket", "filters", subs=_level, siblings=True,
+      filters=_FILTERS(_REQ), keyed=BOOL, other_bucket=BOOL(_NO_NULL),
+      other_bucket_key=NAME(_NO_NULL))
+def _filters(kind: str, name: str, p: dict, level: tuple) -> BucketAgg:
+    # one bucket per named query; a doc joins EVERY bucket it matches.
+    # other_bucket: the docs matching NONE of them, desugared to
+    # Not(Or(all clauses))
+    nodes, ob, key = (p["filters"], p["other_bucket"],
+                      p["other_bucket_key"])
+    if ob or key is not None:
+        key = key or "_other_"
+        if key in {n for n, _ in nodes}:
+            raise DslError(f"filters other_bucket_key {key!r} collides "
+                           "with a named filter bucket")
+        if ob is not False:
+            nodes += ((key, Not(Or(tuple(n for _, n in nodes)))),)
+    return _bucket(kind, name, level, field="", filter_nodes=nodes)
+
+
+@_agg("bucket", "adjacency_matrix", subs=_level, siblings=True,
+      filters=_FILTERS(_REQ))
+def _adjacency_matrix(kind: str, name: str, p: dict,
+                      level: tuple) -> BucketAgg:
+    if any("&" in n for n, _ in p["filters"]):
+        raise DslError("adjacency_matrix filter names must not contain "
+                       "'&' (the intersection separator)")
+    return _bucket(kind, name, level, field="", filter_nodes=p["filters"])
+
+
+@_agg("bucket", "ip_prefix", subs=_level, siblings=True, field=FIELD,
+      prefix_length=_int_min(1, 32)(_REQ), is_ipv6=BOOL(False),
+      append_prefix_length=BOOL(False), min_doc_count=INT0)
+def _ip_prefix(kind: str, name: str, p: dict, level: tuple) -> BucketAgg:
+    if p["is_ipv6"]:
+        raise DslError(f"ip_prefix agg {name!r}: is_ipv6 is not "
+                       "supported (engine subset — IPv4 dotted-quad "
+                       "fields only)")
+    return _bucket(kind, name, level, field=p["field"],
+                   min_doc_count=p["min_doc_count"],
+                   precision=p["prefix_length"],
+                   append_prefix=p["append_prefix_length"])
+
+
+@_agg("bucket", "rare_terms", subs=_no_subs, field=FIELD,
+      max_doc_count=INT1(1))
+def _rare_terms(kind: str, name: str, p: dict, sub: Any) -> BucketAgg:
+    # buckets at or below max_doc_count, doc_count asc then key asc, no
+    # top-size truncation
+    return BucketAgg(name=name, kind=kind, field=p["field"],
+                     size=p["max_doc_count"])
+
+
+@_agg("bucket", "multi_terms", subs=_metric_subs, terms=_Tag(
+    "a list of at least two {'field': ...} entries",
+    lambda v: _list_of(v, _field_of("multi_terms terms"), 2))(_REQ),
+    size=INT1(10))
+def _multi_terms(kind: str, name: str, p: dict,
+                 metrics: tuple) -> BucketAgg:
+    # composite key over several fields, terms ordering, size cap;
+    # flattened one column per source field
+    flds = p["terms"]
+    if len(set(flds)) != len(flds):
+        raise DslError("duplicate multi_terms fields")
+    return BucketAgg(name=name, kind=kind, field=flds[0],
+                     multi_fields=flds, size=p["size"], metrics=metrics)
+
+
+@_agg("bucket", "categorize_text", subs=_metric_subs, field=FIELD,
+      size=INT1(10), note="engine subset — the adaptive drain-tree knobs "
+      "are not reproducible")
+def _categorize_text(kind: str, name: str, p: dict,
+                     metrics: tuple) -> BucketAgg:
+    # deterministic subset: group by an EXACT token template (lowercase
+    # whitespace tokens, digit-bearing tokens masked to <num>) instead
+    # of ES's adaptive drain tree, whose knobs are not reproducible
+    return BucketAgg(name=name, kind=kind, field=p["field"],
+                     size=p["size"], metrics=metrics)
+
+
+@_agg("bucket", "geotile_grid", subs=_metric_subs, field=FIELD,
+      precision=_int_min(0, 29)(7), size=INT1(10_000))
+@_agg("bucket", "geohash_grid", subs=_metric_subs, field=FIELD,
+      precision=_int_min(1, 12)(5), size=INT1(10_000))
+def _geo_grid_agg(kind: str, name: str, p: dict,
+                  metrics: tuple) -> BucketAgg:
+    # web-mercator "z/x/y" tiles / base32 geohash cells of the
+    # struct<lat,lon> field, doc_count desc + key asc
+    return BucketAgg(name=name, kind=kind, field=p["field"],
+                     size=p["size"], precision=p["precision"],
+                     metrics=metrics)
+
+
+@_agg("bucket", "geo_distance", subs=_metric_subs, field=FIELD,
+      origin=_Tag("a geo point", lambda v: _geo_point(v, "origin"))(_REQ),
+      ranges=ANY, unit=STR("m"),
+      distance_type=_enum("arc", fold=True, desc="'arc' (engine subset — "
+                          "one haversine formula on every plan)")("arc"))
+def _geo_distance_agg(kind: str, name: str, p: dict,
+                      metrics: tuple) -> BucketAgg:
+    # range buckets over the haversine distance from `origin` in `unit`
+    from cassandra_es_index_spark.functions.geo import _UNITS
+    unit = p["unit"].lower()
+    if unit not in _UNITS:
+        raise DslError(f"geo_distance agg {name!r}: unknown distance "
+                       f"unit {unit!r}")
+    return BucketAgg(name=name, kind=kind, field=p["field"],
+                     ranges=_num_ranges(f"range agg {name!r}",
+                                        p["ranges"]),
+                     geo_origin=(*p["origin"], _UNITS[unit]),
+                     metrics=metrics)
+
+
+@_agg("bucket", "auto_date_histogram", subs=_metric_subs, field=FIELD,
+      buckets=INT1(10))
+def _auto_date_histogram(kind: str, name: str, p: dict,
+                         metrics: tuple) -> BucketAgg:
+    # targets a bucket COUNT: the engine picks the smallest interval of
+    # its ladder that fits the data's span (resolved in search_aggs)
+    return BucketAgg(name=name, kind=kind, field=p["field"],
+                     buckets=p["buckets"], metrics=metrics)
+
+
+@_agg("bucket", "variable_width_histogram", subs=_metric_subs,
+      field=FIELD, buckets=_int_min(1, 256)(10), note="engine subset: "
+      "field + buckets; ES's shard_size/initial_buffer tune its streaming "
+      "clusterer, which the deterministic gap-split replaces")
+def _variable_width_histogram(kind: str, name: str, p: dict,
+                              metrics: tuple) -> BucketAgg:
+    # deterministic analogue of ES's streaming clusterer: split the
+    # sorted DISTINCT values at the buckets−1 largest adjacent gaps
+    return BucketAgg(name=name, kind=kind, field=p["field"],
+                     buckets=p["buckets"], metrics=metrics)
+
+
+def _one_field(v: Any) -> str:
+    if not isinstance(v, list) or len(v) != 1:
+        raise ValueError(v)
+    return _field_of("frequent_item_sets fields").check(v[0])
+
+
+@_agg("bucket", "frequent_item_sets", subs=_no_subs, fields=_Tag(
+    "exactly one field, as [{'field': name}] (engine subset)",
+    _one_field)(_REQ),
+    minimum_support=_number(0, 1, lo_open=True)(0.1),
+    minimum_set_size=_tag(
+        "2 or 3 (engine subset: the pair/triple A-priori miner; sets are "
+        "EXACTLY that size, a documented deviation from ES's ≥-size "
+        "ECLAT)", lambda v: _is_int(v) and v in (2, 3))(2),
+    size=_int_min(1, 10000)(10))
+def _frequent_item_sets(kind: str, name: str, p: dict,
+                        sub: Any) -> BucketAgg:
+    # frequent co-occurring item pairs/triples across documents (items:
+    # a doc's distinct analyzed tokens or array elements)
+    return BucketAgg(name=name, kind=kind, field=p["fields"],
+                     size=p["size"], interval=p["minimum_support"],
+                     precision=p["minimum_set_size"])
+
+
+_FLAG = _tag("true or false (heuristic flags are booleans)",
+             lambda v: isinstance(v, bool))
+
+
+def _heuristic(key: str, flags: bool) -> _Tag:
+    spec = {"include_negatives": _FLAG(False),
+            "background_is_superset": _FLAG(True)} if flags else {}
+    return _Tag("an object", lambda v: _params(
+        f"{key} heuristic", v, spec,
+        what=f"takes {sorted(spec) or 'no'} params, got"))(_NO_NULL)
+
+
+_SIG_HEURISTICS = dict(jlh=_heuristic("jlh", False),
+                       percentage=_heuristic("percentage", False),
+                       chi_square=_heuristic("chi_square", True),
+                       mutual_information=_heuristic("mutual_information",
+                                                     True),
+                       gnd=OBJECT(_NO_NULL))
+
+
+@_agg("bucket", "significant_terms", "significant_text", subs=_no_subs,
+      field=FIELD, size=INT1, background_filter=_Tag(
+          "a query clause object", _clause_object), min_doc_count=INT1(1),
+      **_SIG_HEURISTICS)
+def _significant(kind: str, name: str, p: dict, sub: Any) -> BucketAgg:
+    # foreground-vs-background scored terms (significant_text: the
+    # analyzed tokens of a text field); at most one heuristic, jlh by
+    # default; gnd's score transform is ES-version-dependent. ENGINE
+    # DEFAULT min_doc_count 1 (ES: 3) — every matched term ranks.
+    chosen = [h for h in _SIG_HEURISTICS if p[h] is not None]
+    if len(chosen) > 1:
+        raise DslError(f"{kind} agg {name!r}: at most one significance "
+                       f"heuristic, got {chosen}")
+    if chosen == ["gnd"]:
+        raise DslError(f"{kind} agg {name!r}: gnd is not supported "
+                       "(engine subset — its score transform is "
+                       "ES-version-dependent; use jlh/chi_square/"
+                       "mutual_information/percentage)")
+    h = chosen[0] if chosen else "jlh"
+    flags = p[h] or {}
+    return BucketAgg(name=name, kind=kind, field=p["field"],
+                     size=p["size"], bg_filter=p["background_filter"],
+                     min_doc_count=p["min_doc_count"], sig_heuristic=(
+                         h, flags.get("include_negatives", False),
+                         flags.get("background_is_superset", True)))
+
+
+# ------------------------------------------------ composite, single-bucket,
+# sampler and join kinds (top level)
+
+_SOURCE_SPECS = {
+    "terms": {},
+    "histogram": {"interval": _number(0, lo_open=True, keep=True)(_REQ)},
+    "date_histogram": {"calendar_interval": NAME, "fixed_interval": NAME,
+                       "offset": _OFFSET, "time_zone": NAME},
+    "geotile_grid": {"precision": _int_min(0, 29)(7)},
+}
+
+
+def _source(s: Any) -> CompositeSource:
+    """One composite source ``{name: {kind: {...}}}``; a date_histogram
+    source folds its offset and FIXED time_zone into one boundary shift
+    (keyset `after` anchors need fixed instants)."""
+    if not isinstance(s, dict) or len(s) != 1:
+        raise DslError("each composite source must be {name: {kind: "
+                       "{...}}}")
+    (sname, sbody), = s.items()
+    if not isinstance(sbody, dict) or len(sbody) != 1:
+        raise DslError(f"composite source {sname!r} must have exactly "
+                       "one kind")
+    (skind, sparams), = sbody.items()
+    if skind not in _SOURCE_SPECS:
+        raise DslError(f"unsupported composite source kind {skind!r}")
+    p = _params(f"composite source {sname!r} ({skind})", sparams, dict(
+        field=FIELD, order=_ASC("asc"), missing_bucket=BOOL(False),
+        **_SOURCE_SPECS[skind]))
+    soff = p.get("offset") or 0.0
+    if skind == "date_histogram":
+        if p["calendar_interval"] is None and p["fixed_interval"] is None:
+            raise DslError("date_histogram source needs a "
+                           "'calendar_interval' or 'fixed_interval'")
+        if p["time_zone"] is not None:
+            tzs = _fixed_tz_seconds(p["time_zone"])
+            if tzs is None:
+                raise DslError(
+                    "composite date_histogram time_zone must be a fixed "
+                    "offset (keyset 'after' anchors need fixed instants)"
+                    " — named zones work on the plain date_histogram "
+                    "agg")
+            soff -= tzs
+    return CompositeSource(
+        sname, skind, p["field"], interval=p.get("interval"),
+        calendar_interval=p.get("calendar_interval"),
+        fixed_interval=p.get("fixed_interval"), offset_sec=soff,
+        asc=p["order"] == "asc", missing_bucket=p["missing_bucket"],
+        precision=p.get("precision", 7))
+
+
+@_agg("top", "composite", subs=_metric_subs, sources=_Tag(
+    "a non-empty list of sources",
+    lambda v: tuple(_source(s) for s in _list_of(v, ANY)))(_REQ),
+    size=INT1(10), after=OBJECT)
+def _composite(kind: str, name: str, p: dict,
+               metrics: tuple) -> CompositeAgg:
+    # ALL distinct combinations of the source keys, ordered by the
+    # source tuple, paged with size + the `after` keyset cursor
+    names = [s.name for s in p["sources"]]
+    if len(set(names)) != len(names):
+        raise DslError("duplicate composite source names")
+    after = p["after"]
+    if after is not None:
+        if set(after) != set(names):
+            raise DslError("composite 'after' must provide one value per "
+                           "source")
+        after = tuple(after[n] for n in names)
+    return CompositeAgg(name, p["sources"], size=p["size"], after=after,
+                        metrics=metrics)
+
+
+@_agg("top", "nested", subs=_any_subs, path=NAME(_REQ))
+def _nested_agg(kind: str, name: str, p: dict, sub: Any) -> NestedAgg:
+    if "." in p["path"]:
+        raise DslError(f"nested agg {name!r}: path must be a top-level "
+                       "array field (one nested level — engine subset)")
+    if isinstance(sub, (NestedAgg, SamplerAgg)):
+        raise DslError("nested aggs hold ordinary bucket/metric sub-aggs "
+                       "only (no nested-in-nested or sampler — engine "
+                       "subset)")
+    return NestedAgg(name, p["path"], sub=sub)
+
+
+@_agg("top", "children", "parent", subs=_any_subs, type=NAME(_REQ))
+def _join_agg(kind: str, name: str, p: dict, sub: Any) -> RelAgg:
+    # `type`: the relation name from the join mapping (see
+    # register_relation)
+    if isinstance(sub, (RelAgg, SamplerAgg)) or (
+            isinstance(sub, SingleBucketAgg) and sub.kind == "global"):
+        raise DslError(
+            f"{kind} agg {name!r}: sampler/global/join sub-aggs are not "
+            "supported under a join agg (they would score or scope "
+            "against the wrong table — engine subset)")
+    return RelAgg(name, kind, p["type"], sub=sub)
+
+
+def _sampler_sub(sub: Any) -> Any:
+    if isinstance(sub, SamplerAgg):
+        raise DslError("sampler aggs do not nest (top level only)")
+    return sub
+
+
+@_agg("top", "sampler", subs=_any_subs, null=True,
+      what="unsupported parameters", shard_size=INT1(100))
+@_agg("top", "diversified_sampler", subs=_any_subs, null=True,
+      what="unsupported parameters", shard_size=INT1(100), field=FIELD,
+      max_docs_per_value=INT1(1))
+def _sampler(kind: str, name: str, p: dict, sub: Any) -> SamplerAgg:
+    return SamplerAgg(name, kind, shard_size=p["shard_size"],
+                      field=p.get("field", ""),
+                      max_docs_per_value=p.get("max_docs_per_value", 1),
+                      sub=_sampler_sub(sub))
+
+
+@_agg("top", "random_sampler", subs=_any_subs, null=True,
+      probability=_number(0, 1, lo_open=True)(_REQ), seed=INT0(0))
+def _random_sampler(kind: str, name: str, p: dict,
+                    sub: Any) -> SamplerAgg:
+    # a DETERMINISTIC multiplicative hash of the primary key keeps
+    # ≈ probability of the match set: same seed, same sample
+    return SamplerAgg(name, kind, probability=p["probability"],
+                      seed=p["seed"], sub=_sampler_sub(sub))
+
+
+def _single_bucket(kind: str, name: str, subs: dict,
+                   clause: Any) -> Any:
+    """A filter/missing agg with a BUCKET sub-agg desugars to a
+    one-entry ``filters`` bucket named after the agg; with metric
+    sub-aggs it is a SingleBucketAgg (None here)."""
+    if any(_role(_agg_kind(n, sp)) == "bucket" for n, sp in subs.items()):
+        return _aggs({name: {"filters": {"filters": {name: clause}},
+                             "aggs": subs}})
+    return None
+
+
+@_agg("top", "filter", subs=_raw_subs, raw=True)
+def _filter_agg(kind: str, name: str, body: Any, subs: dict) -> Any:
+    if not isinstance(body, dict) or not body:
+        raise DslError(f"filter agg {name!r} needs a query clause")
+    return _single_bucket(kind, name, subs, body) or SingleBucketAgg(
+        name, "filter", node=_node(body),
+        metrics=_metric_subs(kind, subs))
+
+
+@_agg("top", "missing", subs=_raw_subs, field=FIELD)
+def _missing_agg(kind: str, name: str, p: dict, subs: dict) -> Any:
+    # the missing bucket IS the docs where the field is absent
+    return _single_bucket(kind, name, subs, {"bool": {"must_not": [
+        {"exists": {"field": p["field"]}}]}}) or SingleBucketAgg(
+        name, "missing", field=p["field"],
+        metrics=_metric_subs(kind, subs))
+
+
+@_agg("top", "global", subs=_raw_subs, raw=True)
+def _global_agg(kind: str, name: str, body: Any, subs: dict) -> Any:
+    # ALL documents, ignoring the query; the body is {} (ES syntax)
+    if body not in ({}, None):
+        raise DslError(f"global agg {name!r} takes no parameters, got "
+                       f"{body!r}")
+    return SingleBucketAgg(name, "global", metrics=_metric_subs(kind, subs))
+
+
+# --------------------------------------------------------- top_hits
+
+@_agg("top_hits", "top_hits", size=INT1(3), _source=_Tag(
+    "a field name or list of field names",
+    lambda v: (v,) if isinstance(v, str) else _list_of(v, STR, 0))(()),
+    sort=_SORT)
+def _top_hits(kind: str, name: str, p: dict, sub: Any) -> TopHits:
+    # the top `size` documents per bucket under `sort` (primary key
+    # tiebreak), one output row per hit; innermost bucket level only
+    th_sort = p["sort"] or ()
+    if any(isinstance(f, GeoSort) for f, *_ in th_sort):
+        raise DslError(f"top_hits agg {name!r}: _geo_distance sort is "
+                       "not supported inside top_hits (engine subset)")
+    return TopHits(size=p["size"], sort=th_sort, source=p["_source"])
+
+
+# ------------------------------------------------- per-level pipelines
+#
+# Computed over the key-ordered bucket frame of the level they sit in;
+# the payload each builder returns is checked against the level's
+# metrics by the row's `resolve`.
+
+def _known_path(pn: str, path: str, valid: set) -> None:
+    if path not in valid:
+        raise DslError(f"pipeline agg {pn!r}: unknown buckets_path "
+                       f"{path!r}")
+
+
+def _first_path(pn: str, payload: Any, metrics: tuple, valid: set) -> Any:
+    _known_path(pn, payload if isinstance(payload, str) else payload[0],
+                valid)
+    return payload
+
+
+def _script_paths(pn: str, payload: Any, metrics: tuple,
+                  valid: set) -> Any:
+    for tgt in payload[1].values():
+        _known_path(pn, tgt, valid)
+    return payload
+
+
+def _sort_paths(pn: str, payload: Any, metrics: tuple, valid: set) -> Any:
+    for fld, _asc, _nf in payload[0]:
+        if fld not in valid | {"_key"}:
+            raise DslError(f"bucket_sort {pn!r}: unknown sort target "
+                           f"{fld!r}")
+    return payload
+
+
+def _metric_path(kind: str, metric: str, why: str):
+    """Resolve a buckets_path that must name a sibling ``metric`` of
+    this level: its field (and percents) drive a pass over the source
+    rows, since per-bucket values don't merge."""
+    def resolve(pn: str, payload: Any, metrics: tuple, valid: set) -> Any:
+        path = payload if isinstance(payload, str) else payload[0]
+        tgt = next((m for m in metrics
+                    if m.name == path and m.kind == metric), None)
+        if tgt is None:
+            raise DslError(f"{kind} agg {pn!r}: buckets_path {path!r} "
+                           f"must name a sibling {metric} metric{why}")
+        return (path, tgt.field) if isinstance(payload, str) \
+            else (path, tgt.field, tgt.percents, *payload[1:])
+    return resolve
+
+
+_INT = _int_min(-math.inf)
+
+
+@_agg("pipeline", "cumulative_sum", ordered=True, resolve=_first_path,
+      buckets_path=NAME(_REQ))
+def _cumulative_sum(kind: str, name: str, p: dict, sub: Any) -> Any:
+    return p["buckets_path"]
+
+
+@_agg("pipeline", "derivative", ordered=True, resolve=_first_path,
+      buckets_path=NAME(_REQ), unit=_tag(
+          "a fixed interval ('30s'/'5m'/'1h'/'7d')",
+          lambda v: isinstance(v, str)
+          and _re.fullmatch(r"\d+[smhd]", v.strip()))(_NO_NULL))
+def _derivative(kind: str, name: str, p: dict, sub: Any) -> Any:
+    # `unit` adds a `<name>_normalized` column: the derivative per unit
+    # span (fixed-interval parents only, checked at execution)
+    if p["unit"] is None:
+        return p["buckets_path"]
+    return (p["buckets_path"], "unit", p["unit"])
+
+
+@_agg("pipeline", "serial_diff", ordered=True, resolve=_first_path,
+      buckets_path=NAME(_REQ), lag=INT1(1))
+def _serial_diff(kind: str, name: str, p: dict, sub: Any) -> Any:
+    return (p["buckets_path"], p["lag"])
+
+
+def _moving_function(v: Any) -> str:
+    m = _re.fullmatch(r"MovingFunctions\.(unweightedAvg|min|max|sum)"
+                      r"\(values\)", v.strip()) \
+        if isinstance(v, str) else None
+    if m is None:
+        raise ValueError(v)
+    return m.group(1)
+
+
+@_agg("pipeline", "moving_fn", ordered=True, resolve=_first_path,
+      buckets_path=NAME(_REQ), script=_Tag(
+          "MovingFunctions.unweightedAvg/min/max/sum(values) (the "
+          "built-in window functions — engine subset)",
+          _moving_function)(_REQ), window=INT1(_REQ), shift=_INT(0))
+def _moving_fn(kind: str, name: str, p: dict, sub: Any) -> Any:
+    return (p["buckets_path"], p["script"], p["window"], p["shift"])
+
+
+@_agg("pipeline", "moving_avg", ordered=True, resolve=_first_path,
+      note="engine subset; minimize/predict change the result "
+      "nondeterministically",
+      buckets_path=NAME(_REQ), window=_int_min(1, 100)(5),
+      model=_enum("simple", "linear", "ewma", desc=(
+          "simple/linear/ewma (engine subset — holt/holt_winters fit "
+          "parameters)"))("simple"),
+      settings=_Tag("{'alpha': number}", lambda v: _params(
+          "moving_avg settings", v,
+          {"alpha": _number(0, 1, lo_open=True)(_NO_NULL)})))
+def _moving_avg(kind: str, name: str, p: dict, sub: Any) -> Any:
+    # ES's legacy moving_avg (removed in ES 8, common in older bodies):
+    # the window INCLUDES the current bucket; minimize/predict fit or
+    # extrapolate, out of the deterministic frame contract
+    alpha = (p["settings"] or {}).get("alpha")
+    if alpha is not None and p["model"] != "ewma":
+        raise DslError(f"moving_avg agg {name!r}: alpha applies to the "
+                       "ewma model only")
+    return (p["buckets_path"], p["model"], p["window"],
+            0.3 if alpha is None else alpha)
+
+
+@_agg("pipeline", "moving_percentiles", ordered=True,
+      resolve=_metric_path("moving_percentiles", "percentiles",
+                           " (its field and percents drive the "
+                           "source-window pass)"),
+      buckets_path=NAME(_REQ), window=_int_min(1, 1000)(_NO_NULL),
+      shift=_INT(0))
+def _moving_percentiles(kind: str, name: str, p: dict, sub: Any) -> Any:
+    # EXACT percentiles over the window's SOURCE rows (per-bucket
+    # percentiles don't merge; ES merges TDigest sketches); each source
+    # row fans out to `window` bucket windows, hence the bound
+    if p["window"] is None:
+        raise DslError(f"moving_percentiles agg {name!r}: window must be "
+                       "an integer in [1, 1000]")
+    return (p["buckets_path"], p["window"], p["shift"])
+
+
+@_agg("pipeline", "cumulative_cardinality", ordered=True,
+      resolve=_metric_path("cumulative_cardinality", "cardinality",
+                           " at this level (its field drives the "
+                           "first-appearance pass)"),
+      buckets_path=NAME(_REQ))
+def _cumulative_cardinality(kind: str, name: str, p: dict,
+                            sub: Any) -> Any:
+    return p["buckets_path"]
+
+
+# ES normalize methods → the rescaling applied per bucket over its
+# parent's bucket frame; z-score uses the POPULATION deviation
+# (extended_stats convention); a constant frame (max == min) or zero sum
+# yields null values (Spark 0-divisor), documented
+_NORMALIZE_METHODS = ("rescale_0_1", "rescale_0_100", "percent_of_sum",
+                      "mean", "z-score", "softmax")
+
+
+@_agg("pipeline", "normalize", resolve=_first_path, buckets_path=NAME(_REQ),
+      method=_enum(*_NORMALIZE_METHODS, desc="one of " + ", ".join(
+          _NORMALIZE_METHODS))(_NO_NULL))
+def _normalize(kind: str, name: str, p: dict, sub: Any) -> Any:
+    # any multi-bucket parent qualifies (ES normalize)
+    if p["method"] is None:
+        raise DslError(f"normalize agg {name!r}: method must be one of "
+                       f"{', '.join(_NORMALIZE_METHODS)}")
+    return (p["buckets_path"], p["method"])
+
+
+@_agg("pipeline", "bucket_script", "bucket_selector",
+      resolve=_script_paths, buckets_path=_tag(
+          "a non-empty {param: path} object",
+          lambda v: isinstance(v, dict) and v
+          and all(isinstance(x, str) for x in v.values()))(_REQ),
+      script=STR(_REQ))
+def _bucket_script(kind: str, name: str, p: dict, sub: Any) -> Any:
+    # arithmetic/comparison over params refs, translated to Spark SQL
+    paths = dict(p["buckets_path"])
+    return (_compile_bucket_script(name, p["script"], paths), paths)
+
+
+@_agg("pipeline", "bucket_sort", resolve=_sort_paths, sort=_SORT,
+      size=INT1)
+def _bucket_sort(kind: str, name: str, p: dict, sub: Any) -> Any:
+    # sort targets are bucket columns: _key, _count or a metric
+    if not p["sort"] and p["size"] is None:
+        raise DslError(f"bucket_sort agg {name!r} needs 'sort' and/or "
+                       "'size'")
+    return (p["sort"] or (), p["size"])
+
+
+# ---------------------------------------------------- sibling pipelines
+#
+# One value (or a flattened stat set, see `sibling_out_names`) computed
+# OVER a bucket agg's frame, declared NEXT TO it (ES syntax) and emitted
+# as constant columns on every bucket row. A builder returns (buckets
+# path, the kind's extra slot).
+
+_BUCKETS_PATH = _tag("a path of the form 'bucket>metric'",
+                     lambda v: isinstance(v, str) and ">" in v)(_REQ)
+
+
+@_agg("sibling", "avg_bucket", "sum_bucket", "min_bucket", "max_bucket",
+      "stats_bucket", "extended_stats_bucket", "change_point",
+      buckets_path=_BUCKETS_PATH)
+@_agg("sibling", "percentiles_bucket", buckets_path=_BUCKETS_PATH,
+      percents=_PERCENTS(_DEFAULT_PERCENTS))
+def _sibling(kind: str, name: str, p: dict, sub: Any) -> tuple:
+    # change_point: the BEST MEAN-SHIFT split (argmax of the two-segment
+    # Welch t), `step_change` when its two-sided p < 0.05, else
+    # `stationary` — ES's detector agglomerate is not reproducible
+    return (p["buckets_path"], p.get("percents", ()))
+
+
+@_agg("sibling", "bucket_count_ks_test", buckets_path=_BUCKETS_PATH,
+      note="engine subset — sampling_method would silently change the "
+      "statistic",
+      alternative=_Tag(
+          "a non-empty list of less/greater/two_sided",
+          lambda v: _list_of(v, _enum("less", "greater", "two_sided")))(
+          ("less", "greater", "two_sided")),
+      fractions=_Tag("≥2 non-negative numbers with a positive sum",
+                     lambda v: _list_of(v, _number(0), 2)))
+def _ks_test(kind: str, name: str, p: dict, sub: Any) -> tuple:
+    # Kolmogorov-Smirnov of the bucket-count distribution against
+    # `fractions` (default uniform), p-values from the ASYMPTOTIC null
+    # distributions; `sampling_method` would change which docs n counts
+    fr = p["fractions"]
+    if fr is not None and sum(fr) <= 0:
+        raise DslError(f"bucket_count_ks_test agg {name!r}: fractions "
+                       "must be ≥2 non-negative numbers with a positive "
+                       "sum")
+    return (p["buckets_path"], (tuple(dict.fromkeys(p["alternative"])),
+                                fr))
+
+
+def _correlation(v: Any) -> tuple[float, ...]:
+    """The indicator expectations of ``{"count_correlation":
+    {"indicator": {"expectations": [...]}}}``; plain Pearson, so a
+    doc_count (which scales the statistic) is rejected."""
+    cc = _params("bucket_correlation function", v,
+                 {"count_correlation": OBJECT(_REQ)})["count_correlation"]
+    ind = _params("count_correlation", cc,
+                  {"indicator": OBJECT(_REQ)})["indicator"]
+    return _params("bucket_correlation indicator", ind, {"expectations": _Tag(
+        "a list of ≥2 numbers", lambda e: _list_of(e, _number(), 2))(_REQ)},
+        note="engine subset: plain Pearson — doc_count scaling would "
+             "silently change the statistic")["expectations"]
+
+
+@_agg("sibling", "bucket_correlation", buckets_path=_BUCKETS_PATH,
+      function=_Tag("{'count_correlation': {'indicator': {...}}}",
+                    _correlation))
+def _bucket_correlation(kind: str, name: str, p: dict, sub: Any) -> tuple:
+    # Pearson correlation of the key-ascending bucket series with the
+    # indicator expectations
+    if p["function"] is None:
+        raise DslError(f"bucket_correlation agg {name!r} needs "
+                       "{'function': {'count_correlation': "
+                       "{'indicator': {...}}}}")
+    return (p["buckets_path"], p["function"])
 
 
 def _sqs_parse(text: str, field: str | None, default_op: str) -> Node:

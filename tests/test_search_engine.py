@@ -4176,6 +4176,19 @@ def test_multi_index_typed_errors(multi_eng):
         multi_eng.search("logs_*", "#truncate#")
 
 
+def test_boolean_score_anchor_is_typed(multi_eng):
+    from cassandra_es_index_spark.search.es_dsl import DslError
+
+    # a score-ordered page takes a number as its _score anchor; a
+    # boolean used to reach Spark as `_score < true` (AnalysisException)
+    with pytest.raises(DslError, match="anchors _score"):
+        multi_eng.search("logs_*", "body:spark", default_field="body",
+                         search_after=[True, "logs_a", 1])
+    with pytest.raises(DslError, match="anchors _score"):
+        multi_eng.search("logs_a", "body:spark", default_field="body",
+                         search_after=[True, 1])
+
+
 def test_multi_index_from_offsets_fused_frame(multi_eng):
     """r15 (judge ask #3): `from` pages the MERGED order — each index
     serves from+size so the global offset is exact."""

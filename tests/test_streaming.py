@@ -214,6 +214,39 @@ def test_batch_pin_released(spark, tmp_path):
     assert sizes[-1] == sizes[0], sizes
 
 
+def _jobs(spark, group, fn):
+    """The number of Spark jobs ``fn`` launches, through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_store_schema_is_read_once(spark, tmp_path):
+    """After one warm facade batch the store keeps its schema: a read of
+    the store and the schema read of a write batch launch no job."""
+    engine = _facade_with_postings(spark, tmp_path, "em_schema")
+    store = engine.store("em_schema")
+
+    def batch(i):
+        return spark.createDataFrame([
+            (_ts(i), "update", "a", f"a take {i}", i),
+            (_ts(i), "partition_delete", "b", None, None)], MUT_SCHEMA)
+
+    engine.apply_mutations("em_schema", batch(2))
+    assert _jobs(spark, "store-read", store.read) == 0
+    assert _jobs(spark, "store-schema", lambda: store._raw().schema) == 0
+    engine.apply_mutations("em_schema", batch(3))
+    assert _rows(store) == [("a", "a take 3", 3), ("c", "c seed", 1)]
+    # a rebuild forgets the kept schema
+    store.build(spark.createDataFrame([("z", "z", 9)],
+                                      "id string, body string, userid int"))
+    assert store._schema is None and _rows(store) == [("z", "z", 9)]
+
+
 def test_foreachbatch_stream(spark, tmp_path):
     """Drive the MutationIndexer through a real Structured Streaming query
     (parquet file source, availableNow trigger)."""

@@ -97,6 +97,8 @@ def main() -> int:
     def opt(**kw):
         return st.fixed_dictionaries({}, optional=kw)
 
+    wrong = st.one_of(vals, st.sampled_from([True, "x", [1], {"a": 1}]))
+
     leaf = st.one_of(
         st.builds(lambda f, v: {"term": {f: v}}, fields, vals),
         st.builds(lambda f, v: {"terms": {f: v}}, fields,
@@ -165,6 +167,36 @@ def main() -> int:
             fields, st.sampled_from(["+05:30", "America/New_York",
                                      "bogus/Zone", "+99:00"])),
         st.builds(lambda f: {"s": {"stats": {"field": f}}}, fields),
+        # spec-checked params given wrong types
+        st.builds(lambda f, pt, extra: {"c": {"cardinality": {
+            "field": f, "precision_threshold": pt, **extra}}},
+            fields, wrong, opt(missing=wrong)),
+        st.builds(lambda f, pc, extra: {"p": {"percentiles": {
+            "field": f, "percents": pc, **extra}}},
+            fields, st.one_of(st.lists(vals, max_size=3), wrong),
+            opt(compression=wrong, tdigest=wrong)),
+        # one histogram level carrying a per-level pipeline
+        st.builds(lambda f, i, pipe: {"h": {
+            "histogram": {"field": f, "interval": i},
+            "aggs": {"m": {"avg": {"field": f}}, "p": pipe}}},
+            fields, st.sampled_from([1, 5, 10]), st.one_of(
+                st.builds(lambda lag: {"serial_diff": {
+                    "buckets_path": "m", "lag": lag}}, wrong),
+                st.builds(lambda w, sh, fn: {"moving_fn": {
+                    "buckets_path": "m", "window": w, "shift": sh,
+                    "script": f"MovingFunctions.{fn}(values)"}},
+                    wrong, wrong,
+                    st.sampled_from(["sum", "max", "unweightedAvg",
+                                     "stdDev"])))),
+        # one nested sub-agg level
+        st.builds(lambda f, g, sub: {"t": {
+            "terms": {"field": f},
+            "aggs": {"s": {"terms": {"field": g}, "aggs": sub}}}},
+            fields, fields, st.sampled_from([
+                {"m": {"avg": {"field": "n"}}},
+                {"m": {"max": {"field": "n"}},
+                 "th": {"top_hits": {"size": 1}}},
+                {"m": {"sum": {"field": "n"}}, "x": 5}])),
     )
     req = st.builds(
         lambda q, extra: {"query": q, **extra},
