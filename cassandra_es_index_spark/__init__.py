@@ -13,6 +13,8 @@ idiomatic Spark engine:
   upsert-merge, TTL sweep, truncate/drop [ref: DefaultIndexManager.java]
 - ``streaming`` — micro-batch incremental indexing (upsert per mutation,
   last-writer-wins per key, delete policy) [ref: indexers/EsIndexer.java]
+- ``pins``      — materialized frames that own their data: the index
+  states' caches, co-owned by PIT and scroll handles
 - ``operators`` — scale operators beyond the reference surface: dedup
   (exact/MinHash-LSH/SimHash/n-gram-Jaccard), similarity search (cosine
   top-k, LSH-bucketed ANN), multimodal binary columns, text analysis.

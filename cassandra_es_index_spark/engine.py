@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from cassandra_es_index_spark.catalog import TableSpec
 from cassandra_es_index_spark.docmodel import base_rows_view, build_documents
 from cassandra_es_index_spark.indexstore import ParquetIndexStore
+from cassandra_es_index_spark.pins import release_checkpoint
 from cassandra_es_index_spark.search import SearchEngine
 from cassandra_es_index_spark.streaming.indexer import (
     MutationIndexer, apply_mutation_batch, release_batch,
@@ -100,14 +101,17 @@ class CassandraEsIndexEngine:
         so search sees writes — in the reference, search hits ES, which IS
         the mutated index.
 
-        With ``changes`` (the batch returned by ``apply_mutation_batch``),
-        postings indexes are maintained INCREMENTALLY: only the batch is
-        tokenized — its documents built once, from the pinned batch, which
-        is released once the index deltas are materialized — and only its
-        doc-ids' postings rows are replaced, so
-        term search stays index-served under a steady mutation stream
-        (the reference's ES updates its inverted index per-doc the same
-        way, ref ElasticIndex.java:603-614). Without ``changes`` (e.g. a
+        With ``changes`` (the batch returned by ``apply_mutation_batch``,
+        or ``maintain``'s expired ids), postings indexes are maintained
+        INCREMENTALLY: only the batch is tokenized — its documents built
+        once, from the pinned batch, which is released once the index
+        deltas are pinned — and only its doc-ids' postings rows are
+        replaced, so term search stays index-served under a steady
+        mutation stream (the reference's ES updates its inverted index
+        per-doc the same way, ref ElasticIndex.java:603-614). Each index
+        frame is a pin that owns its data, so neither the store write
+        before this call nor the swap of the documents frame here makes
+        an index re-read the store. Without ``changes`` (e.g. a
         caller-cadenced streaming refresh), postings fall back to full
         invalidation.
 
@@ -165,36 +169,40 @@ class CassandraEsIndexEngine:
         The search view is refreshed afterwards — maintenance changes the
         store's content (TTL/retention) and its FILE SET (compaction
         rewrites, segment drops), so a pre-maintenance documents snapshot
-        would be stale or reference deleted files. A TTL-only sweep rides
-        the incremental postings path (the expired ids are known); any
-        structural change (drop/purge/compact) takes the full refresh.
-        The flush runs LAST so it checkpoints the post-maintenance state."""
+        would be stale or reference deleted files. Compaction and purge
+        leave the resolved documents as they were, so they only swap the
+        documents frame and the row source: every index stays as built,
+        and the TTL-expired ids ride the incremental delete path. A
+        retention drop removes documents wholesale and takes the full
+        refresh (indexes rebuilt on demand). The sweep's expired-id
+        checkpoint is released once the index deltas hold it. The flush
+        runs LAST so it checkpoints the post-maintenance state."""
         store = self._stores[table]
         report: dict[str, object] = {}
         expired_ids = None
         if now_epoch_s is not None:
             expired_ids = store.delete_expired(now_epoch_s)
             report["ttl_swept"] = True
-        structural = False
+        dropped: list[str] = []
         if now_ms is not None and retention_ms is not None:
-            expired = store.expired_segments(now_ms, retention_ms)
-            store.drop_segments(expired)
-            report["segments_dropped"] = expired
-            structural = structural or bool(expired)
+            dropped = store.expired_segments(now_ms, retention_ms)
+            store.drop_segments(dropped)
+            report["segments_dropped"] = dropped
         report["segments_purged"] = store.purge_empty_segments()
-        structural = structural or bool(report["segments_purged"])
+        rewritten = bool(report["segments_purged"])
         if compact_max_files is not None:
             report["segments_compacted"] = store.compact_segments(
                 compact_max_files)
-            structural = structural or bool(report["segments_compacted"])
-        ttl_deleted = (expired_ids is not None
-                       and expired_ids.limit(1).count() > 0)
+            rewritten = rewritten or bool(report["segments_compacted"])
+        ttl_deleted = expired_ids is not None and not expired_ids.isEmpty()
         if table in self.search_engine.catalog.names():
-            if structural:
+            if dropped:
                 self.refresh_search_view(table)
-            elif ttl_deleted:
-                self.refresh_search_view(
-                    table, changes={"upserts": None, "deletes": expired_ids})
+            elif ttl_deleted or rewritten:
+                self.refresh_search_view(table, changes={
+                    "upserts": None,
+                    "deletes": expired_ids if ttl_deleted else None})
+        release_checkpoint(expired_ids)
         if flush_postings_path is not None:
             flushed = self.search_engine.flush_indexes(
                 table, flush_postings_path)

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from cassandra_es_index_spark.functions.text import fingerprint, shingles, tokens
+from cassandra_es_index_spark.pins import release_checkpoint
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -782,27 +783,6 @@ def ngram_contamination(df: DataFrame, benchmark: DataFrame,
                   .alias("contaminated_ngrams")))
 
 
-def _unpersist_checkpoint(df: DataFrame | None) -> None:
-    """Deterministically free a SUPERSEDED ``localCheckpoint``'s pinned
-    blocks (r16): the checkpointed Dataset's analyzed plan is a
-    ``LogicalRDD`` holding the pinned RDD — unpersist it once every
-    consumer that could read (or recompute through) it has already
-    materialized its own checkpoint. Without this the CC loop's
-    per-round pins stay resident until a JVM GC feeds the
-    ContextCleaner (measured 5-23 s per release in the GC-latency
-    test), taxing every later query in the session. Internal-API
-    access is guarded: any failure degrades to the old GC-driven
-    release, never an error. MUST only be called on frames whose
-    blocks are provably dead — a localCheckpoint cannot be recomputed
-    after its blocks are dropped."""
-    if df is None:
-        return
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 — degrade to GC-driven release
-        pass
-
-
 def connected_components(pairs: DataFrame, a_col: str = "doc_a",
                          b_col: str = "doc_b",
                          max_iters: int = 20) -> DataFrame:
@@ -908,7 +888,7 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
         # every later consumer reads the NEW pin, and nothing can
         # recompute through the old one — free it now instead of
         # waiting for a session GC (verdict r15 item 5).
-        _unpersist_checkpoint(prev_merged)
+        release_checkpoint(prev_merged)
         prev_merged = merged
         labels = merged.select("node", "component")
         # (r15) the old per-round changed-probe (merged ⋈ labels +
@@ -943,7 +923,7 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
         # the previous frontier (round 0: the symmetrized input pin) has
         # no consumer after this round's merged + contraction both
         # materialized — free it deterministically (r16)
-        _unpersist_checkpoint(old_edges)
+        release_checkpoint(old_edges)
         if edges.isEmpty():
             # no cross-component edges left: jump the label forest to
             # its roots (depth halves per jump — label-frame-only work,
@@ -970,7 +950,7 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
                             F.coalesce("_c2", "component")
                             .alias("component"))
                     .localCheckpoint(eager=True))
-                _unpersist_checkpoint(prev_merged)  # superseded (r16)
+                release_checkpoint(prev_merged)  # superseded (r16)
                 prev_merged = jmp
                 labels = jmp.select("node", "component")
                 if jmp.where(F.col("component")

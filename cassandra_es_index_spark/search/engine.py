@@ -28,6 +28,7 @@ from cassandra_es_index_spark.docmodel import (
 from cassandra_es_index_spark.operators.similarity import (
     _sq_dist, ivf_build, ivf_read, ivf_write,
 )
+from cassandra_es_index_spark.pins import Pins
 from cassandra_es_index_spark.search import es_dsl, query_string
 from cassandra_es_index_spark.search.ast import (
     And, Boost, Boosting, ConstantScore, DecayScore, DisMax, Exists,
@@ -261,13 +262,24 @@ class _IndexEntry(NamedTuple):
 class _PinnedState:
     """A read-only PIT snapshot of one index's view — the serve paths
     only ever call ``view()``, so a frozen frame stands in for the live
-    PostingsState during a pinned search."""
+    PostingsState during a pinned search. It co-owns the pins its view
+    reads, so a batch that supersedes them in the live state does not
+    free them; ``unpersist`` gives its share back."""
 
-    def __init__(self, df: DataFrame) -> None:
-        self._df = df
+    def __init__(self, state: "PostingsState") -> None:
+        self._df = state.view()
+        self._pins = state.pins
+        self._frames = state.frames()
+        for df in self._frames:
+            self._pins.share(df)
 
     def view(self) -> DataFrame:
         return self._df
+
+    def unpersist(self) -> None:
+        for df in self._frames:
+            self._pins.free(df)
+        self._frames = ()
 
 
 class PostingsState:
@@ -278,16 +290,25 @@ class PostingsState:
 
     Log-structured, mirroring the index store's merge-on-read design:
 
-    - ``base``  — the bulk-built postings, cached; never touched by a
-      mutation batch.
+    - ``base``  — the bulk-built postings; never touched by a mutation
+      batch.
     - ``dead``  — doc ids whose base/older-delta postings are stale
       (every upserted or deleted id); small, broadcast into an anti-join.
     - ``delta`` — fresh postings rows for upserted docs; only the BATCH
       is tokenized, so each update costs O(batch), not O(corpus).
 
+    Each of the three is a pin (``cassandra_es_index_spark.pins``): a
+    materialized columnar cache whose plan reads neither the store's
+    files nor any mutation batch, so a store write cannot uncache the
+    base and ``view()`` stays three cached scans however many batches
+    came before. ``pins`` counts their owners: a superseded pin is freed
+    once no PIT or scroll handle co-owns it any more; a lazy frame that
+    still reads it recomputes it from its lineage.
+
     ``view()`` resolves the three. After ``fold_every`` batches the
-    overlay folds into a new cached base (the compaction analogue), which
-    bounds lookup-time overlay cost under a steady mutation stream.
+    overlay folds into a new checkpointed base (the compaction analogue),
+    which bounds lookup-time overlay cost and the overlay pins' lineage
+    under a steady mutation stream.
     ``key`` is the id column rows are retired on (``doc``; IVF rows
     carry ``corpus_id``)."""
 
@@ -301,7 +322,8 @@ class PostingsState:
         # flush_indexes generation instead.
         self.cache_base = cache_base
         self.key = key
-        self.base = base.cache() if cache_base else base
+        self.pins = Pins()
+        self.base = self.pins.take(base) if cache_base else base
         self.delta: DataFrame | None = None
         self.dead: DataFrame | None = None
         self.fold_every = fold_every
@@ -315,20 +337,28 @@ class PostingsState:
             v = v.unionByName(self.delta)
         return v
 
+    def frames(self) -> tuple[DataFrame, ...]:
+        """The frames ``view()`` reads (pins, and a disk-backed base)."""
+        return tuple(df for df in (self.base, self.dead, self.delta)
+                     if df is not None)
+
     def apply(self, new_postings: DataFrame | None,
               touched_ids: DataFrame | None) -> None:
         """Merge one mutation batch: retire all postings of the touched
         ids, append the batch's fresh postings. O(batch ∪ outstanding
         overlay) — the base is never read or written. ``touched_ids`` and
-        ``new_postings`` are projections of the caller's (pinned) batch,
-        so only the new ``dead`` and ``delta`` are materialized; they
-        must be before the caller releases that pin."""
+        ``new_postings`` are projections of the caller's (pinned) batch;
+        the new ``dead`` and ``delta`` are pins, so the caller may release
+        its batch as soon as this returns."""
         if touched_ids is None:
             return
-        touched = touched_ids.select(self.key).distinct()
+        # a repeated id in `touched` is harmless on the build side of the
+        # delta's anti-join; `dead` is kept distinct, so a stream of
+        # updates to the same keys does not grow it
+        touched = touched_ids.select(self.key)
         old_delta, old_dead = self.delta, self.dead
-        dead = touched if old_dead is None else (
-            old_dead.unionByName(touched).distinct())
+        dead = (touched if old_dead is None
+                else old_dead.unionByName(touched)).distinct()
         delta = None
         if old_delta is not None:
             delta = old_delta.join(F.broadcast(touched), on=self.key,
@@ -336,39 +366,30 @@ class PostingsState:
         if new_postings is not None:
             delta = new_postings if delta is None else \
                 delta.unionByName(new_postings)
-        # materialize the new overlay before releasing the old one so the
-        # new caches don't recompute through unpersisted parents
-        self.dead = dead.cache()
-        self.dead.count()
-        if delta is not None:
-            self.delta = delta.cache()
-            self.delta.count()
-        else:
-            self.delta = None
-        for old in (old_delta, old_dead):
-            if old is not None:
-                old.unpersist()
+        # pin the new overlay before freeing the old one it is read from
+        self.dead = self.pins.take(dead)
+        self.delta = self.pins.take(delta) if delta is not None else None
+        self.pins.free(old_delta)
+        self.pins.free(old_dead)
         self._pending += 1
         if self._pending >= self.fold_every and self.cache_base:
             self.fold()
 
     def fold(self) -> None:
-        """Compact the overlay into a fresh cached base."""
+        """Compact the overlay into a fresh pinned base, checkpointed so
+        its lineage does not carry every batch since the build."""
         if self.delta is None and self.dead is None:
             return
-        new_base = self.view().cache()
-        new_base.count()
-        for old in (self.base, self.delta, self.dead):
-            if old is not None:
-                old.unpersist()
+        new_base = self.pins.take(self.view(), checkpoint=True)
+        self.unpersist()
         self.base, self.delta, self.dead = new_base, None, None
-        self.cache_base = True  # the folded base is a cached DataFrame
+        self.cache_base = True  # the folded base is a pin
         self._pending = 0
 
     def unpersist(self) -> None:
-        for df in (self.base, self.delta, self.dead):
-            if df is not None:
-                df.unpersist()
+        """Give up this state's share of its pins."""
+        for df in self.frames():
+            self.pins.free(df)
 
 
 class SearchEngine:
@@ -2909,12 +2930,14 @@ class SearchEngine:
 
     def build_postings_index(self, table: str, field: str | None = None,
                              materialize: bool = False) -> DataFrame:
-        """Build (and cache) the inverted postings index for one field —
+        """Build (and pin) the inverted postings index for one field —
         the engine's analogue of the reference's ES index build. Once built,
         ``search`` serves whole-token term queries on that field from the
         postings instead of scanning the corpus. On a cluster the same
         DataFrame would be persisted bucketed by token
-        (``postings.write_postings``) so lookups are shuffle-free."""
+        (``postings.write_postings``) so lookups are shuffle-free.
+        ``materialize`` is accepted for compatibility and ignored:
+        every index is pinned, so materialized, when built."""
         self.catalog.get(table)   # typed error on unknown table
         docs = self._docs[table]
         fld = field or Compiler(docs).default_field
@@ -2927,14 +2950,15 @@ class SearchEngine:
             Compiler(docs).resolve(fld)
         except CompileError as e:
             raise es_dsl.DslError(str(e)) from e
-        return self._build_index("postings", table, fld, {}, materialize)
+        return self._build_index("postings", table, fld, {})
 
-    def _build_index(self, kind: str, table: str, field: str, params: dict,
-                     materialize: bool) -> DataFrame:
+    def _build_index(self, kind: str, table: str, field: str,
+                     params: dict) -> DataFrame:
         """The one build path behind every ``build_*_index``: register a
         PostingsState over the kind's rows (kept when already built with
         the same params; one parameter set per field, so new params
-        replace the index) and return its view."""
+        replace the index) and return its view. The state pins its rows,
+        so every index is materialized when built."""
         entry = self._indexes.get((kind, table, field))
         if entry is None or entry.params != params:
             _, spec = self.catalog.get(table)
@@ -2943,10 +2967,7 @@ class SearchEngine:
                 params)
             entry = self._set_index(kind, table, field, PostingsState(
                 rows, key=INDEX_KINDS[kind].key), params)
-        p = entry.state.view()
-        if materialize:
-            p.count()
-        return p
+        return entry.state.view()
 
     def _set_index(self, kind: str, table: str, field: str, state,
                    params: dict) -> _IndexEntry:
@@ -2959,12 +2980,14 @@ class SearchEngine:
 
     def build_phrase_index(self, table: str, field: str | None = None,
                            materialize: bool = False) -> DataFrame:
-        """Build (and cache) the positional chunk index for one string
+        """Build (and pin) the positional chunk index for one string
         field. Once built, ``search`` serves multi-word phrase queries on
         that field from chunk-position joins (bit-exact with the scan
         regex, see ``search/positional.py``) instead of re-scanning the
         corpus — the engine analogue of ES consulting term positions for
-        phrase queries against its prebuilt index."""
+        phrase queries against its prebuilt index.
+        ``materialize`` is accepted for compatibility and ignored:
+        every index is pinned, so materialized, when built."""
         from pyspark.sql import types as T
 
         self.catalog.get(table)   # typed error on unknown table
@@ -2983,22 +3006,24 @@ class SearchEngine:
             raise ValueError(
                 f"phrase index needs a string, array<string>, or "
                 f"map-of-string(-array) field, got {dtype} for {fld!r}")
-        return self._build_index("positional", table, fld, {}, materialize)
+        return self._build_index("positional", table, fld, {})
 
     def build_range_index(self, table: str, field: str,
                           materialize: bool = False) -> DataFrame:
-        """Build (and cache) the range index for one field — the narrow
+        """Build (and pin) the range index for one field — the narrow
         (doc, val) projection that serves ``Range`` leaves (score 1, the
         scan path's semantics) without a corpus scan, ES's BKD-points
         analogue. In-memory serving prunes cached batches on the value
         filter; a flushed copy is sorted by ``val`` so bound filters skip
         row groups via parquet min/max stats. Incrementally maintained
-        under mutations like the other index kinds."""
-        return self._build_index("range", table, field, {}, materialize)
+        under mutations like the other index kinds.
+        ``materialize`` is accepted for compatibility and ignored:
+        every index is pinned, so materialized, when built."""
+        return self._build_index("range", table, field, {})
 
     def build_span_index(self, table: str, field: str,
                          materialize: bool = False) -> DataFrame:
-        """Build (and cache) the token-position index for one field —
+        """Build (and pin) the token-position index for one field —
         (doc, token, pos) rows, the scan path's span-query position
         arrays materialized once at index time. Serves ``span_near``
         leaves (position filters + one distance-predicate equi-join on
@@ -3006,7 +3031,9 @@ class SearchEngine:
         postings analogue for span queries (r05 weak #2). Plain string
         fields only, matching the scan path's span support.
         Incrementally maintained under mutations like the other index
-        kinds."""
+        kinds.
+        ``materialize`` is accepted for compatibility and ignored:
+        every index is pinned, so materialized, when built."""
         from pyspark.sql import types as T
 
         self.catalog.get(table)   # typed error on unknown table
@@ -3016,12 +3043,12 @@ class SearchEngine:
                 f"span index supports plain string fields, got "
                 f"{docs.schema[field].dataType.simpleString()} "
                 f"for {field!r}")
-        return self._build_index("span", table, field, {}, materialize)
+        return self._build_index("span", table, field, {})
 
     def build_geo_index(self, table: str, field: str,
                         precision: int = 5,
                         materialize: bool = False) -> DataFrame:
-        """Build (and cache) the geo cell index for one geo_point field
+        """Build (and pin) the geo cell index for one geo_point field
         — (doc, geohash cell at ``precision``) rows. Serves
         ``geo_distance`` / ``geo_bounding_box`` as a covering-cell
         equi-join + exact haversine/box verify over candidates only
@@ -3033,12 +3060,14 @@ class SearchEngine:
         over-coverage (coarse cells) against covering-cell count (fine
         cells): ~5 (≈4.9 km cells) suits city-scale radii.
         Incrementally maintained under mutations like the other index
-        kinds."""
+        kinds.
+        ``materialize`` is accepted for compatibility and ignored:
+        every index is pinned, so materialized, when built."""
         if not 1 <= int(precision) <= 12:
             raise ValueError(f"geo index precision must be in [1, 12], "
                              f"got {precision}")
         return self._build_index("geo", table, field,
-                                 {"precision": int(precision)}, materialize)
+                                 {"precision": int(precision)})
 
     def _knn_search(self, table: str, docs: DataFrame, qmd, req, after,
                     keys: list[str], default_field: str | None
@@ -3478,12 +3507,14 @@ class SearchEngine:
 
     def build_presence_index(self, table: str, field: str,
                              materialize: bool = False) -> DataFrame:
-        """Build (and cache) the field-presence index — the doc-id set
+        """Build (and pin) the field-presence index — the doc-id set
         where ``field`` is non-null. Once built, ``_exists_:field`` leaves
         are served from it (score 1 per doc, the scan path's semantics)
         instead of scanning the corpus; maintained incrementally under
-        mutations like the other index kinds."""
-        return self._build_index("presence", table, field, {}, materialize)
+        mutations like the other index kinds.
+        ``materialize`` is accepted for compatibility and ignored:
+        every index is pinned, so materialized, when built."""
+        return self._build_index("presence", table, field, {})
 
     def _postings_hits(self, table: str, node: Node,
                        default_field: str | None) -> DataFrame | None:
@@ -4597,8 +4628,10 @@ class SearchEngine:
         snapshot-reader contract (the engine's durable indexes are
         generational — ``indexstore._current_gen`` — so pinned lineage
         stays readable; compaction writes new generations, it never
-        rewrites old files in place). Driver-side bookkeeping only —
-        nothing is materialized at open time."""
+        rewrites old files in place). Nothing is materialized at open
+        time: the handle co-owns the pins its index views read, so a
+        later batch that supersedes them in the live index frees them
+        only at ``close_pit``."""
         self.catalog.get(table)   # typed error on unknown table
         self._pit_seq += 1
         pid = f"pit_{self._pit_seq}"
@@ -4609,15 +4642,20 @@ class SearchEngine:
             "n_docs": self._n_docs.get(table),
             # every kind pins its view — IVF too, so a knn query through
             # the handle cannot see post-open vectors (ADVICE r7)
-            "indexes": {k: _IndexEntry(_PinnedState(e.state.view()),
-                                       e.params)
+            "indexes": {k: _IndexEntry(_PinnedState(e.state), e.params)
                         for k, e in self._indexes.items() if k[1] == table},
         }
         return pid
 
     def close_pit(self, pit_id: str) -> bool:
-        """Release a PIT handle (ES DELETE _pit). True when it existed."""
-        return self._pits.pop(pit_id, None) is not None
+        """Release a PIT handle (ES DELETE _pit) and its share of the
+        index pins it read. True when it existed."""
+        snap = self._pits.pop(pit_id, None)
+        if snap is None:
+            return False
+        for entry in snap["indexes"].values():
+            entry.state.unpersist()
+        return True
 
     def search_pit(self, pit_id: str, query: str,
                    default_field: str | None = None,
@@ -4639,8 +4677,9 @@ class SearchEngine:
         from multiple threads. Scroll handles hold ``{pit, cursor}``
         driver dicts plus (r16) the captured compiled-plan closure —
         lazy plans over the PIT-pinned frames, no additional executor
-        memory — until ``clear_scroll``; abandoners leak a
-        size-bounded driver entry, not executor state."""
+        memory — until ``clear_scroll``. An abandoned handle keeps its
+        driver entry and the index pins it co-owns (those a later batch
+        superseded stay cached) until it is closed."""
         snap = self._pits.get(pit_id)
         if snap is None:
             raise es_dsl.DslError(f"unknown pit {pit_id!r}")

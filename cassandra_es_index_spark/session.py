@@ -13,6 +13,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """The driver heap: 16g, or half of physical memory on a smaller
+    host, so one session's heap cannot grow to fill the host and starve
+    a second session or the tests beside it (``SPARK_GRAFT_DRIVER_MEM``
+    overrides it)."""
+    try:
+        phys_mb = (os.sysconf("SC_PAGE_SIZE")
+                   * os.sysconf("SC_PHYS_PAGES")) // 2**20
+    except (ValueError, OSError, AttributeError):
+        return "16g"
+    return f"{max(min(16 * 1024, phys_mb // 2), 512)}m"
+
+
 def get_spark(app_name: str = "cassandra-es-index-spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
@@ -65,7 +78,8 @@ def get_spark(app_name: str = "cassandra-es-index-spark",
         # were exactly this: 32 tasks scanning a 4 MB cached index).
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
                 "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory()))
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()

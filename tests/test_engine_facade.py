@@ -9,6 +9,7 @@ from cassandra_es_index_spark.catalog import TableSpec
 from cassandra_es_index_spark.docmodel import DOC_ID
 from cassandra_es_index_spark.engine import CassandraEsIndexEngine
 from cassandra_es_index_spark.search import SearchEngine
+from tests.test_streaming import _jobs
 
 
 def _ts(minute):
@@ -516,3 +517,167 @@ def test_all_index_kinds_follow_streaming_mutations(engine, spark, tmp_path):
     # incremental: every base survived the stream
     for k, (kind, f) in kinds.items():
         assert se.index_entry(kind, "em_stream", f).state.base is bases[k]
+
+
+MUT = "ts timestamp, op string, id string, body string, expire_at long"
+
+
+def _store_backed(engine, spark, table, rows, **spec_kw):
+    """A facade table whose search documents are the store's resolved
+    state (as after any refresh) with a body postings index."""
+    engine.register(spark.createDataFrame(
+        rows, "id string, body string, expire_at long"),
+        TableSpec(table, ["id"], **spec_kw), build=True)
+    engine.refresh_search_view(table)
+    engine.search_engine.build_postings_index(table, "body",
+                                              materialize=True)
+    return engine.search_engine
+
+
+def test_postings_view_lineage_stays_flat(engine, spark):
+    """On a store-backed table the postings view reads only its pins: no
+    scan of the store, a plan that does not grow with the number of
+    batches, and no recompute after a batch (a store write used to
+    uncache the base, and the dead-id side replayed every batch)."""
+    table = "em_lin"
+    se = _store_backed(engine, spark, table, [
+        (f"k{i}", f"seed word{i % 4}", 10_000) for i in range(40)])
+    state = se.index_entry("postings", table, "body").state
+
+    def batch(i):
+        return spark.createDataFrame([
+            (_ts(i + 1), "update", f"k{i}", f"take{i} word", 10_000),
+            (_ts(i + 1), "insert", f"n{i}", f"new{i} word", 10_000),
+            (_ts(i + 1), "partition_delete", f"k{20 + i}", None, None),
+        ], MUT)
+
+    def count():
+        state.view().count()
+
+    nodes = {}
+    for i in range(5):
+        if i == 4:
+            before = _jobs(spark, "lineage-before", count)
+        engine.apply_mutations(table, batch(i))
+        if i == 4:
+            after = _jobs(spark, "lineage-after", count)
+        if i + 1 in (2, 5):
+            plan = _plan(state.view())
+            assert "FileScan" not in plan, plan
+            nodes[i + 1] = len(plan.splitlines())
+    assert nodes[5] <= nodes[2], nodes
+    assert after == before
+    hits = engine.search(table, "#options:load-rows=false#body:word")
+    assert "regexp_extract_all" not in _plan(hits)
+    assert {r["id"] for r in hits.collect()} == (
+        {f"k{i}" for i in range(5)} | {f"n{i}" for i in range(5)})
+
+
+def test_lazy_search_outlives_its_pins(engine, spark):
+    """A lazy search result reads the index as it was when it was built:
+    run after later batches (which free the pins it reads) or after the
+    cache is cleared, it recomputes them instead of failing. A stream of
+    updates to one key keeps one id in ``dead``."""
+    table = "em_lazy"
+    se = _store_backed(engine, spark, table, [
+        (f"k{i}", f"seed word{i % 3}", 10_000) for i in range(20)])
+    state = se.index_entry("postings", table, "body").state
+    q = "#options:load-rows=false#body:seed"
+
+    def batch(i):
+        return spark.createDataFrame([
+            (_ts(i + 1), "update", "k0", f"take{i}", 10_000),
+            (_ts(i + 1), "partition_delete", f"k{1 + i}", None, None),
+        ], MUT)
+
+    engine.apply_mutations(table, batch(0))
+    lazy = engine.search(table, q)
+    want = {f"k{i}" for i in range(2, 20)}
+    assert {r["id"] for r in engine.search(table, q).collect()} == want
+    engine.apply_mutations(table, batch(1))
+    engine.apply_mutations(table, batch(2))
+    assert state.dead.count() == 4        # k0 once, k1, k2, k3
+    assert {r["id"] for r in lazy.collect()} == want
+    spark.catalog.clearCache()
+    assert {r["id"] for r in lazy.collect()} == want
+    now = engine.search(table, q)
+    assert "regexp_extract_all" not in _plan(now)
+    assert {r["id"] for r in now.collect()} == {
+        f"k{i}" for i in range(4, 20)}
+
+
+def test_maintain_keeps_indexes_across_compaction(engine, spark):
+    """Compaction and purge leave the resolved documents as they were, so
+    maintain keeps every index of the table — postings and phrase — and
+    sends only the TTL-expired ids through the incremental delete path:
+    the same states still serve, with the scan route's answers."""
+    table = "em_keep"
+    se = _store_backed(engine, spark, table, [
+        (f"k{i}", f"common word{i % 3} quick brown", 10_000)
+        for i in range(12)] + [
+        ("x1", "quick brown expiring", 100),
+        ("x2", "doomed common", 150)], ttl_column="expire_at")
+    se.build_phrase_index(table, "body", materialize=True)
+    states = {kind: se.index_entry(kind, table, "body").state
+              for kind in ("postings", "positional")}
+    engine.apply_mutations(table, spark.createDataFrame([
+        (_ts(1), "update", "k1", "quick brown fresh", 10_000),
+        (_ts(2), "insert", "n1", "common quick brown", 120),
+        (_ts(3), "partition_delete", "k2", None, None)], MUT))
+
+    report = engine.maintain(table, now_epoch_s=200, compact_max_files=0)
+    assert report["segments_compacted"]
+    for kind, state in states.items():
+        assert se.index_entry(kind, table, "body").state is state, kind
+
+    scan = SearchEngine(spark)
+    scan.register(engine.store(table).read().drop("segment")
+                  .select("id", "body", "expire_at"),
+                  TableSpec("em_keep_scan", ["id"]))
+    for q in ("body:common", "body:quick", 'body:"quick brown"',
+              "body:expiring", "body:fresh"):
+        q = "#options:load-rows=false#" + q
+        out = engine.search(table, q)
+        assert "regexp_extract_all" not in _plan(out), q
+        want = sorted((r["id"], r["_score"])
+                      for r in scan.search("em_keep_scan", q).collect())
+        assert sorted((r["id"], r["_score"])
+                      for r in out.collect()) == want, q
+    live = {r["id"] for r in engine.search(
+        table, "#options:load-rows=false#body:quick").collect()}
+    assert live == {f"k{i}" for i in range(12) if i != 2}   # expired gone
+    # rows load from the compacted store
+    rows = engine.search(table, "body:fresh").collect()
+    assert [(r["id"], r["body"]) for r in rows] == [("k1", "quick brown fresh")]
+
+
+def _own_persisted(spark, first: int) -> int:
+    """The persistent RDDs made since RDD id ``first``. Ids grow
+    monotonically, and an earlier test's RDDs may be collected at any
+    time, so a test counts only its own."""
+    ids = spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+    return sum(1 for i in ids if i > first)
+
+
+def test_ttl_sweep_checkpoint_released(engine, spark):
+    """maintain frees the TTL sweep's expired-id checkpoint once the
+    index deltas hold the ids: four batch + TTL passes leave as many
+    persistent RDDs as one."""
+    first = spark.sparkContext.emptyRDD().id()
+    table = "em_ttl"
+    engine.register(spark.createDataFrame(
+        [(f"k{i}", f"seed {i}", 10_000) for i in range(6)],
+        "id string, body string, expire_at long"),
+        TableSpec(table, ["id"], ttl_column="expire_at"), build=True)
+    engine.search_engine.build_postings_index(table, "body",
+                                              materialize=True)
+    sizes = []
+    for i in range(4):
+        engine.apply_mutations(table, spark.createDataFrame(
+            [(_ts(i + 1), "insert", f"t{i}", f"short lived {i}", 100 + i)],
+            MUT))
+        engine.maintain(table, now_epoch_s=200 + i)
+        sizes.append(_own_persisted(spark, first))
+    assert sizes[-1] == sizes[0], sizes
+    assert engine.search(
+        table, "#options:load-rows=false#body:lived").count() == 0

@@ -244,3 +244,53 @@ def test_sliced_scroll_typed_errors(spark):
         TableSpec("scroll_strkey", ["k"]))
     with pytest.raises(DslError, match="integer key"):
         eng.open_scroll("scroll_strkey", q, slice_id=0, slice_max=2)
+
+
+def test_pit_isolated_from_store_backed_batch(spark, tmp_path):
+    """A PIT on a store-backed facade table co-owns the index pins its
+    views read: a batch after open stays invisible through the handle
+    (with and without row loading), the superseded overlay stays cached
+    while the handle is open, and close_pit frees it."""
+    import datetime
+
+    from cassandra_es_index_spark.engine import CassandraEsIndexEngine
+    from tests.test_engine_facade import _own_persisted
+
+    first = spark.sparkContext.emptyRDD().id()
+    table = "pit_store"
+    eng = CassandraEsIndexEngine(spark, str(tmp_path / "idx"))
+    eng.register(spark.createDataFrame(
+        [(f"k{i}", f"spark doc {i}", i) for i in range(30)],
+        "id string, body string, n int"), TableSpec(table, ["id"]),
+        build=True)
+    eng.refresh_search_view(table)
+    se = eng.search_engine
+    se.build_postings_index(table, "body", materialize=True)
+
+    def batch(minute, tag):
+        ts = datetime.datetime(2024, 1, 1, 0, minute)
+        return spark.createDataFrame([
+            (ts, "update", f"k{minute}", f"{tag} doc", 1),
+            (ts, "insert", f"{tag}_new", f"{tag} fresh", 2),
+            (ts, "partition_delete", f"k{10 + minute}", None, None)],
+            "ts timestamp, op string, id string, body string, n int")
+
+    def persisted():
+        return _own_persisted(spark, first)
+
+    eng.apply_mutations(table, batch(1, "alpha"))
+    state = se.index_entry("postings", table, "body").state
+    held = (state.dead, state.delta)
+    before = persisted()
+    pid = se.open_pit(table)
+    eng.apply_mutations(table, batch(2, "zulu"))
+    for mode in ("#options:load-rows=false#", ""):
+        assert se.search_pit(pid, mode + "body:zulu").count() == 0, mode
+        assert {r["id"] for r in se.search_pit(
+            pid, mode + "body:alpha").collect()} == {"k1", "alpha_new"}
+        assert {r["id"] for r in eng.search(
+            table, mode + "body:zulu").collect()} == {"k2", "zulu_new"}
+    assert all(df.storageLevel.useMemory for df in held)
+    assert se.close_pit(pid)
+    assert not any(df.storageLevel.useMemory for df in held)
+    assert persisted() == before
